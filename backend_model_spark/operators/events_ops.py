@@ -1887,8 +1887,9 @@ def changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank×mean) so both engines produce bit-identical doubles.
 
     Scale: corpus-width work is ONE map-side daily rollup
-    (persisted); the running sum comes from the two-stage global-rank
-    prefix-sum primitive (per-partition cumsum + broadcast partition
+    (persisted); the running sum comes from the global-rank
+    prefix-sum primitive on its single-partition path (the day series
+    is bounded by the calendar, so no pin and no driver-collected
     offsets — never an unpartitioned window), the mean rides in as a
     broadcast scalar, and top-5 is a TakeOrderedAndProject.
     """
@@ -1904,6 +1905,7 @@ def changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("day").asc()],
         "t",
         prefix_sum=("n", "cum_n"),
+        parts=1,
     )
     cusum = F.col("cum_n") - F.col("t") * F.col("mean_n")
     return (

@@ -377,9 +377,10 @@ def order_backlog_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shuffle to per-order ship completion, one to the delta
     stream's ordering; the running sum over DATE-level deltas is the
-    two-stage prefix sum (:func:`with_global_rank` — range repartition,
-    per-partition running sum, broadcast carry-in offsets), never a
-    single-partition window. Oracle unchanged.
+    global-rank prefix sum (:func:`with_global_rank`) on its
+    single-partition path — the delta stream has one row per calendar
+    day, so it is bounded by construction — with partition-keyed
+    windows, never an unpartitioned WindowExec. Oracle unchanged.
     """
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderdate"
@@ -401,6 +402,7 @@ def order_backlog_series(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("day").asc()],
         "__rk",
         prefix_sum=("net", "backlog"),
+        parts=1,
     ).drop("__rk")
     wm = W.partitionBy(F.date_format("day", "yyyy-MM")).orderBy(
         F.col("day").desc()

@@ -128,12 +128,16 @@ def with_global_rank(
         # don't compute things you throw away). Callers opt in where
         # the lineage costs more than one extra block write.
         df = _pin(df)
-    # ``parts`` is a caller hint for frames BOUNDED by construction
-    # (post-``limit(k)`` candidate lists, ≤k-row rollups): with
-    # parts=1 the RangePartitioner skips its sampling job (bounds are
-    # empty), the single partition makes every offset trivially zero
-    # (no counts job at all unless a total is requested), and the
-    # window is still partition-keyed — semantics identical, ~4 fewer
+    # ``parts`` is a caller hint for frames BOUNDED by construction:
+    # the row count has a ceiling fixed by the query, not by the
+    # data — calendar days or months, dimension keys (regions,
+    # nations), deciles, post-``limit(k)`` candidate lists. Data-width
+    # keys (customers, tokens, cents values) do not qualify, however
+    # small the test data. With parts=1 the RangePartitioner skips
+    # its sampling job (bounds are empty), the single partition makes
+    # every offset trivially zero, so there is no pin and no driver
+    # ``collect`` of offsets — the call runs no Spark job — and the
+    # window is still partition-keyed: semantics identical, ~4 fewer
     # stages per call. NEVER pass it for data-width frames.
     if parts == 1:
         ranged = df.repartitionByRange(1, *order).withColumn(

@@ -388,11 +388,12 @@ def revenue_growth_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-rounded at the edge.
 
     Scale: lag(1)/lag(12) over the month series would plan a global
-    WindowExec; instead the series gets an exact two-stage global rank
-    (:func:`with_global_rank`) and each offset becomes a broadcast
-    self-join on rank−k over the pinned month table — identical
-    LAG semantics (previous existing row, not previous calendar
-    month, so gap months behave the same as the oracle's LAG).
+    WindowExec; instead the series gets an exact global rank
+    (:func:`with_global_rank`, single-partition path: the month
+    series is bounded by the calendar) and each offset becomes a
+    broadcast self-join on rank−k — identical LAG semantics (previous
+    existing row, not previous calendar month, so gap months behave
+    the same as the oracle's LAG).
     """
     orders = load_table(spark, "orders", sf_dir)
     monthly = (
@@ -406,7 +407,7 @@ def revenue_growth_series(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
         )
     )
-    ranked = with_global_rank(monthly, [F.col("month").asc()], "__rk")
+    ranked = with_global_rank(monthly, [F.col("month").asc()], "__rk", parts=1)
     prev_m = ranked.select(
         (F.col("__rk") + 1).alias("__rk"), F.col("cents").alias("prev_m")
     )
@@ -615,12 +616,14 @@ def max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     finance/ops dashboard derives from an equity curve. Entirely in
     integer cents, so both engines are bit-exact at every step.
 
-    Scale: corpus-width work is ONE map-side daily rollup of orders;
-    the running sum AND the running peak both come from the two-stage
-    global primitive (``with_global_rank``'s prefix_sum, then its new
-    prefix_max over the cumulated frame) — per-partition window +
-    broadcast partition offsets, never an unpartitioned WindowExec.
-    Top-3 is a TakeOrderedAndProject.
+    Scale: corpus-width work is ONE map-side daily rollup of orders.
+    The rollup is bounded by the calendar (one row per order day, a
+    few thousand at any scale factor), so the running sum and the
+    running peak take :func:`with_global_rank`'s single-partition path
+    (``parts=1``): a one-partition range exchange and partition-keyed
+    windows, with no pin and no driver-collected offsets — building
+    the DataFrame runs no Spark job, and the plan still holds no
+    unpartitioned WindowExec. Top-3 is a TakeOrderedAndProject.
     """
     orders = load_table(spark, "orders", sf_dir)
     daily = orders.groupBy(F.date_trunc("day", "o_orderdate").alias("day")).agg(
@@ -629,10 +632,18 @@ def max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     cum = with_global_rank(
-        daily, [F.col("day").asc()], "t", prefix_sum=("rev_cents", "cum_cents")
+        daily,
+        [F.col("day").asc()],
+        "t",
+        prefix_sum=("rev_cents", "cum_cents"),
+        parts=1,
     )
     peaked = with_global_rank(
-        cum, [F.col("day").asc()], "t2", prefix_max=("cum_cents", "peak_cents")
+        cum,
+        [F.col("day").asc()],
+        "t2",
+        prefix_max=("cum_cents", "peak_cents"),
+        parts=1,
     ).drop("t2")
     return (
         peaked.select(

@@ -12,6 +12,7 @@ when nothing else set it.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -50,12 +51,15 @@ DEFAULT_DRIVER_MEMORY = os.environ.get("SPARK_DRIVER_MEMORY", "32g")
 # slightly GC-tight: window_rfm 2.5 s vs 1.7 s at 32g), a committed
 # 90g heap costs ~90 GB of serialized first-touch faults on this
 # kernel, and anything evicted spills to the (tmpfs) local dir.
+# A JVM crash report (hs_err_pid*.log) goes to the temp dir, never
+# into the working directory (which is often the checkout).
 # Env-overridable for other geometries.
 _DRIVER_JAVA_OPTS = os.environ.get(
     "SPARK_GRAFT_DRIVER_JAVA_OPTS",
     f"-Xms{DEFAULT_DRIVER_MEMORY}"
     " -XX:InitialCodeCacheSize=512m -XX:ReservedCodeCacheSize=512m"
-    " -XX:CICompilerCount=4",
+    " -XX:CICompilerCount=4"
+    f" -XX:ErrorFile={os.path.join(tempfile.gettempdir(), 'hs_err_pid%p.log')}",
 )
 
 # Floor for "is this tmpfs big enough to hold shuffle scratch": local

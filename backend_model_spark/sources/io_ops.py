@@ -22,7 +22,12 @@ Spark-first re-expression:
 
 Every query writes only under ``.scratch/`` at the repo root
 (gitignored) and re-reads what it wrote, so the oracle comparison
-verifies the *sink + scan*, not just the transform.
+verifies the *sink + scan*, not just the transform. A re-read passes
+the schema of the frame it just wrote (``spark.read.schema(...)``):
+the file's schema is known, so the scan skips the footer-inference
+job that a bare ``spark.read.parquet(path)`` runs while the query is
+being built. Partition columns keep the type inference would give
+them (``year()`` is an int either way).
 
 Scale notes: a CSV round-trip at 100 TB is executor-parallel on both
 sides (one task per ~128 MB split; CSV is splittable when
@@ -99,7 +104,7 @@ def append_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch2 = nation.filter(F.col("n_nationkey") % 2 == 1)
     batch1.write.mode("overwrite").parquet(path)
     batch2.write.mode("append").parquet(path)
-    back = spark.read.parquet(path)
+    back = spark.read.schema(nation.schema).parquet(path)
     return (
         back.groupBy("n_regionkey")
         .agg(
@@ -125,8 +130,8 @@ def ddl_create_insert_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 + S4: `CREATE TABLE IF NOT EXISTS` with a typed schema and a
     SERIAL-style index, `INSERT OVERWRITE ... SELECT`, then a
     full-table scan via `spark.sql` — the reference's db_queries.py
-    lifecycle on the Spark catalog. The SERIAL is the two-stage global
-    rank (:func:`with_global_rank`) exposed as a temp view, not
+    lifecycle on the Spark catalog. The SERIAL is the global rank
+    (:func:`with_global_rank`) exposed as a temp view, not
     `ROW_NUMBER() OVER (ORDER BY ...)` SQL, which would plan an
     unpartitioned WindowExec — the one place a SERIAL emulation
     diverges from naive SQL at scale."""
@@ -150,9 +155,10 @@ def ddl_create_insert_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r_name")
         .agg(F.count("n_nationkey").alias("n_nations"))
     )
-    ranked = with_global_rank(summary, [F.col("r_name").asc()], "idx").select(
-        "idx", "r_name", "n_nations"
-    )
+    # one row per region: bounded by construction, single-partition rank
+    ranked = with_global_rank(
+        summary, [F.col("r_name").asc()], "idx", parts=1
+    ).select("idx", "r_name", "n_nations")
     ranked.createOrReplaceTempView("_io_region_summary_src")
     spark.sql(
         """
@@ -196,7 +202,7 @@ def etl_orchestration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     enriched.write.mode("overwrite").partitionBy("order_year").parquet(path)
-    back = spark.read.parquet(path)
+    back = spark.read.schema(enriched.schema).parquet(path)
     return (
         back.groupBy("order_year", "value_band")
         .agg(
@@ -448,7 +454,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp")
     )
     li.write.mode("overwrite").orc(path)
-    back = spark.read.orc(path)
+    back = spark.read.schema(li.schema).orc(path)
     cents = F.floor(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100 + F.lit(0.5)
     ).cast("long")
@@ -1024,7 +1030,7 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     frag_path = _scratch("compaction", "orders_fragmented")
     orders.repartition(_FRAG_FILES).write.mode("overwrite").parquet(frag_path)
-    frag = spark.read.parquet(frag_path)
+    frag = spark.read.schema(orders.schema).parquet(frag_path)
     n_rows = frag.count()
     target = max(1, math.ceil(n_rows / _COMPACT_ROWS_PER_FILE))
     comp_path = _scratch("compaction", "orders_compacted")
@@ -1187,7 +1193,8 @@ def dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return (
-        spark.read.parquet(path)
+        spark.read.schema(orders.schema)
+        .parquet(path)
         .groupBy("order_year")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
@@ -1367,7 +1374,7 @@ def wap_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     batch.write.mode("overwrite").parquet(staging)
 
-    staged = spark.read.parquet(staging)
+    staged = spark.read.schema(batch.schema).parquet(staging)
     audits = staged.agg(
         F.count(F.lit(1)).alias("n"),
         (F.count(F.lit(1)) - F.countDistinct("o_orderkey")).alias("pk_dups"),
@@ -1383,7 +1390,9 @@ def wap_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     if all_green:
         os.rename(staging, published)  # atomic publish
     n_live = (
-        spark.read.parquet(published).count() if all_green else 0
+        spark.read.schema(batch.schema).parquet(published).count()
+        if all_green
+        else 0
     )
 
     rows = [

@@ -236,7 +236,7 @@ def main() -> None:
     # canaries 410-594 ms vs ~400 idle — and three regressions turned
     # out to be measurement artifacts. Measurement hygiene, not
     # harness semantics: any query whose pre-pair canary exceeded
-    # 1.25x the run median gets ONE more cold pair after the sweep,
+    # 1.25x the run median gets ONE more cold run after the sweep,
     # gated on the canary having recovered, and min() folds it into
     # the same per-query minimum. Additions-only: no entry removed or
     # renamed, raw extra runs recorded under "reruns".

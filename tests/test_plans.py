@@ -679,13 +679,49 @@ def test_mips_topk_broadcast_and_group_limit(spark, sf_dir):
 
 def test_max_drawdown_two_stage_primitives(spark, sf_dir):
     """Max drawdown must derive its running sum AND running peak from
-    the two-stage global primitive — no unpartitioned WindowExec —
+    the global rank primitive — no unpartitioned WindowExec —
     over ONE scan of orders, with top-3 as TakeOrderedAndProject."""
     df = _QUERIES["window_max_drawdown"](spark, sf_dir)
     logical = df._jdf.queryExecution().optimizedPlan().toString()
     assert not _global_window_nodes(logical)
     plan = plan_of(spark, "window_max_drawdown", sf_dir)
     assert "TakeOrderedAndProject" in plan, "top-3 must not be a global sort"
+
+
+# Spark jobs each entry may run while its DataFrame is being built:
+# the bounded rollups rank on with_global_rank's single-partition path
+# (no pin, no driver collect of offsets), and the sinks re-read their
+# files with the schema they just wrote (no footer-inference job), so
+# only the writes the entry itself performs remain.
+_BUILD_JOBS = {
+    "window_max_drawdown": 0,
+    "window_revenue_growth": 0,
+    "events_changepoint": 0,
+    "join_order_backlog": 0,
+    "io_append_sink": 2,  # overwrite batch 1, append batch 2
+    "io_dynamic_partition_overwrite": 2,  # seed write, restatement
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BUILD_JOBS))
+def test_build_runs_only_its_own_jobs(spark, sf_dir, name):
+    """Building the DataFrame must run exactly the entry's own jobs."""
+    sc = spark.sparkContext
+    # first build warms the input-table schema memo (a cold memo runs
+    # one inference job per table, which is not the entry's work)
+    _QUERIES[name](spark, sf_dir)
+    group = f"build-jobs:{name}"
+    sc.setJobGroup(group, group)
+    try:
+        _QUERIES[name](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == _BUILD_JOBS[name], (
+        f"{name} ran {len(jobs)} jobs at build, expected {_BUILD_JOBS[name]}"
+    )
 
 
 def test_path_trigrams_take_ordered(spark, sf_dir):

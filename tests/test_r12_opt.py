@@ -9,7 +9,9 @@ Covers the two correctness-adjacent items from the round-11 judge:
   correctness (range-exchange bounds are re-sampled per action), so
   the ranks must form an exact 1..n permutation on a frame large
   enough to trigger real range sampling — under both pin strategies
-  (``localcheckpoint`` default and the cluster-safe ``persist``).
+  (``localcheckpoint`` default and the cluster-safe ``persist``) —
+  and the single-partition path (``parts=1``) must return the same
+  rows as the two-stage path, running prefix max included.
 """
 
 from __future__ import annotations
@@ -42,11 +44,9 @@ def test_dataset_key_observes_every_child(tmp_path):
     assert k2 != k1
 
 
-@pytest.mark.parametrize("pin_mode", ["localcheckpoint", "persist"])
-def test_global_rank_is_exact_permutation(spark, pin_mode, monkeypatch):
+def _ranked_rows(spark, **kw):
     from backend_model_spark.operators.scale_utils import with_global_rank
 
-    monkeypatch.setenv("SPARK_GRAFT_RANK_PIN", pin_mode)
     n = 150_000
     # non-trivial distribution + ties on the first key so the
     # composite ordering and the range sampler both do real work
@@ -54,6 +54,7 @@ def test_global_rank_is_exact_permutation(spark, pin_mode, monkeypatch):
         spark.range(n)
         .withColumn("k", (F.col("id") * 2654435761) % 1000)
         .withColumn("v", F.lit(1).cast("long"))
+        .withColumn("m", (F.col("id") * 40503) % 100_003)
         .repartition(16)
     )
     out = with_global_rank(
@@ -61,8 +62,20 @@ def test_global_rank_is_exact_permutation(spark, pin_mode, monkeypatch):
         [F.col("k").asc(), F.col("id").asc()],
         "rk",
         prefix_sum=("v", "cum"),
+        prefix_max=("m", "peak"),
+        **kw,
     )
-    got = out.select("rk", "cum", "k", "id").collect()
+    return n, out.select("rk", "cum", "peak", "k", "id", "m").collect()
+
+
+@pytest.mark.parametrize(
+    "pin_mode,parts",
+    [("localcheckpoint", None), ("persist", None), ("localcheckpoint", 1)],
+    ids=["localcheckpoint", "persist", "parts1"],
+)
+def test_global_rank_is_exact_permutation(spark, pin_mode, parts, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_RANK_PIN", pin_mode)
+    n, got = _ranked_rows(spark, parts=parts)
     assert len(got) == n
     ranks = sorted(r["rk"] for r in got)
     assert ranks == list(range(1, n + 1)), "ranks must be a 1..n permutation"
@@ -72,3 +85,12 @@ def test_global_rank_is_exact_permutation(spark, pin_mode, monkeypatch):
     by_rank = sorted(got, key=lambda r: r["rk"])
     keys = [(r["k"], r["id"]) for r in by_rank]
     assert keys == sorted(keys)
+    # the running max must be the max of every value up to the rank
+    peak = None
+    for r in by_rank:
+        peak = r["m"] if peak is None else max(peak, r["m"])
+        assert r["peak"] == peak
+    if parts == 1:
+        # row-for-row equal to the default two-stage path
+        _, two_stage = _ranked_rows(spark)
+        assert sorted(got) == sorted(two_stage)
