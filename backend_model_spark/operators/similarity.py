@@ -2019,16 +2019,22 @@ def _semdedup_parts(spark: SparkSession, sf_dir: str):
         # registered the blocks built at memo time are live, so the
         # hit path costs ZERO actions (r11 re-ran eager_persist on
         # both frames on every hit: two redundant count() jobs).
-        # After a clearCache, ONE count of `assigned` rebuilds both
-        # caches: its lineage scans every partition of `grouped`
-        # through the re-registered InMemoryRelation.
+        # Count each frame that is not live. After a clearCache, ONE
+        # count of `assigned` rebuilds both caches: its lineage scans
+        # every partition of `grouped` through the re-registered
+        # InMemoryRelation. When only `grouped` died, counting
+        # `assigned` would read assigned's own blocks and leave
+        # `grouped` unbuilt, so `grouped` is counted itself.
         def _live(df):
             sl = df.storageLevel
             return sl.useMemory or sl.useDisk
-        if not (_live(grouped) and _live(assigned)):
+        if not _live(assigned):
             ensure_persisted(grouped)
             ensure_persisted(assigned)
             assigned.count()
+        elif not _live(grouped):
+            ensure_persisted(grouped)
+            grouped.count()
         return grouped.select("vec_id", "rep_id", "nz"), assigned
     emb = _as_double(load_table(spark, "embeddings", sf_dir))
     pos = emb.select("label", F.posexplode("v").alias("pos", "x"))

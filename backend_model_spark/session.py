@@ -150,6 +150,24 @@ def get_spark(
         # micros files, so the current data is unaffected either way.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Measured lever: the generated-class cache defaults to 100
+        # entries, and Guava enforces that bound per segment, so
+        # eviction starts below 100. A session answering a rotating
+        # mix of queries thrashes it: the five perfbench `lineage`
+        # entries compile ~125 classes and, at the default, recompiled
+        # 92-108 of them with Janino on every warm pass (6-10 ms
+        # each); `corpus` recompiled 22 of its 86. At 4096 both run
+        # 0 compiles per warm pass (4 cores, sf0.01; lineage wall_s
+        # 2.72→2.12 s, 10 of 10 A/B pairs). Generated code for a
+        # plan is deterministic, so this only decides whether an
+        # already compiled class is kept; plans and results are
+        # unchanged. Cost: ~2.6 KB of bytecode per class; one run of
+        # all 315 registry entries at sf0.001 compiled 4,371 classes
+        # and grew Metaspace 133→302 MB, so 4096 bounds it near that.
+        # The setting is STATIC: it takes effect only in a JVM whose
+        # first session comes from this builder; a session an
+        # external driver built keeps Spark's default of 100.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", DEFAULT_DRIVER_MEMORY)
         .config("spark.driver.extraJavaOptions", _DRIVER_JAVA_OPTS)

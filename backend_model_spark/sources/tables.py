@@ -152,6 +152,12 @@ def _dataset_key(path: str) -> tuple | None:
             # schema could be served. Hash the FULL first-level
             # listing (name, mtime_ns, size per child) instead —
             # constant-size key, every child's state observed.
+            # Residual gap: only the first level is stat'ed. In a
+            # nested partition layout (k=v subdirectories) an
+            # in-place rewrite inside a subdirectory changes neither
+            # that subdirectory's mtime nor its size, so a stale
+            # schema can still be served; rewrite such a dataset
+            # under a new path or call _SCHEMA_CACHE.clear().
             import hashlib
 
             h = hashlib.sha256()

@@ -4,6 +4,14 @@ import os
 import sys
 
 import pytest
+from hypothesis import settings
+
+# Property tests draw the same examples on every run and on every host:
+# examples come from a fixed seed derived from each test, and no example
+# database carries failures from one run into the next. Per-test
+# ``@settings(...)`` still set the example counts and deadlines.
+settings.register_profile("reproducible", derandomize=True, database=None)
+settings.load_profile("reproducible")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 

@@ -982,3 +982,34 @@ def test_staleness_audit_contract():
 
     assert len(TIER1) == len(set(TIER1))
     assert set(TIER1) <= set(_QUERIES)
+
+
+# perfbench's `lineage` rotation: its ~108 generated classes overflow
+# Spark's default codegen cache of 100 entries
+_LINEAGE_ROTATION = (
+    "q1_pricing_summary",
+    "join_q5_region_revenue",
+    "window_top_per_customer",
+    "text_tfidf",
+    "sim_cosine_topk_bruteforce",
+)
+
+
+def test_codegen_cache_holds_rotating_working_set(spark, sf_dir):
+    """A warm rotation of queries must reuse its generated classes: some
+    cycle compiles nothing with Janino. Not necessarily the second one:
+    AQE numbers whole-stage-codegen stages in the order concurrent query
+    stages become ready, the stage id is part of the generated source,
+    so text_tfidf has a few same-shape variants that each compile once,
+    in whichever cycle first meets them. A cache that thrashes
+    recompiles ~100 classes in every cycle."""
+    compile_time = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    per_cycle = []
+    while len(per_cycle) < 6 and 0 not in per_cycle:
+        before = compile_time.METRIC_COMPILATION_TIME().getCount()
+        for name in _LINEAGE_ROTATION:
+            spark.catalog.clearCache()
+            df = _QUERIES[name](spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+        per_cycle.append(compile_time.METRIC_COMPILATION_TIME().getCount() - before)
+    assert 0 in per_cycle, f"Janino compiles per cycle: {per_cycle}"

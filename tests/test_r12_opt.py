@@ -94,3 +94,25 @@ def test_global_rank_is_exact_permutation(spark, pin_mode, parts, monkeypatch):
         # row-for-row equal to the default two-stage path
         _, two_stage = _ranked_rows(spark)
         assert sorted(got) == sorted(two_stage)
+
+
+def _cache_loaded(spark, df) -> bool:
+    """Whether ``df``'s cached relation holds materialized blocks."""
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    assert cached.isDefined(), "frame is not registered in the cache manager"
+    return cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+
+
+def test_semdedup_memo_rebuilds_grouped_alone(spark, sf_dir):
+    """A memo hit where only ``grouped`` lost its cache must rebuild
+    ``grouped`` itself, not just re-count the still-live ``assigned``."""
+    from backend_model_spark.operators import similarity
+
+    similarity._semdedup_parts(spark, sf_dir)
+    key = (spark.sparkContext.applicationId, sf_dir)
+    grouped, assigned = similarity._SEMDEDUP_CACHE[key]
+    assert _cache_loaded(spark, grouped) and _cache_loaded(spark, assigned)
+    grouped.unpersist(blocking=True)
+    similarity._semdedup_parts(spark, sf_dir)
+    assert _cache_loaded(spark, assigned)
+    assert _cache_loaded(spark, grouped), "grouped was re-registered but never built"
