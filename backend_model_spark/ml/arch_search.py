@@ -35,9 +35,9 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
+from backend_model_spark.memo import memo
 from backend_model_spark.ml import tuning
 from backend_model_spark.ml.train_distributed import train_distributed
-from backend_model_spark.operators.scale_utils import purge_other_apps
 
 # shared trial schedule: fewer epochs than the registered trainer —
 # tuning ranks architectures, it does not ship weights
@@ -55,13 +55,6 @@ TPE_TRIALS = 8
 TPE_EXPLORE = 4
 TPE_SEED = 20260816
 
-# (applicationId, sf_dir, h1, h2, lr_q) -> quantized final loss;
-# shared by the grid entry, the TPE entry and the compare entry so the
-# plan sweep + driver never refit a configuration twice
-_OBJ_CACHE: dict = {}
-_RESULT_CACHE: dict = {}
-
-
 def _objective(
     spark: SparkSession,
     sf_dir: str,
@@ -74,30 +67,29 @@ def _objective(
     TUNE_EPOCHS distributed fit (over the ``row_filter`` subset when
     given). Quantizing the score INSIDE the objective makes ties and
     comparisons grid-exact for both strategies and for the pinned
-    oracle literals."""
+    oracle literals. Memoized per configuration, shared by the grid
+    entry, the TPE entry and the compare entry so the plan sweep +
+    driver never refit a configuration twice."""
     lr_q = math.floor(lr * 1e4 + 0.5) / 1e4
-    key = (spark.sparkContext.applicationId, sf_dir, h1, h2, lr_q, row_filter)
-    got = _OBJ_CACHE.get(key)
-    if got is None:
+
+    def build():
         _, losses, _ = train_distributed(
             spark, sf_dir, h1=h1, h2=h2, leaky=TUNE_LEAKY, lr=lr_q,
             epochs=TUNE_EPOCHS, row_filter=row_filter,
         )
-        got = math.floor(losses[-1] * 1e6 + 0.5) / 1e6
-        purge_other_apps(_OBJ_CACHE, key[0])
-        _OBJ_CACHE[key] = got
-    return got
+        return math.floor(losses[-1] * 1e6 + 0.5) / 1e6
+
+    return memo(spark, ("arch.objective", sf_dir, h1, h2, lr_q, row_filter), build)
 
 
 def _search(spark: SparkSession, sf_dir: str) -> dict:
     """Run both strategies once per (application, sf_dir); return
     {'grid': (h1, h2, lr_q, loss_q, n_trials),
      'tpe':  (h1, h2, lr_q, loss_q, n_trials)}."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _RESULT_CACHE.get(key)
-    if got is not None:
-        return got
+    return memo(spark, ("arch.search", sf_dir), lambda: _search_build(spark, sf_dir))
 
+
+def _search_build(spark: SparkSession, sf_dir: str) -> dict:
     # M3: exhaustive lattice, champion = min (loss, then params) —
     # total order, no float ties left after quantization
     trials = [
@@ -115,7 +107,7 @@ def _search(spark: SparkSession, sf_dir: str) -> dict:
         space=TPE_SPACE,
     )
     b = res.best_params
-    got = {
+    return {
         "grid": (g_h1, g_h2, math.floor(g_lr * 1e4 + 0.5), _q6(g_loss), len(trials)),
         "tpe": (
             int(b["h1"]),
@@ -125,9 +117,6 @@ def _search(spark: SparkSession, sf_dir: str) -> dict:
             TPE_TRIALS,
         ),
     }
-    purge_other_apps(_RESULT_CACHE, key[0])
-    _RESULT_CACHE[key] = got
-    return got
 
 
 def _q6(v: float) -> int:
@@ -183,10 +172,12 @@ def _search_subsample(spark: SparkSession, sf_dir: str) -> tuple:
     """Grid search with subsampled trials + one full-data champion
     refit. Returns (h1, h2, lr_e4, sub_loss_q, full_loss_q, n_trials)
     — memoized per (application, sf_dir) beside the full searches."""
-    key = (spark.sparkContext.applicationId, sf_dir, "sub")
-    got = _RESULT_CACHE.get(key)
-    if got is not None:
-        return got
+    return memo(
+        spark, ("arch.search_sub", sf_dir), lambda: _search_subsample_build(spark, sf_dir)
+    )
+
+
+def _search_subsample_build(spark: SparkSession, sf_dir: str) -> tuple:
     trials = [
         (
             (h1, h2, TUNE_LR),
@@ -196,7 +187,7 @@ def _search_subsample(spark: SparkSession, sf_dir: str) -> tuple:
     ]
     (h1, h2, lr), sub_loss = min(trials, key=lambda t: (t[1], t[0]))
     full_loss = _objective(spark, sf_dir, h1, h2, lr)  # champion refit
-    got = (
+    return (
         h1,
         h2,
         math.floor(lr * 1e4 + 0.5),
@@ -204,9 +195,6 @@ def _search_subsample(spark: SparkSession, sf_dir: str) -> tuple:
         _q6(full_loss),
         len(trials),
     )
-    purge_other_apps(_RESULT_CACHE, key[0])
-    _RESULT_CACHE[key] = got
-    return got
 
 
 def tuning_subsample_champion(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,7 +23,7 @@ from pyspark.ml.feature import StringIndexer
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from backend_model_spark.operators.scale_utils import purge_other_apps
+from backend_model_spark.memo import memo
 
 # columns handled like the reference's cell-16 bool coercion
 BOOL_COLS = ["cleaning_fee", "instant_bookable", "host_identity_verified"]
@@ -178,11 +178,6 @@ AIRBNB_E2E_SHAPE = dict(
     n_rows=99_569, n_train=74_111, n_null_rows=99_569 - 38_499 - 3
 )
 
-# applicationId -> (train_path, test_path): the deterministic fixture
-# parquet, generated once per Spark application
-_E2E_FIXTURE_CACHE: dict = {}
-
-
 def _e2e_fixture_frames(spark):
     """(train, test) DataFrames over the deterministic 29-column dirty
     fixture, written once per application to temp parquet and SCANNED
@@ -194,13 +189,11 @@ def _e2e_fixture_frames(spark):
 
     from backend_model_spark.ml.fixtures import generate_listings
 
-    key = spark.sparkContext.applicationId
-    paths = _E2E_FIXTURE_CACHE.get(key)
-    if paths is None:
+    def build():
         train_pdf, test_pdf, _ = generate_listings(**AIRBNB_E2E_SHAPE)
         d = tempfile.mkdtemp(prefix="airbnb_e2e_fixture_")
         # the fixture dir would otherwise outlive the process (the
-        # cache key is the applicationId, so no later run reuses it) —
+        # memo is per application, so no later run reuses it) —
         # repeated driver rounds on one host would accumulate ~10 MB
         # of orphaned parquet per session (round-8 review finding)
         import atexit
@@ -210,8 +203,10 @@ def _e2e_fixture_frames(spark):
         paths = (os.path.join(d, "train.parquet"), os.path.join(d, "test.parquet"))
         train_pdf.to_parquet(paths[0])
         test_pdf.to_parquet(paths[1])
-        purge_other_apps(_E2E_FIXTURE_CACHE, key)
-        _E2E_FIXTURE_CACHE[key] = paths
+        return paths
+
+    # (train_path, test_path), generated once per Spark application
+    paths = memo(spark, ("airbnb.fixture",), build)
     return spark.read.parquet(paths[0]), spark.read.parquet(paths[1])
 
 
@@ -296,12 +291,6 @@ SELECT
 """
 
 
-# applicationId -> certificate tuple: the fit is deterministic, so one
-# train per application (the registry plan sweep constructs this entry
-# repeatedly; cf. ml_queries._GBT_CACHE)
-_TRAIN_EVAL_CACHE: dict = {}
-
-
 def content_bucket():
     """The train/eval entry's content-addressed split bucket in
     [0, 100): md5 over the 15 FEATURE columns of ``air_b`` (the table
@@ -364,9 +353,7 @@ def airbnb_train_eval(spark, sf_dir: str) -> DataFrame:
 
     from backend_model_spark.ml.pipeline import train_and_evaluate
 
-    key = spark.sparkContext.applicationId
-    row = _TRAIN_EVAL_CACHE.get(key)
-    if row is None:
+    def build():
         train_raw, test_raw = _e2e_fixture_frames(spark)
         cleaned = clean_listings(train_raw, test_raw)
         bucket = content_bucket()
@@ -376,7 +363,7 @@ def airbnb_train_eval(spark, sf_dir: str) -> DataFrame:
         evaluator = RegressionEvaluator(labelCol="price", predictionCol="prediction")
         r2_train = evaluator.setMetricName("r2").evaluate(res.model.transform(train))
         n_train, n_test = train.count(), test.count()
-        row = (
+        return (
             n_train + n_test,
             bool(abs(n_train / (n_train + n_test) - 0.8) <= 0.05),
             bool(math.isfinite(res.mae) and math.isfinite(res.rmse)),
@@ -385,8 +372,10 @@ def airbnb_train_eval(spark, sf_dir: str) -> DataFrame:
             bool(r2_train > 0.0),
             bool(res.r2 > 0.0),
         )
-        purge_other_apps(_TRAIN_EVAL_CACHE, key)
-        _TRAIN_EVAL_CACHE[key] = row
+
+    # the fit is deterministic, so one train per application (the
+    # registry plan sweep constructs this entry repeatedly)
+    row = memo(spark, ("airbnb.train_eval",), build)
     return spark.createDataFrame(
         [row],
         "n_total bigint, split_frac_ok boolean, metrics_finite boolean, "

@@ -61,11 +61,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from backend_model_spark.memo import memo
 from backend_model_spark.sources.tables import load_table
-from backend_model_spark.operators.scale_utils import (
-    ensure_persisted,
-    purge_other_apps,
-)
 
 WG = float(1 << 16)   # weight grid (16 fractional bits); exact int->float
 CLIP = float(1 << 10)  # per-row contribution clip (rarely active; bounds sums)
@@ -289,19 +286,15 @@ def _exact_moments(feats: DataFrame) -> dict:
     return out
 
 
-# (applicationId, sf_dir) -> (persisted feature frame, exact moments):
-# one ~MB-scale cached frame per corpus per application, shared by the
-# registered trainer and every architecture-search trial (the memo owns
-# the persist — cf. mllib_ops._BRP_PARTS_CACHE)
-_FEATS_CACHE: dict = {}
-
-
 def _feats_and_moments(
     spark: SparkSession, sf_dir: str, row_filter: str | None = None
 ):
-    key = (spark.sparkContext.applicationId, sf_dir, row_filter)
-    got = _FEATS_CACHE.get(key)
-    if got is None:
+    """(persisted feature frame, exact moments), memoized per
+    (application, sf_dir, row_filter): one ~MB-scale cached frame per
+    corpus, shared by the registered trainer and every
+    architecture-search trial."""
+
+    def build():
         # balance the cached partitions ONCE before the many epoch
         # scans: a single skewed input split (measured at sf1 — one
         # 28-task stage ran 27 fast + 1 long straggler EVERY epoch)
@@ -314,15 +307,9 @@ def _feats_and_moments(
             .repartition(spark.sparkContext.defaultParallelism)
             .persist()
         )
-        got = (feats, _exact_moments(feats))
-        purge_other_apps(_FEATS_CACHE, key[0])
-        _FEATS_CACHE[key] = got
-    else:
-        # an external clearCache() unpersists the memo-owned frame
-        # behind the memo's back; re-assert it or every epoch re-scans
-        # the parquet (the mllib_ops._BRP_PARTS_CACHE canary lesson)
-        ensure_persisted(got[0])
-    return got
+        return feats, _exact_moments(feats)
+
+    return memo(spark, ("mlp.feats", sf_dir, row_filter), build)
 
 
 def train_distributed(
@@ -487,22 +474,17 @@ def weight_checksum(wts: list[np.ndarray]) -> int:
 # Registered entry
 # ---------------------------------------------------------------------------
 
-# applicationId+sf_dir -> (wts, losses, moments): ONE fit per
-# application, shared by the training certificate and the
-# train-then-serve composition (the fit is deterministic; the registry
-# plan sweep constructs entries repeatedly — cf. ml_queries._GBT_CACHE)
-_FIT_CACHE: dict = {}
-
-
 def _fit_cached(spark: SparkSession, sf_dir: str, opt: str = "gd"):
-    key = (spark.sparkContext.applicationId, sf_dir, opt)
-    got = _FIT_CACHE.get(key)
-    if got is None:
-        lr = ADAM_LR if opt == "adam" else TRAIN_LR
-        got = train_distributed(spark, sf_dir, lr=lr, opt=opt)
-        purge_other_apps(_FIT_CACHE, key[0])
-        _FIT_CACHE[key] = got
-    return got
+    """(wts, losses, moments): ONE fit per application, shared by the
+    training certificate and the train-then-serve composition (the fit
+    is deterministic; the registry plan sweep constructs entries
+    repeatedly)."""
+    lr = ADAM_LR if opt == "adam" else TRAIN_LR
+    return memo(
+        spark,
+        ("mlp.fit", sf_dir, opt),
+        lambda: train_distributed(spark, sf_dir, lr=lr, opt=opt),
+    )
 
 
 def mlp_train_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -767,27 +749,20 @@ def _bucket_col(num_batches: int = MB_NUM_BATCHES):
     ).alias("b")
 
 
-# (applicationId, sf_dir) -> persisted feature frame WITH the batch
-# column. Moments are NOT recomputed — shared with _FEATS_CACHE. At
-# cluster scale this frame would be written clustered by b (sort or
-# partition on the batch id) so each batch job's filter prunes to
-# 1/NB of the files; locally the in-memory columnar scan's batch
-# stats do the skipping.
-_MB_FEATS_CACHE: dict = {}
-
-
 def _mb_feats(spark: SparkSession, sf_dir: str, num_batches: int = MB_NUM_BATCHES):
-    key = (spark.sparkContext.applicationId, sf_dir, num_batches)
-    got = _MB_FEATS_CACHE.get(key)
-    if got is None:
+    """(persisted feature frame WITH the batch column, moments),
+    memoized per (application, sf_dir, num_batches). Moments are NOT
+    recomputed — shared with :func:`_feats_and_moments`. At cluster
+    scale this frame would be written clustered by b (sort or
+    partition on the batch id) so each batch job's filter prunes to
+    1/NB of the files; locally the in-memory columnar scan's batch
+    stats do the skipping."""
+
+    def build():
         base, m = _feats_and_moments(spark, sf_dir)
-        fr = base.select(*FEATURES, "y", _bucket_col(num_batches)).persist()
-        got = (fr, m)
-        purge_other_apps(_MB_FEATS_CACHE, key[0])
-        _MB_FEATS_CACHE[key] = got
-    else:
-        ensure_persisted(got[0])
-    return got
+        return base.select(*FEATURES, "y", _bucket_col(num_batches)).persist(), m
+
+    return memo(spark, ("mlp.mb_feats", sf_dir, num_batches), build)
 
 
 def _reduce_sums(
@@ -959,19 +934,6 @@ def train_serial_minibatch(
     return wts, losses, final_loss
 
 
-_MB_FIT_CACHE: dict = {}
-
-
-def _mb_fit_cached(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _MB_FIT_CACHE.get(key)
-    if got is None:
-        got = train_distributed_minibatch(spark, sf_dir)
-        purge_other_apps(_MB_FIT_CACHE, key[0])
-        _MB_FIT_CACHE[key] = got
-    return got
-
-
 def mlp_train_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REGISTERED face of :func:`train_distributed_minibatch`.
 
@@ -994,7 +956,9 @@ def mlp_train_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
       any partitioning (parity with the serial twin is separately
       held bit-equal by tests/test_train_distributed.py).
     """
-    wts, losses, final_loss, m = _mb_fit_cached(spark, sf_dir)
+    wts, losses, final_loss, m = memo(
+        spark, ("mlp.mb_fit", sf_dir), lambda: train_distributed_minibatch(spark, sf_dir)
+    )
     _, losses_gd, _ = _fit_cached(spark, sf_dir)
     row = (
         int(m["n"]),

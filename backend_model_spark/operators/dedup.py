@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from backend_model_spark.memo import memo
 from backend_model_spark.sources.tables import load_table, spread
 
 TOKENS = "split(trim(text), '\\\\s+')"
@@ -182,47 +183,11 @@ cand AS (
 )
 
 
-# session-scoped materialization of the digest-group frame — the
-# shared first stage of the round-8 star contract, consumed by
-# candidates, ngram, containment, verified (2-3 branches EACH: reps +
-# star). Same design as _PAIR_CACHE below; MEMORY_AND_DISK because
-# the frame carries text.
-_REPS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _evict_oldest(cache: dict, cap: int = 8) -> None:
-    """Bound the session caches: the test suite runs hundreds of
-    fixture sf_dirs through these entries, and every key pins a
-    persisted frame (the members frame carries TEXT). Eviction is
-    true LRU — every hit calls :func:`_touch` to move its key to the
-    dict's end, so the front is always the least-recently-used."""
-    while len(cache) > cap:
-        old = cache.pop(next(iter(cache)))
-        try:
-            old.unpersist()
-        except Exception:  # noqa: BLE001 — session may be gone
-            pass
-
-
-def _touch(cache: dict, key) -> None:
-    """Move ``key`` to the end of ``cache`` (mark most-recently-used).
-    Plain reassignment keeps a dict key's ORIGINAL position, so
-    without this a hot sf_dir inserted first would be evicted first."""
-    if key in cache:
-        cache[key] = cache.pop(key)
-
-
-def _still_cached(df: DataFrame) -> bool:
-    """True while a persisted frame is still registered with the cache
-    manager — `spark.catalog.clearCache()` unpersists data behind the
-    session caches' backs, and a stale dict hit would make EVERY
-    downstream job recompute the full LSH lineage (measured: the
-    multi-job graph entries pay 2-5 recomputes, triangles 10 s at
-    sf0.1 instead of ~3)."""
-    sl = df.storageLevel
-    return bool(sl.useMemory or sl.useDisk)
-
-
+# The digest-group frame is the shared first stage of the round-8
+# star contract, consumed by candidates, ngram, containment, verified
+# (2-3 branches EACH: reps + star). It is memoized per (application,
+# sf_dir) like the candidate pairs below; MEMORY_AND_DISK because the
+# frame carries text.
 def _content_reps(spark: SparkSession, sf_dir: str, eager: bool = True):
     """(reps, star) — exact-dedup-first over shingle-eligible docs.
 
@@ -244,19 +209,8 @@ def _content_reps(spark: SparkSession, sf_dir: str, eager: bool = True):
     action builds them identically through the InMemoryRelation. The
     persist is registered either way; only WHO pays the build moves.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    members = _REPS_CACHE.get(key)
-    _touch(_REPS_CACHE, key)
-    if members is not None and not _still_cached(members):
-        # an external clearCache() (bench quiesce, memory pressure)
-        # unpersisted the data while the dict kept the frame — every
-        # consumer job would silently recompute the whole lineage.
-        # Re-register so the next action materializes once again.
-        members = members.persist(StorageLevel.MEMORY_AND_DISK)
-        if eager:
-            members.count()  # eager: see the build-path note below
-        _REPS_CACHE[key] = members
-    if members is None:
+
+    def build():
         docs = load_table(spark, "documents", sf_dir)
         # compute-width exchange pin (round 11, guide §2.2): the
         # digest-window stage FUSES with the downstream shingle
@@ -281,8 +235,9 @@ def _content_reps(spark: SparkSession, sf_dir: str, eager: bool = True):
         # One count() builds the blocks once, everyone else reads them.
         if eager:
             members.count()
-        _REPS_CACHE[key] = members
-        _evict_oldest(_REPS_CACHE)
+        return members
+
+    members = memo(spark, ("dedup.reps", sf_dir), build)
     reps = members.filter(F.col("doc_id") == F.col("rep_id")).select(
         "doc_id", "text"
     )
@@ -292,18 +247,11 @@ def _content_reps(spark: SparkSession, sf_dir: str, eager: bool = True):
     return reps, star
 
 
-# distinct (rep doc_id, shingle) inverted index — the star contract's
-# SECOND shared stage, consumed by candidates (signatures), ngram,
-# containment, and verified. Before round 8's review pass each of the
-# three Jaccard-family entries rebuilt and separately persisted an
-# identical copy.
-_REP_SHINGLED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# (vec_id, label, v, rep_id) digest-group frame for the embedding
-# pairwise family — same bounded-LRU posture as the text-side caches
-_EMB_MEMBERS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The distinct (rep doc_id, shingle) inverted index is the star
+# contract's SECOND shared stage, consumed by candidates (signatures),
+# ngram, containment, and verified. Before round 8's review pass each
+# of the three Jaccard-family entries rebuilt and separately persisted
+# an identical copy.
 def _shingle_index(reps: DataFrame) -> DataFrame:
     """The star contract's distinct (doc_id, shingle) inverted index
     over representatives — ONE construction shared by the memoized
@@ -320,25 +268,17 @@ def _shingle_index(reps: DataFrame) -> DataFrame:
 
 
 def _rep_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DISTINCT (doc_id, shingle) over the representatives — cached
-    per (application, sf_dir) with the same LRU + clearCache
-    revalidation as the other session materializations. Safe for the
-    signature path too: MIN over the distinct shingle set equals MIN
-    over the raw explode."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sh = _REP_SHINGLED_CACHE.get(key)
-    _touch(_REP_SHINGLED_CACHE, key)
-    if sh is not None and not _still_cached(sh):
-        sh = sh.persist()
-        sh.count()  # eager: concurrent consumers (see _content_reps)
-        _REP_SHINGLED_CACHE[key] = sh
-    if sh is None:
+    """DISTINCT (doc_id, shingle) over the representatives, memoized
+    per (application, sf_dir). Safe for the signature path too: MIN
+    over the distinct shingle set equals MIN over the raw explode."""
+
+    def build():
         reps, _ = _content_reps(spark, sf_dir)
         sh = _shingle_index(reps).persist()
         sh.count()  # eager: concurrent consumers (see _content_reps)
-        _REP_SHINGLED_CACHE[key] = sh
-        _evict_oldest(_REP_SHINGLED_CACHE)
-    return sh
+        return sh
+
+    return memo(spark, ("dedup.shingles", sf_dir), build)
 
 
 def tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -609,14 +549,11 @@ ORDER BY doc_id
 # table is pair-sized (orders of magnitude smaller than the corpus);
 # MEMORY_AND_DISK so an unexpectedly dense graph spills instead of
 # evicting. Entries die with their Spark application.
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH band-join: band the 8-value signature into 4 bands of 2,
     bucket-join on (band, values) — candidate pairs via equi-join,
-    unordered. Materialized once per (session, sf_dir) — see
-    ``_PAIR_CACHE``.
+    unordered. Materialized once per (session, sf_dir) — see the
+    block comment above.
 
     EXACT-DEDUP-FIRST STAR CONTRACT (round 8 — see the block comment
     at :data:`DEDUP_FIRST_CTES`): the band self-join runs on one
@@ -635,16 +572,11 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation is one digest shuffle + a shuffle on band keys, never
     all-pairs and never quadratic in duplication.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PAIR_CACHE.get(key)
-    _touch(_PAIR_CACHE, key)
-    if cached is not None:
-        if not _still_cached(cached):
-            # see _content_reps: survive an external clearCache()
-            cached = cached.persist(StorageLevel.MEMORY_AND_DISK)
-            cached.count()
-            _PAIR_CACHE[key] = cached
-        return cached
+    return memo(spark, ("dedup.pairs", sf_dir), lambda: _lsh_pairs(spark, sf_dir))
+
+
+def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The memo miss of :func:`lsh_candidate_pairs`."""
     # eager=False (round 12): the first downstream action here is
     # _rep_shingled's sh.count(), whose lineage scans every members
     # partition through the persisted InMemoryRelation (reps =
@@ -711,8 +643,6 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs.count()  # materialize now so the banded intermediate can go
     banded.unpersist()
-    _PAIR_CACHE[key] = pairs
-    _evict_oldest(_PAIR_CACHE)
     return pairs
 
 
@@ -880,26 +810,20 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
     )
-    # persisted via the bounded session cache: three consumers (both
+    # persisted through the session memo: three consumers (both
     # grid-join sides + the star branch) would each recompute the
     # array-keyed window shuffle (measured A/B in SCALE.md round 8),
     # and embedding_duplicate_clusters re-enters this function in the
     # same session — an unbounded per-call persist() would pin one
     # corpus-sized frame per invocation (review finding, round 8)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    members = _EMB_MEMBERS_CACHE.get(key)
-    _touch(_EMB_MEMBERS_CACHE, key)
-    if members is not None and not _still_cached(members):
-        members = members.persist(StorageLevel.MEMORY_AND_DISK)
-        members.count()  # eager: concurrent consumers (see _content_reps)
-        _EMB_MEMBERS_CACHE[key] = members
-    if members is None:
+    def build():
         members = allv.withColumn(
             "rep_id", F.min("vec_id").over(Window.partitionBy("label", "v"))
         ).persist(StorageLevel.MEMORY_AND_DISK)
         members.count()  # eager: concurrent consumers (see _content_reps)
-        _EMB_MEMBERS_CACHE[key] = members
-        _evict_oldest(_EMB_MEMBERS_CACHE)
+        return members
+
+    members = memo(spark, ("dedup.emb_members", sf_dir), build)
     v = members.filter(F.col("vec_id") == F.col("rep_id")).select(
         "vec_id", "label", "v"
     )

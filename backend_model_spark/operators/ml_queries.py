@@ -18,8 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from backend_model_spark.memo import memo
 from backend_model_spark.operators.sampling import BUCKET
-from backend_model_spark.operators.scale_utils import purge_other_apps
 from backend_model_spark.sources.tables import load_table
 
 
@@ -93,16 +93,6 @@ GBT_FEATURES = [
     "lang_idx",
     "source_idx",
 ]
-
-# The fitted GBT is shared between gbt_train_eval and
-# gbt_feature_importance — one training serves both views (metrics,
-# importances), exactly like a model registry in a production
-# pipeline. Keyed by (application, data dir); entries die with the
-# Spark application. Training is the most expensive single step in
-# the whole registry, so recomputing it per query would double the
-# correctness-gate cost for zero information.
-_GBT_CACHE: dict = {}
-
 
 def gbt_feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared (doc_id, text features, label) frame: documents'
@@ -178,21 +168,25 @@ def _fitted_gbt(spark: SparkSession, sf_dir: str):
     membership silently changes whenever a column is added to the
     feature frame, and it is partitioning-dependent besides (round-7
     review). The md5 bucket depends only on doc_id — stable across
-    column changes, partitionings, and engines."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _GBT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    feats = gbt_feature_frame(spark, sf_dir)
-    # sampling.BUCKET — the ONE repo-wide bucket expression (round-8
-    # advice: hand-copied split expressions drift silently)
-    bucket = F.expr(BUCKET)
-    train = feats.filter(bucket < 80)
-    test = feats.filter(bucket >= 80)
-    model = gbt_pipeline().fit(train)
-    purge_other_apps(_GBT_CACHE, key[0])
-    _GBT_CACHE[key] = (model, train, test)
-    return _GBT_CACHE[key]
+    column changes, partitionings, and engines.
+
+    The fit is memoized per (application, sf_dir) and shared between
+    gbt_train_eval and gbt_feature_importance — one training serves
+    both views (metrics, importances), exactly like a model registry
+    in a production pipeline. Training is the most expensive single
+    step in the whole registry, so recomputing it per query would
+    double the correctness-gate cost for zero information."""
+
+    def build():
+        feats = gbt_feature_frame(spark, sf_dir)
+        # sampling.BUCKET — the ONE repo-wide bucket expression
+        # (round-8 advice: hand-copied split expressions drift silently)
+        bucket = F.expr(BUCKET)
+        train = feats.filter(bucket < 80)
+        test = feats.filter(bucket >= 80)
+        return gbt_pipeline().fit(train), train, test
+
+    return memo(spark, ("gbt", sf_dir), build)
 
 
 def gbt_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,12 +29,9 @@ from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from backend_model_spark.memo import memo
 from backend_model_spark.operators.dedup import SHINGLES, tokenized_docs
 from backend_model_spark.sources.tables import load_table
-from backend_model_spark.operators.scale_utils import (
-    ensure_persisted,
-    purge_other_apps,
-)
 
 SEED = 42
 # Round-9 bounded-output contract (round-8 verdict ask #3): the LSH
@@ -338,13 +335,6 @@ def mllib_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_a", "doc_b")
 
 
-# (applicationId, sf_dir) -> parts tuple: bounds the persisted ``reps``
-# frame to ONE per corpus per application instead of one per invocation
-# (round-9 advice: the plain face used to leak ~15 MB of cache per
-# call). The memo owns the persist; no face unpersists ``reps``.
-_BRP_PARTS_CACHE: dict = {}
-
-
 def _brp_parts(spark: SparkSession, sf_dir: str):
     """(vecs, reps, cand, kept, star) — the ONE BRP pipeline
     (bucketLength 0.3 since round 9, 4 tables, Euclidean < 1.15
@@ -369,21 +359,12 @@ def _brp_parts(spark: SparkSession, sf_dir: str):
     asc, id asc) candidates per anchor. The Zipf 10× corpus has
     564,239 true pairs at threshold 1.15: an output-bound cost no
     plan can fix while the contract is "emit every pair"."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BRP_PARTS_CACHE.get(key)
-    if hit is not None:
-        got, owns_persist = hit
-        if owns_persist:
-            # an external clearCache() (e.g. the bench protocol's
-            # quiesce) unpersists the memo-owned reps frame behind our
-            # back; without re-asserting the persist, every downstream
-            # evaluation re-pays the dedup window per lineage walk —
-            # measured 239 s vs 35 s at Zipf when the round-10 canary
-            # re-check caught exactly this. Only the DUPLICATED branch
-            # owns a persist: on duplicate-free corpora reps aliases
-            # the raw vecs frame and must never be pinned.
-            ensure_persisted(got[1])
-        return got
+    return memo(spark, ("brp", sf_dir), lambda: _brp_build(spark, sf_dir))
+
+
+def _brp_build(spark: SparkSession, sf_dir: str):
+    """The memo miss of :func:`_brp_parts`: ONE persisted ``reps``
+    frame per corpus per application, never one per invocation."""
     emb = load_table(spark, "embeddings", sf_dir)
     vecs = emb.select(
         "vec_id",
@@ -434,11 +415,7 @@ def _brp_parts(spark: SparkSession, sf_dir: str):
         # exploded sides), and at Zipf 10× the unpersisted rep join
         # re-pays the array-shuffling dedup window each time —
         # measured 62-96 s vs 12.6 s persisted (6-run alternating A/B,
-        # SCALE.md round 9). Ownership (round-9 advice): the persist
-        # belongs to the _BRP_PARTS_CACHE memo — ONE ~15 MB frame per
-        # (application, sf_dir), reused by every face and never
-        # unpersisted by callers (test sessions clearCache between
-        # timed runs).
+        # SCALE.md round 9). The session memo owns the persist.
         reps = vecs.join(
             members.filter(F.col("vec_id") == F.col("rep_id")).select("vec_id"),
             "vec_id",
@@ -453,13 +430,9 @@ def _brp_parts(spark: SparkSession, sf_dir: str):
             )
         )
     kept = _kcap(cand, "vec_a", "euclidean_dist", "vec_b")
-    got = (vecs, reps, cand, kept, star)
-    # owns_persist: True only on the duplicated branch (reps is the
-    # deduped frame this function persisted); on the duplicate-free
-    # short-circuit reps IS vecs, unpersisted by design
-    purge_other_apps(_BRP_PARTS_CACHE, key[0])
-    _BRP_PARTS_CACHE[key] = (got, reps is not vecs)
-    return got
+    # the memo owns reps only on the duplicated branch: on the
+    # duplicate-free short-circuit reps IS vecs, unpersisted by design
+    return vecs, reps, cand, kept, star
 
 
 def _brp_pairs(spark: SparkSession, sf_dir: str):
@@ -923,7 +896,7 @@ def mllib_brp_ann_join_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_dev = _euclid_dev(pairs, vecs)
     kcap_ok = _kcap_topk_ok(cand, kept, "vec_a", "euclidean_dist", "vec_b")
     recall = _brp_sample_recall(reps, kept)
-    # reps is NOT unpersisted: the _BRP_PARTS_CACHE memo owns it
+    # reps is NOT unpersisted: the session memo owns it
     for df in (vecs, cand, kept, pairs):
         df.unpersist()
     return spark.createDataFrame(

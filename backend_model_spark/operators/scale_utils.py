@@ -359,55 +359,3 @@ def with_global_ntile(
         f"    div (__sg_n div {k}) + 1 end as int)"
     )
     return ranked.withColumn(tile_col, tile).drop("__sg_rank", "__sg_n")
-
-
-def eager_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` (if not already) AND materialize it now.
-
-    Round-11 finding: a lazily-persisted shared frame gives NO sharing
-    across the CONCURRENT branch jobs of one action — AQE launches the
-    broadcast/shuffle-stage jobs of every consumer branch in parallel,
-    each misses the not-yet-built cache, and each re-executes the full
-    lineage (semdedup's centroid-assignment lineage ran 5× per bench
-    run this way: five concurrent ~5 s stages all scanning parquet).
-    One ``count()`` here pays the lineage ONCE and every consumer then
-    reads cached blocks. The count is full-width because the cache
-    materializes whole InMemoryRelation batches, not pruned columns.
-    """
-    sl = df.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        df = df.persist()
-    df.count()
-    return df
-
-
-def ensure_persisted(df: DataFrame) -> DataFrame:
-    """Re-assert a MEMO-OWNED frame's persist after an external
-    ``spark.catalog.clearCache()`` unpersisted it behind the memo's
-    back (the round-10 BRP canary catch: an unpersisted memo hit
-    re-paid the dedup window per lineage evaluation — 239–300 s vs
-    ~35 s at Zipf). ONE shared implementation so the ownership rule
-    cannot drift between memo sites."""
-    sl = df.storageLevel
-    if not (sl.useMemory or sl.useDisk):
-        df.persist()
-    return df
-
-
-def purge_other_apps(cache: dict, app_id: str) -> None:
-    """Drop memo keys whose applicationId differs from the current
-    one (round-10 advice): every module-level memo keys on
-    ``(applicationId, ...)``, and a long-lived process that restarts
-    its SparkSession would otherwise accumulate DataFrame/weight
-    references bound to dead contexts forever. Call at each memo
-    INSERT site (a key's first element is always the applicationId).
-    No unpersist attempt — the owning context is already gone, and
-    unpersisting through a dead SparkContext raises. Keys are either
-    ``(applicationId, ...)`` tuples or the bare applicationId string
-    (ml.cleaning's one-row memos)."""
-    for key in [
-        k
-        for k in cache
-        if (k[0] if isinstance(k, tuple) else k) != app_id
-    ]:
-        cache.pop(key, None)

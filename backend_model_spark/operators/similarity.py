@@ -24,10 +24,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from backend_model_spark.operators.scale_utils import (
-    ensure_persisted,
-    purge_other_apps,
-)
+from backend_model_spark.memo import memo
 from backend_model_spark.sources.tables import load_table, spread
 
 DIM = 64
@@ -1985,12 +1982,6 @@ KMEANS_LLOYD_ORACLE = _kmeans_sql()
 
 SEMDEDUP_TAU_MICRO = 400_000  # cosine ≥ 0.4 — the dedup family's shared gate
 
-# (applicationId, sf_dir) -> (members, assigned) persisted frames —
-# memo OWNS both persists (callers never unpersist); bounded by the
-# same purge-on-insert rule as every other module memo
-_SEMDEDUP_CACHE: dict = {}
-
-
 def _semdedup_parts(spark: SparkSession, sf_dir: str):
     """(members, assigned) — the shared SemDeDup front half.
 
@@ -2008,34 +1999,15 @@ def _semdedup_parts(spark: SparkSession, sf_dir: str):
     C(g, 2) pairs. Centroids stay FULL-CORPUS means (each member
     contributes), exactly as the direct form computed them.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _SEMDEDUP_CACHE.get(key)
-    if got is not None:
-        grouped, assigned = got
-        # an external clearCache() (bench quiesce) unpersists behind
-        # the memo's back — re-assert, or the rollup + pair join each
-        # re-pay the full assignment lineage. Round 12 (verdict ask
-        # #3): check-before-count — when both persists are still
-        # registered the blocks built at memo time are live, so the
-        # hit path costs ZERO actions (r11 re-ran eager_persist on
-        # both frames on every hit: two redundant count() jobs).
-        # Count each frame that is not live. After a clearCache, ONE
-        # count of `assigned` rebuilds both caches: its lineage scans
-        # every partition of `grouped` through the re-registered
-        # InMemoryRelation. When only `grouped` died, counting
-        # `assigned` would read assigned's own blocks and leave
-        # `grouped` unbuilt, so `grouped` is counted itself.
-        def _live(df):
-            sl = df.storageLevel
-            return sl.useMemory or sl.useDisk
-        if not _live(assigned):
-            ensure_persisted(grouped)
-            ensure_persisted(assigned)
-            assigned.count()
-        elif not _live(grouped):
-            ensure_persisted(grouped)
-            grouped.count()
-        return grouped.select("vec_id", "rep_id", "nz"), assigned
+    grouped, assigned = memo(
+        spark, ("semdedup", sf_dir), lambda: _semdedup_build(spark, sf_dir)
+    )
+    return grouped.select("vec_id", "rep_id", "nz"), assigned
+
+
+def _semdedup_build(spark: SparkSession, sf_dir: str):
+    """The memo miss of :func:`_semdedup_parts`: (grouped, assigned),
+    both persisted and built by one action."""
     emb = _as_double(load_table(spark, "embeddings", sf_dir))
     pos = emb.select("label", F.posexplode("v").alias("pos", "x"))
     centroids = (
@@ -2060,13 +2032,12 @@ def _semdedup_parts(spark: SparkSession, sf_dir: str):
     )
     # ONE digest-group window, persisted once; both the member view
     # (rollup side) and the rep view (assignment + pair-join side)
-    # read it — the _EMB_MEMBERS_CACHE shape from the dedup family
+    # read it — the embedding-members shape from the dedup family
     grouped = (
         emb.withColumn("rep_id", F.min("vec_id").over(W.partitionBy("v")))
         .select("vec_id", "rep_id", "v", (norm2 > 0).alias("nz"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    members = grouped.select("vec_id", "rep_id", "nz")
     reps = grouped.filter(F.col("vec_id") == F.col("rep_id")).select("vec_id", "v")
     cos_ctr = F.expr(
         _safe_cos(
@@ -2102,9 +2073,6 @@ def _semdedup_parts(spark: SparkSession, sf_dir: str):
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    got = (grouped, assigned)
-    purge_other_apps(_SEMDEDUP_CACHE, key[0])
-    _SEMDEDUP_CACHE[key] = got
     # materialize NOW (round 11): the downstream pair-kernel action
     # launches its ga/gb/rollup branch jobs concurrently, and a lazy
     # persist lets each of them re-run the digest-group window + the
@@ -2116,7 +2084,7 @@ def _semdedup_parts(spark: SparkSession, sf_dir: str):
     # grouped's cached blocks for nothing: one whole stage+action of
     # pure overhead per cold build).
     assigned.count()
-    return members, assigned
+    return grouped, assigned
 
 
 def _cell_cosine_ctr_kernel(left, right):

@@ -25,7 +25,59 @@ HAS_PROTOBUF = ensure_protobuf()
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-DEFAULT_DRIVER_MEMORY = os.environ.get("SPARK_DRIVER_MEMORY", "32g")
+_MIB = 1 << 20
+
+# Floor for shuffle scratch in RAM: local runs shuffle well under a GB
+# per query; 4 GiB of headroom keeps a small container from thrashing
+# its page cache.
+_SCRATCH_MIN_BYTES = 4096 * _MIB
+
+
+def _read(path: str) -> str:
+    try:
+        with open(path) as fh:
+            return fh.read()
+    except OSError:
+        return ""
+
+
+def _host_memory() -> int | None:
+    """Bytes of RAM this process can use: the smaller of the cgroup
+    memory limit (v2 or v1) and MemAvailable; None when neither is
+    known."""
+    limits = [
+        _read("/sys/fs/cgroup/memory.max").strip(),
+        _read("/sys/fs/cgroup/memory/memory.limit_in_bytes").strip(),
+    ]
+    known = [int(v) for v in limits if v.isdigit() and int(v) < 1 << 60] + [
+        int(line.split()[1]) * 1024
+        for line in _read("/proc/meminfo").splitlines()
+        if line.startswith("MemAvailable:")
+    ]
+    return min(known, default=None)
+
+
+def driver_heap_mb(host_bytes: int | None) -> int:
+    """Default driver heap in MiB: half of ``host_bytes``, capped at
+    32 GiB and rounded down to 256 MiB (at least 512 MiB)."""
+    half = host_bytes // 2 // _MIB if host_bytes else 32 * 1024
+    return max(512, min(32 * 1024, half) // 256 * 256)
+
+
+def scratch_fits_in_ram(shm_free: int, host_bytes: int | None, heap: int) -> bool:
+    """Whether tmpfs scratch leaves the floor free twice over: in the
+    tmpfs itself, and in host RAM after the heap. tmpfs ``f_bavail``
+    reports its size limit (16 GiB on a 15 GiB host), not free memory."""
+    floor = _SCRATCH_MIN_BYTES
+    return shm_free >= floor and (host_bytes or 0) - heap >= floor
+
+
+def _jvm_bytes(size: str) -> int:
+    """Bytes in a JVM memory size such as ``6g`` or ``7680m``."""
+    size = size.strip().lower()
+    unit = {"k": 1 << 10, "m": _MIB, "g": 1 << 30, "t": 1 << 40}.get(size[-1])
+    return int(size[:-1]) * unit if unit else int(size)
+
 
 # Round-12 measured lever (guide §5, §7.4): on this round's host the
 # kernel serializes concurrent page faults in a process whenever
@@ -46,29 +98,22 @@ DEFAULT_DRIVER_MEMORY = os.environ.get("SPARK_DRIVER_MEMORY", "32g")
 #                           executor threads are faulting
 # A/B (3 worst headline entries, min-of-3 each, same tree):
 # minhash 17.5→1.3 s, semdedup 5.9→2.9 s, calibration 17.7→2.9 s.
-# Heap sized 32g (was an arbitrary day-1 90g): the suite's working
-# set at the test scale factors sits far below it (16g measured
-# slightly GC-tight: window_rfm 2.5 s vs 1.7 s at 32g), a committed
-# 90g heap costs ~90 GB of serialized first-touch faults on this
-# kernel, and anything evicted spills to the (tmpfs) local dir.
-# A JVM crash report (hs_err_pid*.log) goes to the temp dir, never
-# into the working directory (which is often the checkout).
+# The heap is sized from the host (driver_heap_mb): a fixed 32g
+# committed heap made the JVM fail to start (JAVA_GATEWAY_EXITED) on
+# a 15 GiB host; 32g stays the cap, where 16g measured slightly
+# GC-tight at sf0.1 (window_rfm 2.5 s vs 1.7 s). SPARK_DRIVER_MEMORY
+# overrides it. A JVM crash report (hs_err_pid*.log) goes to the temp
+# dir, never into the working directory (which is often the checkout).
 # Env-overridable for other geometries.
-_DRIVER_JAVA_OPTS = os.environ.get(
-    "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-    f"-Xms{DEFAULT_DRIVER_MEMORY}"
+_DRIVER_JAVA_OPTS = (
+    "-Xms{heap}"
     " -XX:InitialCodeCacheSize=512m -XX:ReservedCodeCacheSize=512m"
     " -XX:CICompilerCount=4"
-    f" -XX:ErrorFile={os.path.join(tempfile.gettempdir(), 'hs_err_pid%p.log')}",
+    f" -XX:ErrorFile={os.path.join(tempfile.gettempdir(), 'hs_err_pid%p.log')}"
 )
 
-# Floor for "is this tmpfs big enough to hold shuffle scratch": local
-# runs shuffle well under a GB per query; 4 GiB of headroom keeps a
-# small container from thrashing its page cache.
-_SCRATCH_MIN_BYTES = 4 * 1024 * 1024 * 1024
 
-
-def _local_scratch_dir() -> str | None:
+def _local_scratch_dir(heap: str) -> str | None:
     """Pick the local-mode shuffle/spill scratch directory.
 
     Guide §1.3/§2.1: shuffle blocks are written to and re-read from
@@ -81,8 +126,15 @@ def _local_scratch_dir() -> str | None:
     across runs), so placing it on the fastest medium changes no
     query's output. On a real cluster the cluster manager supplies
     its own local dirs (NVMe scratch); this only applies to local
-    masters, and ``SPARK_GRAFT_LOCAL_DIR`` overrides for other
-    geometries.
+    masters.
+
+    tmpfs pages are host RAM shared with the heap, and the check runs
+    once at startup: a shuffle spike past the free RAM can fail a
+    query with ENOSPC or wake the OOM killer where a disk directory
+    would only be slower. So /dev/shm is used only while host RAM
+    minus the heap leaves :data:`_SCRATCH_MIN_BYTES` free
+    (:func:`scratch_fits_in_ram`). ``SPARK_GRAFT_LOCAL_DIR`` overrides
+    the choice, e.g. with a disk directory on a memory-tight host.
     """
     override = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if override:
@@ -91,7 +143,11 @@ def _local_scratch_dir() -> str | None:
     try:
         if os.path.isdir(shm) and os.access(shm, os.W_OK):
             st = os.statvfs(shm)
-            if st.f_bavail * st.f_frsize >= _SCRATCH_MIN_BYTES:
+            if scratch_fits_in_ram(
+                st.f_bavail * st.f_frsize,
+                _host_memory(),
+                _jvm_bytes(heap),
+            ):
                 return os.path.join(shm, "spark-graft-local")
     except OSError:
         pass
@@ -112,6 +168,7 @@ def get_spark(
     tasks, which the DAG scheduler handles fine.
     """
     sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    heap = os.environ.get("SPARK_DRIVER_MEMORY") or f"{driver_heap_mb(_host_memory())}m"
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(sp))
@@ -169,12 +226,17 @@ def get_spark(
         # external driver built keeps Spark's default of 100.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", DEFAULT_DRIVER_MEMORY)
-        .config("spark.driver.extraJavaOptions", _DRIVER_JAVA_OPTS)
+        .config("spark.driver.memory", heap)
+        .config(
+            "spark.driver.extraJavaOptions",
+            os.environ.get(
+                "SPARK_GRAFT_DRIVER_JAVA_OPTS", _DRIVER_JAVA_OPTS.format(heap=heap)
+            ),
+        )
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        scratch = _local_scratch_dir()
+        scratch = _local_scratch_dir(heap)
         if scratch:
             # shuffle/spill scratch on the fastest local medium — see
             # _local_scratch_dir (round-12 measured lever)

@@ -703,14 +703,9 @@ _BUILD_JOBS = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(_BUILD_JOBS))
-def test_build_runs_only_its_own_jobs(spark, sf_dir, name):
-    """Building the DataFrame must run exactly the entry's own jobs."""
+def _build_jobs(spark, sf_dir, name, group) -> int:
+    """Spark jobs run while building entry ``name``'s DataFrame."""
     sc = spark.sparkContext
-    # first build warms the input-table schema memo (a cold memo runs
-    # one inference job per table, which is not the entry's work)
-    _QUERIES[name](spark, sf_dir)
-    group = f"build-jobs:{name}"
     sc.setJobGroup(group, group)
     try:
         _QUERIES[name](spark, sf_dir)
@@ -718,10 +713,46 @@ def test_build_runs_only_its_own_jobs(spark, sf_dir, name):
         sc.setLocalProperty("spark.jobGroup.id", None)
     # the status tracker is fed by the asynchronous listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == _BUILD_JOBS[name], (
-        f"{name} ran {len(jobs)} jobs at build, expected {_BUILD_JOBS[name]}"
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", sorted(_BUILD_JOBS))
+def test_build_runs_only_its_own_jobs(spark, sf_dir, name):
+    """Building the DataFrame must run exactly the entry's own jobs."""
+    # first build warms the input-table schema memo (a cold memo runs
+    # one inference job per table, which is not the entry's work)
+    _QUERIES[name](spark, sf_dir)
+    jobs = _build_jobs(spark, sf_dir, name, f"build-jobs:{name}")
+    assert jobs == _BUILD_JOBS[name], (
+        f"{name} ran {jobs} jobs at build, expected {_BUILD_JOBS[name]}"
     )
+
+
+# (memo hit, memo warm and cache cold) build jobs of entries that go
+# through the session memo. A hit whose frames are live runs no job of
+# its own. After clearCache() a hit rebuilds each dead frame with one
+# count(), which runs one job per query stage under AQE. The BRP
+# certificate runs its own checks at build, and the sf0.001 vectors
+# are duplicate-free, so its memo owns no frame. The trainer's fit is
+# a value memo.
+_MEMO_BUILD_JOBS = {
+    "dedup_minhash_lsh_candidates": (0, 7),
+    "dedup_embedding_neardup": (0, 5),
+    "dedup_semantic_semdedup": (0, 11),
+    "mllib_brp_ann_join": (41, 41),
+    "ml_mlp_train_distributed": (0, 0),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_MEMO_BUILD_JOBS))
+def test_memo_build_jobs(spark, sf_dir, name):
+    """A memoized entry's build runs the same jobs on a memo hit and on
+    a memo hit after an external clearCache()."""
+    _QUERIES[name](spark, sf_dir)  # memo warm
+    hit = _build_jobs(spark, sf_dir, name, f"memo-hit:{name}")
+    spark.catalog.clearCache()
+    cold = _build_jobs(spark, sf_dir, name, f"memo-cold:{name}")
+    assert (hit, cold) == _MEMO_BUILD_JOBS[name]
 
 
 def test_path_trigrams_take_ordered(spark, sf_dir):

@@ -106,11 +106,11 @@ def _cache_loaded(spark, df) -> bool:
 def test_semdedup_memo_rebuilds_grouped_alone(spark, sf_dir):
     """A memo hit where only ``grouped`` lost its cache must rebuild
     ``grouped`` itself, not just re-count the still-live ``assigned``."""
+    from backend_model_spark import memo
     from backend_model_spark.operators import similarity
 
     similarity._semdedup_parts(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    grouped, assigned = similarity._SEMDEDUP_CACHE[key]
+    grouped, assigned = memo.lookup(spark, ("semdedup", sf_dir))
     assert _cache_loaded(spark, grouped) and _cache_loaded(spark, assigned)
     grouped.unpersist(blocking=True)
     similarity._semdedup_parts(spark, sf_dir)

@@ -199,33 +199,26 @@ def test_lsh_candidates_inline_and_memo_paths_agree(spark, dirty_dir):
     the shingle lineage (no extra materialization pass) when not.
     Both paths must emit the identical pair set — on a duplicated
     corpus so the star branch is live in both."""
+    from backend_model_spark import memo
     from backend_model_spark.operators import dedup
 
     def fresh_pairs():
-        # drop every session memo so the build path runs from scratch
-        for cache in (
-            dedup._PAIR_CACHE,
-            dedup._REP_SHINGLED_CACHE,
-            dedup._REPS_CACHE,
-        ):
-            for v in cache.values():
-                try:
-                    v.unpersist()
-                except Exception:  # noqa: BLE001
-                    pass
-            cache.clear()
+        # drop every dedup memo so the build path runs from scratch
+        memo.clear(
+            spark,
+            ("dedup.pairs", dirty_dir),
+            ("dedup.shingles", dirty_dir),
+            ("dedup.reps", dirty_dir),
+        )
         return dedup.lsh_candidate_pairs(spark, dirty_dir)
 
     inline = {
         (r["doc_a"], r["doc_b"]) for r in fresh_pairs().collect()
     }
     # memo path: pre-build the shingle index, then rebuild the pairs
-    for cache in (dedup._PAIR_CACHE,):
-        cache.clear()
-    dedup._PAIR_CACHE.clear()
+    memo.clear(spark, ("dedup.pairs", dirty_dir))
     dedup._rep_shingled(spark, dirty_dir)  # memo now present
-    key = (spark.sparkContext.applicationId, dirty_dir)
-    assert key in dedup._REP_SHINGLED_CACHE
+    assert memo.lookup(spark, ("dedup.shingles", dirty_dir)) is not None
     via_memo = {
         (r["doc_a"], r["doc_b"])
         for r in dedup.lsh_candidate_pairs(spark, dirty_dir).collect()
