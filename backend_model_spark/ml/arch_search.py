@@ -11,9 +11,9 @@ distributed trainer (ml/train_distributed.py), surfaced as
 driver-checked registry entries.
 
 Why this objective makes the champions PINNABLE: every trial is a
-:func:`~backend_model_spark.ml.train_distributed.train_distributed`
-fit, which is deterministic by construction (order-independent dyadic
-gradient sums, exact integer moments, md5 init — see that module).
+:func:`~backend_model_spark.ml.train_distributed.fit`, which is
+deterministic by construction (order-independent dyadic gradient
+sums, exact integer moments, md5 init — see that module).
 TPE's proposals consume a seeded ``random.Random`` stream, so the full
 trial path — and hence the champion (params, quantized loss) — is a
 pure function of (rows, seed, space): the oracle can state it as
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from backend_model_spark.memo import memo
 from backend_model_spark.ml import tuning
-from backend_model_spark.ml.train_distributed import train_distributed
+from backend_model_spark.ml.train_distributed import fit
 
 # shared trial schedule: fewer epochs than the registered trainer —
 # tuning ranks architectures, it does not ship weights
@@ -67,19 +67,15 @@ def _objective(
     TUNE_EPOCHS distributed fit (over the ``row_filter`` subset when
     given). Quantizing the score INSIDE the objective makes ties and
     comparisons grid-exact for both strategies and for the pinned
-    oracle literals. Memoized per configuration, shared by the grid
-    entry, the TPE entry and the compare entry so the plan sweep +
-    driver never refit a configuration twice."""
-    lr_q = math.floor(lr * 1e4 + 0.5) / 1e4
-
-    def build():
-        _, losses, _ = train_distributed(
-            spark, sf_dir, h1=h1, h2=h2, leaky=TUNE_LEAKY, lr=lr_q,
-            epochs=TUNE_EPOCHS, row_filter=row_filter,
-        )
-        return math.floor(losses[-1] * 1e6 + 0.5) / 1e6
-
-    return memo(spark, ("arch.objective", sf_dir, h1, h2, lr_q, row_filter), build)
+    oracle literals. The fit memo is shared by the grid entry, the TPE
+    entry and the compare entry so the plan sweep + driver never refit
+    a configuration twice."""
+    _, losses, _ = fit(
+        spark, sf_dir, h1=h1, h2=h2, leaky=TUNE_LEAKY,
+        lr=math.floor(lr * 1e4 + 0.5) / 1e4, epochs=TUNE_EPOCHS,
+        row_filter=row_filter,
+    )
+    return math.floor(losses[-1] * 1e6 + 0.5) / 1e6
 
 
 def _search(spark: SparkSession, sf_dir: str) -> dict:

@@ -8,19 +8,31 @@ those nets bit-exactly (ml/mlp.py) but trained them OFFLINE in
 single-node numpy (scripts/train_mlp.py).  This module closes the last
 reference-capability gap (round-9 verdict ask #1): the net is trained
 IN-ENGINE, data-parallel, with the proven sufficient-statistic shape of
-``ml_logistic_irls`` (operators/ml_queries.py) — per epoch the
-executors reduce the full-batch gradient as ONE map-side pass; the
-driver applies the update to a tiny weight vector and broadcasts it
-into the next epoch.  The driver never sees rows — only the ~P+2
-sufficient statistics per epoch.
+``ml_logistic_irls`` (operators/ml_queries.py) — per step the
+executors reduce the batch gradient as ONE map-side pass; the driver
+applies the update to a tiny weight vector and broadcasts it into the
+next step.  The driver never sees rows — only the ~P+2 sufficient
+statistics per step.
 
-Plan shape per epoch: persisted integer feature frame -> mapInPandas
-(numpy forward+backward per Arrow batch, per-row gradient contributions
-QUANTIZED then summed per batch) -> posexplode -> groupBy(pos).sum —
-one tiny shuffle of #batches × (P+2) doubles -> P+2 scalars to the
-driver.  At 100 TB this is the standard data-parallel full-batch step:
-narrow scan + a reduction whose width is the PARAMETER count, not the
-row count; parallelism = input splits; the weights broadcast (~KB).
+ONE trainer loop (:func:`_descend`): every epoch runs the
+content-addressed batches 0..NB-1 in fixed order, one optimizer step
+per non-empty batch, then one trailing full-batch evaluation.  Batch
+membership is ``h % NB`` where ``h`` is the first 32 md5 bits of the
+row's exact integer tuple — a pure function of the data, no RNG, no
+partitioning dependence.  Full-batch GD/Adam is ``num_batches=1``;
+mini-batch SGD reads every row once per epoch across its NB
+reductions but applies NB updates instead of 1.  The distributed
+trainer and its serial numpy twin differ only in the reduction they
+hand the loop.
+
+Plan shape per step: persisted integer feature frame -> (batch
+filter) -> mapInPandas (numpy forward+backward per Arrow batch,
+per-row gradient contributions QUANTIZED then summed per batch) ->
+posexplode -> groupBy(pos).sum — one tiny shuffle of #batches × (P+2)
+doubles -> P+2 scalars to the driver.  At 100 TB this is the standard
+data-parallel step: narrow scan + a reduction whose width is the
+PARAMETER count, not the row count; parallelism = input splits; the
+weights broadcast (~KB).
 
 DETERMINISM BY CONSTRUCTION (the property the certificate oracle and
 the serial-parity test pin):
@@ -46,14 +58,16 @@ the serial-parity test pin):
 Together: the full weight trajectory is a pure function of (rows,
 hyperparameters), reproducible across partitionings, schedulers and
 engines.  tests/test_train_distributed.py holds the distributed fit
-bit-equal to a serial numpy twin on the same rows, and the registered
-entry pins the final quantized-weight md5 checksum in its DuckDB
-oracle as a literal.
+bit-equal to the serial numpy twin on the same rows, and the
+registered entries pin the final quantized-weight md5 checksums in
+their DuckDB oracles as literals (scripts/pin_arch_search.py prints
+them).
 """
 
 from __future__ import annotations
 
 import hashlib
+import inspect
 import math
 
 import numpy as np
@@ -76,6 +90,12 @@ TRAIN_LEAKY = 0.25
 TRAIN_LR = 0.15  # monotone-decrease margin measured: mono up to ≥0.2, diverges by 0.3
 TRAIN_EPOCHS = 16
 FEATURES = ["x1", "x2", "x3", "x4"]
+
+# mini-batch schedule (round 11): same scan I/O per epoch as full GD,
+# 8 updates per epoch instead of 1
+MB_NUM_BATCHES = 8
+MB_EPOCHS = 8
+MB_LR = 0.15  # same stable step as full GD; 8x8=64 updates vs GD's 8
 
 
 def _md5_unit(tag: str) -> float:
@@ -124,6 +144,17 @@ def _quant(v: np.ndarray, qg: float) -> np.ndarray:
     return np.floor(np.clip(v, -CLIP, CLIP) * qg) / qg
 
 
+def _forward(xs: np.ndarray, wts: list[np.ndarray], leaky: float) -> tuple:
+    """The net on standardized features: (z1, a1, z2, a2, pred), pred
+    on the normalized target scale. Shared by training and serving."""
+    w1, b1, w2, b2, w3, b3 = wts
+    z1 = _matmul_det(xs, w1) + b1
+    a1 = np.where(z1 >= 0.0, z1, leaky * z1)
+    z2 = _matmul_det(a1, w2) + b2
+    a2 = np.where(z2 >= 0.0, z2, leaky * z2)
+    return z1, a1, z2, a2, (_matmul_det(a2, w3) + b3).ravel()
+
+
 def _epoch_sums(
     xs: np.ndarray, yn: np.ndarray, wts: list[np.ndarray], leaky: float, qg: float
 ) -> np.ndarray:
@@ -133,12 +164,8 @@ def _epoch_sums(
     [grad_W1.., grad_b1.., grad_W2.., grad_b2.., grad_W3.., grad_b3..,
     loss_sum, n] — exactly addable across batches/partitions.
     The 2/n loss scaling is applied driver-side."""
-    w1, b1, w2, b2, w3, b3 = wts
-    z1 = _matmul_det(xs, w1) + b1
-    a1 = np.where(z1 >= 0.0, z1, leaky * z1)
-    z2 = _matmul_det(a1, w2) + b2
-    a2 = np.where(z2 >= 0.0, z2, leaky * z2)
-    pred = (_matmul_det(a2, w3) + b3).ravel()
+    w2, w3 = wts[2], wts[4]
+    z1, a1, z2, a2, pred = _forward(xs, wts, leaky)
     err = pred - yn
 
     g = err[:, None]                                   # n×1   dL/dpred (unscaled)
@@ -234,6 +261,59 @@ def _qg_bits(n: int) -> int:
     return bits
 
 
+def _descend(
+    reduce, h1: int, h2: int, init_tag: str, opt: str, lr: float,
+    epochs: int, num_batches: int,
+) -> tuple[list[np.ndarray], list[float]]:
+    """THE trainer loop. ``reduce(wts, b)`` returns the exact summed
+    statistics (see :func:`_epoch_sums`) of batch ``b``, or of every
+    row when ``b`` is None. Per epoch, batches 0..NB-1 in fixed order,
+    each one optimizer step scaled by that batch's row count; an empty
+    batch is skipped.
+
+    Returns (final weights, losses): per epoch the STREAMED loss (every
+    row scored once, each at the weights current when its batch ran),
+    then one trailing full-batch loss at the final weights. With one
+    batch the streamed loss is the full-batch loss before the step."""
+    wts = _init_weights(h1, h2, init_tag)
+    optimizer = _Optimizer(opt, lr)
+    losses: list[float] = []
+    for _ in range(epochs):
+        loss_sum, seen = 0.0, 0.0
+        for b in range(num_batches):
+            vec = reduce(wts, None if num_batches == 1 else b)
+            if vec[-1] == 0:
+                continue
+            loss_sum += vec[-2]
+            seen += vec[-1]
+            wts = optimizer.step(wts, vec[:-2], vec[-1], h1, h2)
+        losses.append(float(loss_sum / seen))
+    vec = reduce(wts, None)
+    losses.append(float(vec[-2] / vec[-1]))
+    return wts, losses
+
+
+def _mu_sd(n: int, s: int, q: int) -> tuple[float, float]:
+    """Population mean and sd from the exact integer sum and sum of
+    squares (module docstring #3)."""
+    mu = s / n
+    var = q / n - mu * mu
+    return mu, math.sqrt(var) if var > 0 else 1.0
+
+
+def _standardize(x: np.ndarray, y: np.ndarray, m: dict) -> tuple:
+    """(standardized features, normalized target) under moments ``m``."""
+    mus = np.array([m[c][0] for c in FEATURES])
+    sds = np.array([m[c][1] for c in FEATURES])
+    ym, ys = m["y"]
+    return (x - mus) / sds, (y - ym) / ys
+
+
+# ---------------------------------------------------------------------------
+# Distributed trainer
+# ---------------------------------------------------------------------------
+
+
 def _feature_frame(
     spark: SparkSession, sf_dir: str, row_filter: str | None = None
 ) -> DataFrame:
@@ -241,7 +321,10 @@ def _feature_frame(
     4 features the serving net uses (ml/mlp.py) and the Q1-style
     invoice charge via the exact int64 product
     price_cents·(100−disc)·(100+tax) (see ml/mlp.py model-compare for
-    why the literal predict-price task is unlearnable on this data).
+    why the literal predict-price task is unlearnable on this data),
+    plus the row's content hash ``h``: the first 32 md5 bits of the
+    comma-joined exact integers, so batch ``b`` of NB is ``h % NB == b``
+    in Spark SQL and in the serial twin alike.
 
     ``row_filter`` (round 11): an optional SQL predicate over raw
     lineitem columns, applied BEFORE projection — the hook the
@@ -257,12 +340,16 @@ def _feature_frame(
         * (F.lit(100) - F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long"))
         * (F.lit(100) + F.floor(F.col("l_tax") * 100 + F.lit(0.5)).cast("long"))
     )
-    return li.select(
+    feats = li.select(
         F.floor(F.col("l_extendedprice") / 1000.0).cast("long").alias("x1"),
         F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long").alias("x2"),
         F.floor(F.col("l_tax") * 100 + F.lit(0.5)).cast("long").alias("x3"),
         F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("x4"),
         F.floor(charge_e4 / F.lit(1e6) + F.lit(0.5)).cast("long").alias("y"),
+    )
+    tup = F.concat_ws(",", *[F.col(c).cast("string") for c in FEATURES + ["y"]])
+    return feats.withColumn(
+        "h", F.conv(F.substring(F.md5(tup), 1, 8), 16, 10).cast("long")
     )
 
 
@@ -279,10 +366,7 @@ def _exact_moments(feats: DataFrame) -> dict:
     n = int(row["n"])
     out = {"n": n}
     for c in FEATURES + ["y"]:
-        s, q = int(row[f"s_{c}"]), int(row[f"q_{c}"])
-        mu = s / n
-        var = q / n - mu * mu
-        out[c] = (mu, math.sqrt(var) if var > 0 else 1.0)
+        out[c] = _mu_sd(n, int(row[f"s_{c}"]), int(row[f"q_{c}"]))
     return out
 
 
@@ -291,8 +375,8 @@ def _feats_and_moments(
 ):
     """(persisted feature frame, exact moments), memoized per
     (application, sf_dir, row_filter): one ~MB-scale cached frame per
-    corpus, shared by the registered trainer and every
-    architecture-search trial."""
+    corpus, shared by every fit — full-batch, mini-batch and every
+    architecture-search trial — and by train-then-serve's scoring."""
 
     def build():
         # balance the cached partitions ONCE before the many epoch
@@ -312,6 +396,45 @@ def _feats_and_moments(
     return memo(spark, ("mlp.feats", sf_dir, row_filter), build)
 
 
+def _reduce_sums(
+    df: DataFrame, wts: list[np.ndarray], leaky: float, qg: float, m: dict
+) -> np.ndarray:
+    """One exact reduction over ``df``: broadcast weights, mapInPandas
+    per-batch quantized sufficient statistics over the projected
+    features and target, posexplode + groupBy(pos).sum (reduction
+    width = parameter count, never rows)."""
+    import pandas as pd
+
+    bc = df.sparkSession.sparkContext.broadcast([w.tolist() for w in wts])
+
+    def part(batches):
+        wl = [np.asarray(w, dtype=np.float64) for w in bc.value]
+        for pdf in batches:
+            xs, yn = _standardize(
+                pdf[FEATURES].to_numpy(dtype=np.float64),
+                pdf["y"].to_numpy(dtype=np.float64),
+                m,
+            )
+            yield pd.DataFrame({"s": [_epoch_sums(xs, yn, wl, leaky, qg).tolist()]})
+
+    red = (
+        df.select(*FEATURES, "y")
+        .mapInPandas(part, "s array<double>")
+        .select(F.posexplode("s"))
+        .groupBy("pos")
+        .agg(F.sum("col").alias("v"))
+        .collect()
+    )
+    bc.destroy()
+    # an EMPTY df (a content-addressed batch that matched no rows on
+    # some corpus) yields zero reduction rows — return all-zero sums
+    # of the full width so the loop's empty-batch skip fires
+    vec = np.zeros(sum(w.size for w in wts) + 2)
+    for r in red:
+        vec[r["pos"]] = r["v"]
+    return vec
+
+
 def train_distributed(
     spark: SparkSession,
     sf_dir: str,
@@ -323,60 +446,39 @@ def train_distributed(
     init_tag: str = "fcff-v1",
     opt: str = "gd",
     row_filter: str | None = None,
+    num_batches: int = 1,
 ) -> tuple[list[np.ndarray], list[float], dict]:
-    """Data-parallel full-batch training on the standardized
-    regression — update rule ``opt`` ('gd' or 'adam', see
-    :class:`_Optimizer`); ``row_filter`` restricts the epoch scans to
-    a deterministic SQL-predicate subset (see :func:`_feature_frame`).
+    """Data-parallel training on the standardized regression — update
+    rule ``opt`` ('gd' or 'adam', see :class:`_Optimizer`) over
+    ``num_batches`` content-addressed batches per epoch (1 = full
+    batch); ``row_filter`` restricts the scans to a deterministic
+    SQL-predicate subset (see :func:`_feature_frame`).
 
-    Returns (final weights on the 2^-16 grid, normalized-MSE loss per
-    epoch with one trailing post-update evaluation — len epochs+1,
-    exact-moment dict).  Deterministic: see module docstring."""
-    import pandas as pd
-
+    Returns (final weights on the 2^-16 grid, normalized-MSE losses as
+    :func:`_descend` defines them — len epochs+1, exact-moment dict).
+    Deterministic: see module docstring."""
     feats, m = _feats_and_moments(spark, sf_dir, row_filter)
-    n = m["n"]
-    qg = float(1 << _qg_bits(n))
-    mus = np.array([m[c][0] for c in FEATURES])
-    sds = np.array([m[c][1] for c in FEATURES])
-    ym, ys = m["y"]
-    wts = _init_weights(h1, h2, init_tag)
-    optimizer = _Optimizer(opt, lr)
-    losses: list[float] = []
-    sc = spark.sparkContext
-    for ep in range(epochs + 1):
-        bc = sc.broadcast([w.tolist() for w in wts])
-        lk = float(leaky)
-        qg_b = float(qg)
+    qg = float(1 << _qg_bits(m["n"]))
 
-        def part(batches, _bc=bc, _lk=lk, _qg=qg_b, _mus=mus.tolist(),
-                 _sds=sds.tolist(), _ym=float(ym), _ys=float(ys)):
-            wl = [np.asarray(w, dtype=np.float64) for w in _bc.value]
-            mu_a, sd_a = np.asarray(_mus), np.asarray(_sds)
-            for pdf in batches:
-                x = pdf[FEATURES].to_numpy(dtype=np.float64)
-                y = pdf["y"].to_numpy(dtype=np.float64)
-                xs = (x - mu_a) / sd_a
-                yn = (y - _ym) / _ys
-                s = _epoch_sums(xs, yn, wl, _lk, _qg)
-                yield pd.DataFrame({"s": [s.tolist()]})
+    def reduce(wts, b):
+        rows = feats if b is None else feats.filter(F.col("h") % num_batches == b)
+        return _reduce_sums(rows, wts, leaky, qg, m)
 
-        red = (
-            feats.mapInPandas(part, "s array<double>")
-            .select(F.posexplode("s"))
-            .groupBy("pos")
-            .agg(F.sum("col").alias("v"))
-            .collect()
-        )
-        vec = np.zeros(max(r["pos"] for r in red) + 1)
-        for r in red:
-            vec[r["pos"]] = r["v"]
-        n_seen = vec[-1]
-        losses.append(float(vec[-2] / n_seen))
-        bc.destroy()
-        if ep < epochs:
-            wts = optimizer.step(wts, vec[:-2], n_seen, h1, h2)
+    wts, losses = _descend(reduce, h1, h2, init_tag, opt, lr, epochs, num_batches)
     return wts, losses, m
+
+
+def fit(spark: SparkSession, sf_dir: str, **hp):
+    """(wts, losses, moments) of ``train_distributed(spark, sf_dir,
+    **hp)``: ONE fit per application and hyperparameter set, keyed
+    with the defaults bound so every spelling of the same fit shares
+    it — the registered trainers, train-then-serve and every tuning
+    trial (the fit is deterministic; the registry plan sweep
+    constructs entries repeatedly)."""
+    args = inspect.signature(train_distributed).bind(spark, sf_dir, **hp)
+    args.apply_defaults()
+    key = tuple(args.arguments.items())[1:]  # all but the session
+    return memo(spark, ("mlp.fit", *key), lambda: train_distributed(spark, sf_dir, **hp))
 
 
 # ---------------------------------------------------------------------------
@@ -424,41 +526,33 @@ def train_serial(
     epochs: int = TRAIN_EPOCHS,
     init_tag: str = "fcff-v1",
     opt: str = "gd",
+    num_batches: int = 1,
 ) -> tuple[list[np.ndarray], list[float]]:
     """Single-process twin of :func:`train_distributed` on the same
-    rows — identical by construction IF (and only if) the distributed
-    sums really are order-independent; the parity test holds the two
-    bit-equal."""
+    rows — the same loop over in-memory arrays, so identical IF (and
+    only if) the distributed sums really are order-independent; the
+    parity test holds the two bit-equal."""
     x, y = load_xy_serial(sf_dir)
     n = len(y)
+    xy = np.concatenate([x, y[:, None]], axis=1).astype(np.int64)
+    m = {"n": n}
+    for c, v in zip(FEATURES + ["y"], xy.T):
+        m[c] = _mu_sd(n, int(v.sum()), int((v * v).sum()))
     qg = float(1 << _qg_bits(n))
-    # exact integer moments, same as _exact_moments
-    xi = x.astype(np.int64)
-    yi = y.astype(np.int64)
-    mus, sds = [], []
-    for col in range(4):
-        s = int(xi[:, col].sum())
-        q = int((xi[:, col] * xi[:, col]).sum())
-        mu = s / n
-        var = q / n - mu * mu
-        mus.append(mu)
-        sds.append(math.sqrt(var) if var > 0 else 1.0)
-    sy, qy = int(yi.sum()), int((yi * yi).sum())
-    ym = sy / n
-    vy = qy / n - ym * ym
-    ys = math.sqrt(vy) if vy > 0 else 1.0
+    xs, yn = _standardize(x, y, m)
+    # the frame's h column, row by row; only batching reads it
+    h = None if num_batches == 1 else np.array(
+        [
+            int(hashlib.md5(",".join(map(str, r)).encode()).hexdigest()[:8], 16)
+            for r in xy.tolist()
+        ]
+    )
 
-    xs = (x - np.array(mus)) / np.array(sds)
-    yn = (y - ym) / ys
-    wts = _init_weights(h1, h2, init_tag)
-    optimizer = _Optimizer(opt, lr)
-    losses: list[float] = []
-    for ep in range(epochs + 1):
-        vec = _epoch_sums(xs, yn, wts, leaky, qg)
-        losses.append(float(vec[-2] / vec[-1]))
-        if ep < epochs:
-            wts = optimizer.step(wts, vec[:-2], vec[-1], h1, h2)
-    return wts, losses
+    def reduce(wts, b):
+        sel = slice(None) if b is None else h % num_batches == b
+        return _epoch_sums(xs[sel], yn[sel], wts, leaky, qg)
+
+    return _descend(reduce, h1, h2, init_tag, opt, lr, epochs, num_batches)
 
 
 def weight_checksum(wts: list[np.ndarray]) -> int:
@@ -471,20 +565,8 @@ def weight_checksum(wts: list[np.ndarray]) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Registered entry
+# Registered entries
 # ---------------------------------------------------------------------------
-
-def _fit_cached(spark: SparkSession, sf_dir: str, opt: str = "gd"):
-    """(wts, losses, moments): ONE fit per application, shared by the
-    training certificate and the train-then-serve composition (the fit
-    is deterministic; the registry plan sweep constructs entries
-    repeatedly)."""
-    lr = ADAM_LR if opt == "adam" else TRAIN_LR
-    return memo(
-        spark,
-        ("mlp.fit", sf_dir, opt),
-        lambda: train_distributed(spark, sf_dir, lr=lr, opt=opt),
-    )
 
 
 def mlp_train_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -522,7 +604,7 @@ def mlp_train_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     auto-adapted to n by :func:`_qg_bits`, so the order-independence
     guarantee survives any corpus size.
     """
-    wts, losses, m = _fit_cached(spark, sf_dir)
+    wts, losses, m = fit(spark, sf_dir)
     mono = all(losses[i + 1] < losses[i] for i in range(len(losses) - 1))
     row = (
         int(m["n"]),
@@ -540,14 +622,11 @@ def mlp_train_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# pinned literals generated by the serial twin at sf0.01 (the driver's
-# correctness SF) — regenerate with:
-#   python -c "from backend_model_spark.ml.train_distributed import *; \
-#     w,l = train_serial('/root/testdata/sf0.01'); import math; \
-#     print(math.floor(l[0]*1e6+.5), math.floor(l[-1]*1e6+.5), weight_checksum(w))"
-# literals pinned for BOTH checked scales (the driver compares at
-# sf0.01, tests/test_oracle_parity.py at sf0.001); any other corpus
-# yields NULL and fails loudly rather than false-greening
+# pinned literals from the serial twin for BOTH checked scales (the
+# driver compares at sf0.01, tests/test_oracle_parity.py at sf0.001);
+# any other corpus yields NULL and fails loudly rather than
+# false-greening. Every trainer literal in this module is printed by
+# scripts/pin_arch_search.py.
 MLP_TRAIN_ORACLE = """
 SELECT
   CAST(COUNT(*) AS BIGINT) AS n,
@@ -571,8 +650,8 @@ def mlp_train_then_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ml/mlp.py — broadcast weights + one zero-shuffle mapInPandas
     scoring pass — and evaluated with exact integer error sums.
 
-    Per row: the deterministic forward pass (same no-BLAS
-    :func:`_matmul_det` math as training) on standardized features,
+    Per row: the deterministic forward pass (the training
+    :func:`_forward`, same no-BLAS math) on standardized features,
     de-normalized to dollars, edge-rounded to integer cents; the
     actual is the integer-dollar target × 100. Errors are int64
     cents, SSE accumulates in decimal(38,0), so the rollup is exact
@@ -587,25 +666,17 @@ def mlp_train_then_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`mlp_train_distributed`)."""
     import pandas as pd
 
-    wts, losses, m = _fit_cached(spark, sf_dir)
-    mus = [m[c][0] for c in FEATURES]
-    sds = [m[c][1] for c in FEATURES]
+    wts, losses, m = fit(spark, sf_dir)
     ym, ys = m["y"]
     bc = spark.sparkContext.broadcast([w.tolist() for w in wts])
 
-    def score(batches, _mus=mus, _sds=sds, _ym=float(ym), _ys=float(ys)):
+    def score(batches):
         wl = [np.asarray(w, dtype=np.float64) for w in bc.value]
-        w1, b1, w2, b2, w3, b3 = wl
-        mu_a, sd_a = np.asarray(_mus), np.asarray(_sds)
         for pdf in batches:
             x = pdf[FEATURES].to_numpy(dtype=np.float64)
             y = pdf["y"].to_numpy(dtype=np.float64)
-            xs = (x - mu_a) / sd_a
-            z1 = _matmul_det(xs, w1) + b1
-            a1 = np.where(z1 >= 0.0, z1, TRAIN_LEAKY * z1)
-            z2 = _matmul_det(a1, w2) + b2
-            a2 = np.where(z2 >= 0.0, z2, TRAIN_LEAKY * z2)
-            pred = (_matmul_det(a2, w3) + b3).ravel() * _ys + _ym
+            xs, _ = _standardize(x, y, m)
+            pred = _forward(xs, wl, TRAIN_LEAKY)[-1] * ys + ym
             yield pd.DataFrame(
                 {
                     "pred_cents": np.floor(pred * 100.0 + 0.5).astype(np.int64),
@@ -613,8 +684,10 @@ def mlp_train_then_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    scored = _feats_and_moments(spark, sf_dir)[0].mapInPandas(
-        score, "pred_cents long, actual_cents long"
+    scored = (
+        _feats_and_moments(spark, sf_dir)[0]
+        .select(*FEATURES, "y")
+        .mapInPandas(score, "pred_cents long, actual_cents long")
     )
     d = (F.col("pred_cents") - F.col("actual_cents")).cast("decimal(38,0)")
     agg = scored.agg(
@@ -648,8 +721,6 @@ def mlp_train_then_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# literals from the deterministic fit at sf0.01 (scripts/pin_arch_search.py
-# prints the trainer block; these three come from one mlp_train_then_serve run)
 MLP_TRAIN_SERVE_ORACLE = """
 SELECT
   CAST(COUNT(*) AS BIGINT) AS n,
@@ -683,8 +754,8 @@ def mlp_train_adam(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical plan to the GD trainer — the optimizer is pure
     driver arithmetic on P scalars."""
-    wts, losses, m = _fit_cached(spark, sf_dir, opt="adam")
-    _, losses_gd, _ = _fit_cached(spark, sf_dir)
+    wts, losses, m = fit(spark, sf_dir, lr=ADAM_LR, opt="adam")
+    _, losses_gd, _ = fit(spark, sf_dir)
     row = (
         int(m["n"]),
         TRAIN_EPOCHS,
@@ -716,226 +787,10 @@ FROM lineitem
 """
 
 
-# ---------------------------------------------------------------------------
-# Mini-batch SGD variant (round 11) — the documented scale answer to
-# "full-batch GD costs one full corpus scan per epoch": with NB
-# content-addressed batches, ONE epoch still reads every row exactly
-# once across its NB reduction jobs, but applies NB weight updates
-# instead of 1 — more optimization progress per unit of scan I/O,
-# which is the quantity that matters at 100 TB. Batch membership is
-# content-addressed (md5 of the exact integer feature/target tuple
-# mod NB), so it is a pure function of the data — no RNG, no
-# partitioning dependence — and the whole trajectory stays
-# bit-deterministic under the same dyadic-sum argument as the
-# full-batch trainer (each batch reduction is an order-independent
-# exact sum; updates happen in the fixed batch order 0..NB-1).
-# ---------------------------------------------------------------------------
-
-MB_NUM_BATCHES = 8
-MB_EPOCHS = 8
-MB_LR = 0.15  # same stable step as full GD; 8x8=64 updates vs GD's 8
-
-
-def _bucket_col(num_batches: int = MB_NUM_BATCHES):
-    """Content-addressed batch id: md5 over the canonical decimal
-    rendering of the exact integer tuple, first 32 bits mod NB —
-    identical arithmetic in Spark SQL and the serial twin."""
-    s = F.concat_ws(
-        ",", *[F.col(c).cast("string") for c in FEATURES + ["y"]]
-    )
-    return (
-        F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-        % num_batches
-    ).alias("b")
-
-
-def _mb_feats(spark: SparkSession, sf_dir: str, num_batches: int = MB_NUM_BATCHES):
-    """(persisted feature frame WITH the batch column, moments),
-    memoized per (application, sf_dir, num_batches). Moments are NOT
-    recomputed — shared with :func:`_feats_and_moments`. At cluster
-    scale this frame would be written clustered by b (sort or
-    partition on the batch id) so each batch job's filter prunes to
-    1/NB of the files; locally the in-memory columnar scan's batch
-    stats do the skipping."""
-
-    def build():
-        base, m = _feats_and_moments(spark, sf_dir)
-        return base.select(*FEATURES, "y", _bucket_col(num_batches)).persist(), m
-
-    return memo(spark, ("mlp.mb_feats", sf_dir, num_batches), build)
-
-
-def _reduce_sums(
-    df: DataFrame,
-    wts: list[np.ndarray],
-    leaky: float,
-    qg: float,
-    mus: np.ndarray,
-    sds: np.ndarray,
-    ym: float,
-    ys: float,
-) -> np.ndarray:
-    """One exact reduction over ``df``: broadcast weights, mapInPandas
-    per-batch quantized sufficient statistics, posexplode +
-    groupBy(pos).sum — the same P+2-wide shape as the full-batch epoch
-    (reduction width = parameter count, never rows)."""
-    import pandas as pd
-
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast([w.tolist() for w in wts])
-    lk, qg_b = float(leaky), float(qg)
-
-    def part(batches, _bc=bc, _lk=lk, _qg=qg_b, _mus=mus.tolist(),
-             _sds=sds.tolist(), _ym=float(ym), _ys=float(ys)):
-        wl = [np.asarray(w, dtype=np.float64) for w in _bc.value]
-        mu_a, sd_a = np.asarray(_mus), np.asarray(_sds)
-        for pdf in batches:
-            x = pdf[FEATURES].to_numpy(dtype=np.float64)
-            y = pdf["y"].to_numpy(dtype=np.float64)
-            xs = (x - mu_a) / sd_a
-            yn = (y - _ym) / _ys
-            s = _epoch_sums(xs, yn, wl, _lk, _qg)
-            yield pd.DataFrame({"s": [s.tolist()]})
-
-    red = (
-        df.mapInPandas(part, "s array<double>")
-        .select(F.posexplode("s"))
-        .groupBy("pos")
-        .agg(F.sum("col").alias("v"))
-        .collect()
-    )
-    bc.destroy()
-    # an EMPTY df (a content-addressed bucket that matched no rows on
-    # some corpus) yields zero reduction rows — return all-zero sums
-    # of the full width so the caller's n_b == 0 skip fires, exactly
-    # as the serial twin's `if not sel.any(): continue` does
-    width = sum(w.size for w in wts) + 2
-    vec = np.zeros(width)
-    for r in red:
-        vec[r["pos"]] = r["v"]
-    return vec
-
-
-def train_distributed_minibatch(
-    spark: SparkSession,
-    sf_dir: str,
-    h1: int = TRAIN_H1,
-    h2: int = TRAIN_H2,
-    leaky: float = TRAIN_LEAKY,
-    lr: float = MB_LR,
-    epochs: int = MB_EPOCHS,
-    num_batches: int = MB_NUM_BATCHES,
-    init_tag: str = "fcff-v1",
-) -> tuple[list[np.ndarray], list[float], float, dict]:
-    """Deterministic mini-batch SGD: per epoch, ``num_batches``
-    reduction jobs in fixed batch order, each an exact dyadic-sum
-    gradient over its content-addressed batch, each followed by a
-    driver-side GD step scaled by THAT batch's row count.
-
-    Returns (final weights, per-epoch STREAMED losses [epochs entries:
-    Σ batch loss sums / n — every row scored exactly once per epoch,
-    each at the weights current when its batch ran], final FULL-batch
-    loss from one trailing evaluation pass, moments). Scan budget:
-    epochs + 1 full passes over the persisted frame (NB filtered jobs
-    per epoch touch disjoint row subsets) + the init evaluation —
-    identical I/O to full GD at the same epoch count, with NB× the
-    updates."""
-    feats, m = _mb_feats(spark, sf_dir, num_batches)
-    n = m["n"]
-    qg = float(1 << _qg_bits(n))
-    mus = np.array([m[c][0] for c in FEATURES])
-    sds = np.array([m[c][1] for c in FEATURES])
-    ym, ys = m["y"]
-    wts = _init_weights(h1, h2, init_tag)
-    losses: list[float] = []
-    for _ep in range(epochs):
-        ep_loss_sum, ep_n = 0.0, 0.0
-        for b in range(num_batches):
-            vec = _reduce_sums(
-                feats.filter(F.col("b") == b), wts, leaky, qg, mus, sds, ym, ys
-            )
-            n_b = vec[-1]
-            if n_b == 0:
-                continue
-            ep_loss_sum += vec[-2]
-            ep_n += n_b
-            upd = (lr * 2.0 / n_b) * vec[:-2]
-            flat = np.concatenate([np.ravel(w) for w in wts]) - upd
-            wts = [
-                np.floor(w * WG + 0.5) / WG for w in _unflatten(flat, h1, h2)
-            ]
-        losses.append(float(ep_loss_sum / ep_n))
-    final_vec = _reduce_sums(feats, wts, leaky, qg, mus, sds, ym, ys)
-    final_loss = float(final_vec[-2] / final_vec[-1])
-    return wts, losses, final_loss, m
-
-
-def train_serial_minibatch(
-    sf_dir: str,
-    h1: int = TRAIN_H1,
-    h2: int = TRAIN_H2,
-    leaky: float = TRAIN_LEAKY,
-    lr: float = MB_LR,
-    epochs: int = MB_EPOCHS,
-    num_batches: int = MB_NUM_BATCHES,
-    init_tag: str = "fcff-v1",
-) -> tuple[list[np.ndarray], list[float], float]:
-    """Single-process twin of :func:`train_distributed_minibatch` —
-    bit-equal by construction iff the per-batch reductions really are
-    order-independent (the parity test's claim)."""
-    x, y = load_xy_serial(sf_dir)
-    n = len(y)
-    qg = float(1 << _qg_bits(n))
-    xi, yi = x.astype(np.int64), y.astype(np.int64)
-    mus, sds = [], []
-    for col in range(4):
-        s, q = int(xi[:, col].sum()), int((xi[:, col] * xi[:, col]).sum())
-        mu = s / n
-        var = q / n - mu * mu
-        mus.append(mu)
-        sds.append(math.sqrt(var) if var > 0 else 1.0)
-    sy, qy = int(yi.sum()), int((yi * yi).sum())
-    ym = sy / n
-    vy = qy / n - ym * ym
-    ys = math.sqrt(vy) if vy > 0 else 1.0
-    bucket = np.array(
-        [
-            int(
-                hashlib.md5(
-                    ",".join(str(int(v)) for v in row).encode()
-                ).hexdigest()[:8],
-                16,
-            )
-            % num_batches
-            for row in np.concatenate([xi, yi[:, None]], axis=1)
-        ]
-    )
-    xs = (x - np.array(mus)) / np.array(sds)
-    yn = (y - ym) / ys
-    wts = _init_weights(h1, h2, init_tag)
-    losses: list[float] = []
-    for _ep in range(epochs):
-        ep_loss_sum, ep_n = 0.0, 0.0
-        for b in range(num_batches):
-            sel = bucket == b
-            if not sel.any():
-                continue
-            vec = _epoch_sums(xs[sel], yn[sel], wts, leaky, qg)
-            ep_loss_sum += vec[-2]
-            ep_n += vec[-1]
-            upd = (lr * 2.0 / vec[-1]) * vec[:-2]
-            flat = np.concatenate([np.ravel(w) for w in wts]) - upd
-            wts = [
-                np.floor(w * WG + 0.5) / WG for w in _unflatten(flat, h1, h2)
-            ]
-        losses.append(float(ep_loss_sum / ep_n))
-    final_vec = _epoch_sums(xs, yn, wts, leaky, qg)
-    final_loss = float(final_vec[-2] / final_vec[-1])
-    return wts, losses, final_loss
-
-
 def mlp_train_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REGISTERED face of :func:`train_distributed_minibatch`.
+    """REGISTERED face of :func:`train_distributed` with
+    ``MB_NUM_BATCHES`` batches per epoch — the documented scale answer
+    to "full-batch GD costs one full corpus scan per epoch".
 
     Certificates in the hashed row:
 
@@ -956,10 +811,11 @@ def mlp_train_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
       any partitioning (parity with the serial twin is separately
       held bit-equal by tests/test_train_distributed.py).
     """
-    wts, losses, final_loss, m = memo(
-        spark, ("mlp.mb_fit", sf_dir), lambda: train_distributed_minibatch(spark, sf_dir)
+    wts, losses, m = fit(
+        spark, sf_dir, lr=MB_LR, epochs=MB_EPOCHS, num_batches=MB_NUM_BATCHES
     )
-    _, losses_gd, _ = _fit_cached(spark, sf_dir)
+    _, losses_gd, _ = fit(spark, sf_dir)
+    final_loss = losses[-1]
     row = (
         int(m["n"]),
         MB_EPOCHS,
@@ -980,10 +836,6 @@ def mlp_train_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# literals from the serial twin (regenerate:
-#   python -c "from backend_model_spark.ml.train_distributed import *; \
-#     w,l,fl = train_serial_minibatch('/root/testdata/sf0.01'); import math; \
-#     print(math.floor(fl*1e6+.5), weight_checksum(w))")
 MLP_TRAIN_MINIBATCH_ORACLE = """
 SELECT
   CAST(COUNT(*) AS BIGINT) AS n,

@@ -44,6 +44,7 @@ SAMPLE = (
     "join_q5_region_revenue",
     "ml_mlp_batch_inference",
     "ml_mlp_train_distributed",
+    "ml_mlp_train_minibatch",
     "q1_pricing_summary",
     "sample_stratified_hash",
     "sim_cosine_topk_bruteforce",

@@ -81,3 +81,10 @@ def test_new_application_purges_old_entries(spark, entries):
     # dropped without an unpersist: the old context is gone
     assert _live(frame)
     frame.unpersist()
+
+
+def test_fit_memo_binds_defaults(spark, sf_dir):
+    """Two spellings of the same trainer fit share one memo entry."""
+    from backend_model_spark.ml.train_distributed import TRAIN_LR, fit
+
+    assert fit(spark, sf_dir, lr=TRAIN_LR) is fit(spark, sf_dir)

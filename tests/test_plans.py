@@ -733,14 +733,17 @@ def test_build_runs_only_its_own_jobs(spark, sf_dir, name):
 # its own. After clearCache() a hit rebuilds each dead frame with one
 # count(), which runs one job per query stage under AQE. The BRP
 # certificate runs its own checks at build, and the sf0.001 vectors
-# are duplicate-free, so its memo owns no frame. The trainer's fit is
-# a value memo.
+# are duplicate-free, so its memo owns no frame. The trainer fits and
+# the tuning searches are value memos.
 _MEMO_BUILD_JOBS = {
     "dedup_minhash_lsh_candidates": (0, 7),
     "dedup_embedding_neardup": (0, 5),
     "dedup_semantic_semdedup": (0, 11),
     "mllib_brp_ann_join": (41, 41),
+    "ml_mlp_train_adam": (0, 0),
     "ml_mlp_train_distributed": (0, 0),
+    "ml_mlp_train_minibatch": (0, 0),
+    "ml_tuning_grid_champion": (0, 0),
 }
 
 

@@ -41,11 +41,25 @@ def _std_xy(sf_dir):
     return (x - mus) / sds, (y - ym) / ys
 
 
-def test_distributed_matches_serial_bitwise(spark, sf_dir):
+@pytest.mark.parametrize("opt,num_batches", [("gd", 1), ("adam", 1), ("gd", 4)])
+def test_distributed_matches_serial_bitwise(spark, sf_dir, opt, num_batches):
     """The whole point: any-partitioning distributed fit == serial fit,
-    bit for bit, for weights AND the loss trajectory."""
-    wd, ld, m = train_distributed(spark, sf_dir, epochs=5)
-    ws, ls = train_serial(sf_dir, epochs=5)
+    bit for bit, for weights AND the loss trajectory — for plain GD,
+    for Adam (its moments consume only the order-independent sums) and
+    for mini-batches (each step a filtered distributed reduction; the
+    streamed epoch losses and the final full-batch evaluation must
+    match too). Short schedules keep the test fast; the registered
+    entries pin the full schedules via their checksum literals."""
+    from backend_model_spark.ml.train_distributed import ADAM_LR, TRAIN_LR
+
+    hp = dict(
+        lr=ADAM_LR if opt == "adam" else TRAIN_LR,
+        epochs=5 if num_batches == 1 else 2,
+        opt=opt,
+        num_batches=num_batches,
+    )
+    wd, ld, m = train_distributed(spark, sf_dir, **hp)
+    ws, ls = train_serial(sf_dir, **hp)
     assert ld == ls
     assert all((a == b).all() for a, b in zip(wd, ws))
     assert weight_checksum(wd) == weight_checksum(ws)
@@ -207,18 +221,6 @@ def test_arch_compare_marks_unique_champion(spark, sf_dir):
     assert champ["final_loss_q"] <= other["final_loss_q"]
 
 
-def test_adam_distributed_matches_serial_bitwise(spark, sf_dir):
-    """The determinism guarantee extends to the adaptive optimizer:
-    Adam's moments consume only the order-independent sums, so the
-    distributed fit must still be bit-equal to the serial twin."""
-    from backend_model_spark.ml.train_distributed import ADAM_LR
-
-    wd, ld, _ = train_distributed(spark, sf_dir, lr=ADAM_LR, epochs=5, opt="adam")
-    ws, ls = train_serial(sf_dir, lr=ADAM_LR, epochs=5, opt="adam")
-    assert ld == ls
-    assert all((a == b).all() for a, b in zip(wd, ws))
-
-
 def test_adam_beats_gd_at_equal_budget(sf_dir):
     """The head-to-head the registered certificate pins: Adam reaches
     a lower full-batch loss than plain GD at the same 16-epoch budget
@@ -340,27 +342,6 @@ def test_semdedup_matches_independent_brute_force(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_minibatch_matches_serial_bitwise(spark, sf_dir):
-    """Bit-parity of the mini-batch trajectory: 64 sequential updates,
-    each from a filtered distributed reduction, must equal the serial
-    twin exactly — weights, streamed epoch losses AND the final
-    full-batch evaluation. A short schedule keeps the test fast; the
-    registered entry pins the full 8x8 schedule via its checksum
-    literal."""
-    from backend_model_spark.ml.train_distributed import (
-        train_distributed_minibatch,
-        train_serial_minibatch,
-    )
-
-    wd, ld, fd, m = train_distributed_minibatch(
-        spark, sf_dir, epochs=2, num_batches=4
-    )
-    ws, ls, fs = train_serial_minibatch(sf_dir, epochs=2, num_batches=4)
-    assert ld == ls
-    assert fd == fs
-    assert all((a == b).all() for a, b in zip(wd, ws))
-
-
 def test_minibatch_bucket_is_content_addressed(spark, sf_dir):
     """The Spark md5-mod-NB bucket expression and the serial twin's
     hashlib bucket agree row-for-row — batch membership is a pure
@@ -372,15 +353,14 @@ def test_minibatch_bucket_is_content_addressed(spark, sf_dir):
 
     from backend_model_spark.ml.train_distributed import (
         MB_NUM_BATCHES,
-        _bucket_col,
-        _feature_frame,
+        _feats_and_moments,
         load_xy_serial,
     )
 
-    fr = _feature_frame(spark, sf_dir).withColumn("b", _bucket_col())
+    fr = _feats_and_moments(spark, sf_dir)[0]
     got = {
-        tuple(r[:5]): r[5]
-        for r in fr.select("x1", "x2", "x3", "x4", "y", "b").collect()
+        tuple(r[:5]): r[5] % MB_NUM_BATCHES
+        for r in fr.select("x1", "x2", "x3", "x4", "y", "h").collect()
     }
     x, y = load_xy_serial(sf_dir)
     xi, yi = x.astype(int), y.astype(int)
@@ -404,11 +384,14 @@ def test_minibatch_beats_gd_at_equal_passes(sf_dir):
     of corpus passes (and the streamed losses actually decreased)."""
     from backend_model_spark.ml.train_distributed import (
         MB_EPOCHS,
-        train_serial,
-        train_serial_minibatch,
+        MB_LR,
+        MB_NUM_BATCHES,
     )
 
-    _, lmb, fmb = train_serial_minibatch(sf_dir)
+    _, lmb = train_serial(
+        sf_dir, lr=MB_LR, epochs=MB_EPOCHS, num_batches=MB_NUM_BATCHES
+    )
+    fmb = lmb[-1]
     _, lgd = train_serial(sf_dir)
     assert fmb < lgd[MB_EPOCHS + 1]
     assert fmb < lmb[0]
@@ -418,27 +401,22 @@ def test_minibatch_beats_gd_at_equal_passes(sf_dir):
 def test_reduce_sums_empty_input_returns_zero_width(spark, sf_dir):
     """A content-addressed bucket can match zero rows on some corpus:
     the distributed reduction must return all-zero sums of the full
-    parameter width (so the caller's n_b == 0 skip fires, mirroring
-    the serial twin's empty-selection skip), not crash on an empty
-    collect."""
-    import numpy as np
-
+    parameter width (so the trainer loop's empty-batch skip fires, as
+    it does for the serial twin's empty selection), not crash on an
+    empty collect."""
     from pyspark.sql import functions as F
 
     from backend_model_spark.ml.train_distributed import (
+        _feats_and_moments,
         _init_weights,
-        _mb_feats,
         _reduce_sums,
     )
 
-    feats, m = _mb_feats(spark, sf_dir, 4)
+    feats, m = _feats_and_moments(spark, sf_dir)
     wts = _init_weights(4, 4, "fcff-v1")
-    mus = np.array([m[c][0] for c in ["x1", "x2", "x3", "x4"]])
-    sds = np.array([m[c][1] for c in ["x1", "x2", "x3", "x4"]])
-    ym, ys = m["y"]
     vec = _reduce_sums(
-        feats.filter(F.col("b") == 99),  # no such bucket
-        wts, 0.25, float(1 << 16), mus, sds, ym, ys,
+        feats.filter(F.col("h") % 4 == 99),  # no such bucket
+        wts, 0.25, float(1 << 16), m,
     )
     assert vec.shape == (sum(w.size for w in wts) + 2,)
     assert (vec == 0.0).all()
