@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from backend_model_spark.operators.scale_utils import with_global_rank
+from backend_model_spark.operators.scale_utils import sort_bounded, with_global_rank
 from backend_model_spark.sources.tables import load_table
 
 
@@ -102,14 +102,15 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined to orders→lineitem, revenue per nation.
 
     The three dimension joins broadcast; the single real shuffle is
-    orders ⨝ lineitem on orderkey.
+    orders ⨝ lineitem on orderkey. One row per nation, so the result is
+    sorted in one partition (:func:`sort_bounded`).
     """
     reg = load_table(spark, "region", sf_dir)
     nat = load_table(spark, "nation", sf_dir)
     cust = load_table(spark, "customer", sf_dir)
     orders = load_table(spark, "orders", sf_dir)
     li = load_table(spark, "lineitem", sf_dir)
-    return (
+    return sort_bounded(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
@@ -121,8 +122,9 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("revenue"),
             F.count(F.lit(1)).alias("n_lineitems"),
-        )
-        .orderBy(F.col("revenue").desc(), F.col("n_name"))
+        ),
+        F.col("revenue").desc(),
+        F.col("n_name"),
     )
 
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from backend_model_spark.operators.scale_utils import broadcast_scalars
+from backend_model_spark.operators.scale_utils import broadcast_scalars, sort_bounded
 from backend_model_spark.sources.tables import load_table
 
 
@@ -33,10 +33,11 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a single map-side-combinable hash aggregate over the fact
     table — no join, partial aggregation happens before the (tiny,
     4-group) shuffle. The shipdate filter and 7-column projection push
-    into the parquet scan.
+    into the parquet scan. The groups are returnflag × linestatus, so
+    the result is sorted in one partition (:func:`sort_bounded`).
     """
     li = load_table(spark, "lineitem", sf_dir)
-    return (
+    return sort_bounded(
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -57,8 +58,9 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
             F.round(F.avg("l_discount"), 6).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
+        ),
+        "l_returnflag",
+        "l_linestatus",
     )
 
 
@@ -480,7 +482,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cls"))
         .persist()
     )
-    from backend_model_spark.operators.scale_utils import broadcast_scalars
+    from backend_model_spark.operators.scale_utils import broadcast_scalars, sort_bounded
 
     totals = classes.agg(
         F.sum("cls").alias("n_rows"), F.min("cls").alias("min_cls")

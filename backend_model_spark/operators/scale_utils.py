@@ -41,7 +41,12 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-__all__ = ["with_global_rank", "with_global_ntile", "broadcast_scalars"]
+__all__ = [
+    "with_global_rank",
+    "with_global_ntile",
+    "broadcast_scalars",
+    "sort_bounded",
+]
 
 
 def _pin(df: DataFrame) -> DataFrame:
@@ -82,6 +87,16 @@ def broadcast_scalars(df: DataFrame, scalars: DataFrame) -> DataFrame:
     """Attach a one-row aggregate to every row of ``df`` as a broadcast
     cross join — the scalable replacement for ``agg OVER ()``."""
     return df.crossJoin(F.broadcast(scalars))
+
+
+def sort_bounded(df: DataFrame, *order) -> DataFrame:
+    """ORDER BY for a result BOUNDED by construction, in the sense of
+    :func:`with_global_rank`'s ``parts`` hint (dimension keys, a fixed
+    query count times k): one partition sorted in place. ``orderBy``
+    would plan a range exchange whose bounds cost a sampling job, two
+    jobs per sort, to split a few dozen rows. NEVER use it for
+    data-width results, which keep ``orderBy``."""
+    return df.coalesce(1).sortWithinPartitions(*order)
 
 
 def with_global_rank(

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from backend_model_spark.memo import memo
+from backend_model_spark.operators.scale_utils import sort_bounded
 from backend_model_spark.sources.tables import load_table, spread
 
 DIM = 64
@@ -49,14 +50,32 @@ def _safe_cos(dot: str, norm_prod: str) -> str:
     )
 
 
-def _as_double(df: DataFrame) -> DataFrame:
-    # spread: the 64-d dot-product fan-out wants all cores when the
-    # embeddings arrive as one small parquet file (no-op at scale)
-    return spread(df).select(
+def _vectors(df: DataFrame) -> DataFrame:
+    return df.select(
         "vec_id",
         "label",
         F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
     )
+
+
+def _as_double(df: DataFrame) -> DataFrame:
+    # spread: the 64-d dot-product fan-out wants all cores when the
+    # embeddings arrive as one small parquet file (no-op at scale)
+    return _vectors(spread(df))
+
+
+def _corpus_and_queries(spark: SparkSession, sf_dir: str, extend=lambda df: df):
+    """The spread corpus and its first N_QUERIES vectors, each passed
+    through ``extend``. The query side is broadcast, so it reads the
+    raw scan: its vec_id filter would push below spread's round-robin
+    exchange, into a second shuffle of the scan that AQE cannot reuse."""
+    raw = load_table(spark, "embeddings", sf_dir)
+    queries = extend(_vectors(raw)).filter(F.col("vec_id") < N_QUERIES)
+    return extend(_as_double(raw)), queries
+
+
+def _with_norm(df: DataFrame) -> DataFrame:
+    return df.withColumn("vn", F.expr(NORM.format(a="v")))
 
 
 SALT_BUCKETS = 32  # stage-1 fan-out knob: ≈ shuffle parallelism / |queries|
@@ -83,10 +102,8 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     # before the join (the corpus norm would otherwise be re-folded
     # N_QUERIES times, the query norm once per corpus row). Same fold
     # order as the oracle's norm → bit-identical cosine.
-    emb = _as_double(load_table(spark, "embeddings", sf_dir)).withColumn(
-        "vn", F.expr(NORM.format(a="v"))
-    )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
+    emb, queries = _corpus_and_queries(spark, sf_dir, _with_norm)
+    queries = queries.select(
         F.col("vec_id").alias("q_id"),
         F.col("v").alias("qv"),
         F.col("vn").alias("qn"),
@@ -109,11 +126,13 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "vec_id", "cosine")
     )
     w2 = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
+    # N_QUERIES·TOP_K rows: bounded by construction
+    return sort_bounded(
         survivors.withColumn("rank", F.row_number().over(w2))
         .filter(F.col("rank") <= TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-        .orderBy("q_id", "rank")
+        .select("q_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank"),
+        "q_id",
+        "rank",
     )
 
 
@@ -156,7 +175,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus is scanned once for assignment (its own label IS its
     bucket here) and once per probe — never an all-pairs join.
     """
-    emb = _as_double(load_table(spark, "embeddings", sf_dir))
+    emb, queries = _corpus_and_queries(spark, sf_dir)
     # per-label centroids: positional explode → avg per (label, pos)
     pos = emb.select(
         "label", F.posexplode("v").alias("pos", "x")
@@ -171,9 +190,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(pc, s -> s.c)").alias("cv"),
         )
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
+    queries = queries.select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
     qc_cos = F.expr(
         _safe_cos(
             DOT.format(a="qv", b="cv"),
@@ -1098,10 +1115,8 @@ def mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`lsh_hyperplane_buckets`) serves MIPS unchanged. This
     exact variant is the oracle-checkable contrast.
     """
-    emb = _as_double(load_table(spark, "embeddings", sf_dir))
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
+    emb, queries = _corpus_and_queries(spark, sf_dir)
+    queries = queries.select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
     scored = emb.join(
         F.broadcast(queries), F.col("vec_id") != F.col("q_id")
     ).withColumn("dot", F.round(F.expr(DOT.format(a="qv", b="v")), 6))
@@ -1153,10 +1168,8 @@ def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy per query (map-side combinable) and one more tiny window
     over ≤k rows per query to pick the winner.
     """
-    emb = _as_double(load_table(spark, "embeddings", sf_dir)).withColumn(
-        "vn", F.expr(NORM.format(a="v"))
-    )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
+    emb, queries = _corpus_and_queries(spark, sf_dir, _with_norm)
+    queries = queries.select(
         F.col("vec_id").alias("q_id"),
         F.col("label").alias("q_label"),
         F.col("v").alias("qv"),
@@ -1245,12 +1258,14 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a second corpus scan. Integer-micro rounded cosines give
     deterministic cross-engine ranking.
     """
-    emb = _as_double(load_table(spark, "embeddings", sf_dir)).withColumn(
-        "vn", F.expr(NORM.format(a="v"))
-    ).withColumn("vt", F.slice("v", 1, MRL_DIM)).withColumn(
-        "vtn", F.expr(NORM.format(a="vt"))
+    emb, queries = _corpus_and_queries(
+        spark,
+        sf_dir,
+        lambda df: _with_norm(df)
+        .withColumn("vt", F.slice("v", 1, MRL_DIM))
+        .withColumn("vtn", F.expr(NORM.format(a="vt"))),
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
+    queries = queries.select(
         F.col("vec_id").alias("q_id"),
         F.col("v").alias("qv"),
         F.col("vn").alias("qn"),
@@ -1698,10 +1713,10 @@ def rrf_hybrid_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts=1,
     ).select("doc_id", F.col("lex_rank").cast("int").alias("lex_rank"))
 
-    emb = _as_double(load_table(spark, "embeddings", sf_dir)).withColumn(
-        "vn", F.expr(NORM.format(a="v"))
-    )
-    qv = emb.filter(F.col("vec_id") == 0).select(
+    raw = load_table(spark, "embeddings", sf_dir)
+    emb = _with_norm(_as_double(raw))
+    # the one-row broadcast query reads the raw scan (_corpus_and_queries)
+    qv = _with_norm(_vectors(raw)).filter(F.col("vec_id") == 0).select(
         F.col("v").alias("qv"), F.col("vn").alias("qn")
     )
     cos = F.expr(_safe_cos(DOT.format(a="qv", b="v"), "qn * vn"))

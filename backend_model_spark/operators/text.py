@@ -866,14 +866,18 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned twice under the join formulation). One corpus scan total:
     explode → tf agg (shuffle on doc,term) → df window (shuffle on
     term) → top-k window (shuffle on doc). N is a one-row
-    column-pruned count, broadcast as a scalar.
+    column-pruned count, broadcast as a scalar; it reads the unspread
+    scan, because a count over the spread frame would pay its own
+    round-robin shuffle of the corpus (the doc_id projection pushes
+    below the exchange, so AQE cannot reuse the tf side's).
     """
-    docs = spread(load_table(spark, "documents", sf_dir))
+    raw = load_table(spark, "documents", sf_dir)
+    docs = spread(raw)
     terms = docs.select(
         "doc_id", F.explode(F.expr(TOKENS)).alias("term")
     ).filter(F.col("term") != "")
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    n_docs = docs.select(F.countDistinct("doc_id").alias("n_docs"))
+    n_docs = raw.select(F.countDistinct("doc_id").alias("n_docs"))
     scored = (
         tf.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("term")))
         .crossJoin(F.broadcast(n_docs))  # one-row scalar

@@ -23,8 +23,6 @@ from backend_model_spark.protobuf_compat import ensure_protobuf
 # transformWithStateInPandas state channel) has to be on PYTHONPATH now
 HAS_PROTOBUF = ensure_protobuf()
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 _MIB = 1 << 20
 
 # Floor for shuffle scratch in RAM: local runs shuffle well under a GB
@@ -55,6 +53,19 @@ def _host_memory() -> int | None:
         if line.startswith("MemAvailable:")
     ]
     return min(known, default=None)
+
+
+def host_cores() -> int:
+    """Cores for ``local[n]`` and the default shuffle partitions:
+    ``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run
+    on (its affinity mask, which a container's cpuset narrows)."""
+    override = os.environ.get("SPARK_GRAFT_CPUS")
+    if override:
+        return int(override)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity call on this platform
+        return os.cpu_count() or 1
 
 
 def driver_heap_mb(host_bytes: int | None) -> int:
@@ -166,8 +177,13 @@ def get_spark(
     100 TB where static planning guesses wrong. ``maxPartitionBytes``
     stays at the 128 MB default so a 100 TB scan fans out to ~800k
     tasks, which the DAG scheduler handles fine.
+
+    Local geometry is read from the host when this runs, not at import:
+    ``local[n]`` and the default shuffle partitions from
+    :func:`host_cores`, the heap from :func:`driver_heap_mb`.
     """
-    sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    cores = host_cores()
+    sp = shuffle_partitions or cores
     heap = os.environ.get("SPARK_DRIVER_MEMORY") or f"{driver_heap_mb(_host_memory())}m"
     builder = (
         SparkSession.builder.appName(app_name)
@@ -225,6 +241,22 @@ def get_spark(
         # first session comes from this builder; a session an
         # external driver built keeps Spark's default of 100.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # Measured lever: PySpark wraps every ``F.*`` function and
+        # Column operator in ``_with_origin`` to record its Python call
+        # site. Each call looks up the active session, reflects
+        # PySparkCurrentOrigin over py4j, reads a conf, sets and
+        # clears the origin, walks the Python stack and retries a
+        # failing ``import ipykernel``. With it off, building q1 sends
+        # 180 py4j commands instead of 419 (q5 321→172, window top-k
+        # 173→83, cosine top-k 525→248; sf0.001) and the driver never
+        # imports IPython (perfbench ``lineage`` py_peak_rss_mb
+        # 147→123 MB, 10 of 10 A/B pairs; 4 cores, sf0.01). Cost: a
+        # runtime error's DataFrame query context loses its Python
+        # file:line fragment; the error class and message stay.
+        # PySpark reads the flag once per process, at the first wrapped
+        # call with an active session, so a session an external driver
+        # built keeps PySpark's default (on).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", heap)
         .config(
@@ -235,7 +267,7 @@ def get_spark(
         )
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
-        builder = builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        builder = builder.master(f"local[{cores}]")
         scratch = _local_scratch_dir(heap)
         if scratch:
             # shuffle/spill scratch on the fastest local medium — see

@@ -235,6 +235,11 @@ def spread(df: DataFrame) -> DataFrame:
     never shuffles the corpus. Keep it ahead of CPU-heavy narrow
     stages only; never "for good measure" before a join or groupBy,
     which repartition on their own keys anyway.
+
+    Spread the fan-out branch only; broadcast and scalar sides read the
+    raw scan. A filter or projection on a spread frame pushes below its
+    round-robin exchange, so each such side branch pays a shuffle of the
+    scan of its own that AQE cannot reuse.
     """
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism

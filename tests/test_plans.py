@@ -703,17 +703,22 @@ _BUILD_JOBS = {
 }
 
 
-def _build_jobs(spark, sf_dir, name, group) -> int:
-    """Spark jobs run while building entry ``name``'s DataFrame."""
+def _group_jobs(spark, group, run) -> int:
+    """Spark jobs that ``run()`` starts under job group ``group``."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        _QUERIES[name](spark, sf_dir)
+        run()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     # the status tracker is fed by the asynchronous listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _build_jobs(spark, sf_dir, name, group) -> int:
+    """Spark jobs run while building entry ``name``'s DataFrame."""
+    return _group_jobs(spark, group, lambda: _QUERIES[name](spark, sf_dir))
 
 
 @pytest.mark.parametrize("name", sorted(_BUILD_JOBS))
@@ -725,6 +730,36 @@ def test_build_runs_only_its_own_jobs(spark, sf_dir, name):
     jobs = _build_jobs(spark, sf_dir, name, f"build-jobs:{name}")
     assert jobs == _BUILD_JOBS[name], (
         f"{name} ran {jobs} jobs at build, expected {_BUILD_JOBS[name]}"
+    )
+
+
+# Spark jobs of one noop write of each perfbench `lineage` entry. Under
+# AQE every query stage, broadcast and range-bound sample is a job. The
+# bounded results (q1, q5, cosine) sort in one partition with no range
+# exchange, and the broadcast query side and tfidf's document count
+# read the raw scan, not a spread copy; before that the counts were
+# q1 4, q5 8, window top 4, tfidf 11 and cosine 8.
+_ACTION_JOBS = {
+    "q1_pricing_summary": 2,
+    "join_q5_region_revenue": 6,
+    "window_top_per_customer": 4,
+    "text_tfidf": 10,
+    "sim_cosine_topk_bruteforce": 5,
+}
+
+
+def _noop_write(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+@pytest.mark.parametrize("name", sorted(_ACTION_JOBS))
+def test_lineage_action_jobs(spark, sf_dir, name):
+    """An action on a `lineage` entry runs only jobs that buy parallelism."""
+    _noop_write(_QUERIES[name](spark, sf_dir))  # warm the schema memo
+    df = _QUERIES[name](spark, sf_dir)
+    jobs = _group_jobs(spark, f"action-jobs:{name}", lambda: _noop_write(df))
+    assert jobs == _ACTION_JOBS[name], (
+        f"{name} ran {jobs} jobs per action, expected {_ACTION_JOBS[name]}"
     )
 
 
