@@ -610,7 +610,11 @@ def mlp_calibration_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey long, l_linenumber int, actual_cents long, pred_cents long",
     )
     tiled = with_global_ntile(
-        scored,
+        # the range partitioner's sampling pass would otherwise run the
+        # mapInPandas scorer a SECOND time over the full corpus (guide
+        # §2.3/§4: the Python boundary is the expensive stage — pay it
+        # once); the checkpoint pins the scored frame before sampling
+        scored.localCheckpoint(eager=False),
         10,
         [
             F.col("pred_cents").desc(),
@@ -618,11 +622,6 @@ def mlp_calibration_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_linenumber").asc(),
         ],
         "decile",
-        # the range partitioner's sampling pass would otherwise run the
-        # mapInPandas scorer a SECOND time over the full corpus (guide
-        # §2.3/§4: the Python boundary is the expensive stage — pay it
-        # once); the checkpoint pins the scored frame before sampling
-        checkpoint_input=True,
     )
     per = tiled.groupBy("decile").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

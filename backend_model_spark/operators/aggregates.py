@@ -1831,12 +1831,14 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (≤ 2k rows), never the full distinct-hash frame; membership for
     # the intersection estimator is likewise decided by the per-segment
     # bottoms (any union-bottom hash in a segment is within that
-    # segment's k smallest). Two-stage global rank keeps even this
-    # bounded sort out of a single-partition window.
+    # segment's k smallest). The merged bottoms are bounded by
+    # construction (≤ 2·KMV_K rows at any data size), so the rank takes
+    # the single-partition path: no pin and no driver collect at build.
     ub = with_global_rank(
         bottom.groupBy("h").agg(F.count(F.lit(1)).alias("n_segs")),
         [F.col("h").asc()],
         "rk",
+        parts=1,
     ).filter(F.col("rk") <= KMV_K)
     union_row = ub.agg(
         F.lit("union").alias("sketch"),

@@ -24,11 +24,12 @@ from backend_model_spark.sources.tables import load_table
 def supplier_per_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast chain supplier ⨝ nation ⨝ region: counts + balance per
     region. Both dims are tiny → two broadcast joins, zero shuffles of
-    supplier."""
+    supplier. One row per region, so the result sorts in one partition
+    (:func:`sort_bounded`)."""
     sup = load_table(spark, "supplier", sf_dir)
     nat = load_table(spark, "nation", sf_dir)
     reg = load_table(spark, "region", sf_dir)
-    return (
+    per_region = (
         sup.join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
         .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
         .groupBy("r_name")
@@ -36,8 +37,8 @@ def supplier_per_region(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_suppliers"),
             F.round(F.sum("s_acctbal"), 2).alias("sum_acctbal"),
         )
-        .orderBy("r_name")
     )
+    return sort_bounded(per_region, "r_name")
 
 
 SUPPLIER_PER_REGION_ORACLE = """

@@ -4,26 +4,32 @@ a single-partition window.
 Motivation (round-2 verdict): ``W.orderBy(...)`` with no partition
 spec funnels the whole table through ONE task (Spark logs
 ``WindowExec: No Partition Defined ... Moving all data to a single
-partition``). These helpers compute the *same exact* ``row_number`` /
-``ntile`` semantics — including composite tie-break orderings an
-``approx_percentile`` cut-point scheme cannot reproduce — via the
-classic two-stage rank:
+partition``). :func:`with_global_rank` computes the *same exact*
+``row_number`` — including composite tie-break orderings an
+``approx_percentile`` cut-point scheme cannot reproduce — on one code
+path, the classic two-stage rank:
 
 1. ``repartitionByRange`` on the sort expressions → disjoint, ordered
    key ranges (partition i's keys all sort before partition i+1's).
-2. ``row_number`` *within* each range partition — parallel across
-   partitions, never a global sort.
-3. Global rank = local row_number + the prefix-sum of earlier
-   partitions' row counts (a |partitions|-row side table, broadcast).
+2. One window keyed by the range partition id: local ``row_number``,
+   running sum and running max — parallel across partitions, never a
+   global sort.
+3. Global value = local value + the offset of the earlier partitions.
+   Where offsets and totals come from is the only difference between
+   the two kinds of frame:
 
-Consistency: offsets and local ranks MUST observe the same physical
-partitioning. Spark does not reuse an unpersisted shared subplan
-(two branches would re-run the range exchange, and AQE/sampling could
-legally produce different partition boundaries per run), so the ranged
-DataFrame is pinned with a lazy ``localCheckpoint`` — one
-materialization, both branches read the persisted blocks. The
-checkpoint is the price of exact total ordering; it is the ranked
-table itself (e.g. a per-customer rollup), not the raw fact table.
+   * bounded by construction (``parts=1``): one partition, so the
+     offsets are zero and the totals come from a full-frame window
+     over the same spec (one ``WindowExec``, no job at build);
+   * data width: a per-partition rollup (≤ one row per partition)
+     collected on the driver, whose prefix folds attach as literal
+     maps keyed by partition id.
+
+The data-width path has one pin: offsets and local ranks MUST observe
+the same physical partitioning, so the ranged frame is a lazy
+``localCheckpoint`` (see :func:`with_global_rank`). It holds the
+ranked table itself (e.g. a per-customer rollup), not the raw fact
+table.
 
 ``ntile(k)`` then needs no extra pass: with n rows, the first
 ``n mod k`` tiles get ``n div k + 1`` rows and the rest ``n div k``
@@ -33,13 +39,12 @@ arithmetic function of (rank, n, k).
 
 from __future__ import annotations
 
-import os
+from operator import add
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 __all__ = [
     "with_global_rank",
@@ -47,40 +52,6 @@ __all__ = [
     "broadcast_scalars",
     "sort_bounded",
 ]
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Pin ``df`` so every downstream action observes the SAME
-    physical materialization.
-
-    On the ranged frame this is REQUIRED FOR CORRECTNESS, not just a
-    perf pin (round-12 advice): ``repartitionByRange`` samples its
-    partition bounds with an RDD-id-seeded random pass, and each
-    ACTION re-plans the query into fresh RDDs — so without a pin the
-    driver-collected per-partition offsets would be applied to a
-    differently-bounded execution and the ranks/prefix sums would be
-    corrupted (verified empirically at 150k rows: duplicate/missing
-    ranks). Two pin strategies, selected by ``SPARK_GRAFT_RANK_PIN``:
-
-    * ``localcheckpoint`` (default) — cheapest: one write of
-      executor-local, NON-REPLICATED blocks and the lineage is
-      truncated. The fault-tolerance trade (guide §5): on a real
-      cluster an executor loss makes the query FAIL (no lineage to
-      recompute) instead of recomputing — acceptable for short jobs,
-      not for long ones.
-    * ``persist`` — MEMORY_AND_DISK persist + eager count. Slightly
-      more driver work, but lineage is kept: a lost block recomputes
-      through the SAME RDD graph (the RangePartitioner instance and
-      its sampled bounds live in the materialized RDD's
-      ShuffleDependency, so recomputation reuses the original
-      bounds — partitioning stays consistent). Set this on cluster
-      deployments where executor loss must not fail the query.
-    """
-    if os.environ.get("SPARK_GRAFT_RANK_PIN", "localcheckpoint").lower() == "persist":
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        df.count()
-        return df
-    return df.localCheckpoint(eager=False)
 
 
 def broadcast_scalars(df: DataFrame, scalars: DataFrame) -> DataFrame:
@@ -107,7 +78,6 @@ def with_global_rank(
     prefix_sum: tuple[str, str] | None = None,
     grand_total: tuple[str, str] | None = None,
     prefix_max: tuple[str, str] | None = None,
-    checkpoint_input: bool = False,
     parts: int | None = None,
 ) -> DataFrame:
     """Add an exact 1-based global ``row_number`` over ``order`` (a list
@@ -117,230 +87,119 @@ def with_global_rank(
     Optional companions computed from the SAME materialization:
 
     * ``total_col`` — attach the total row count to every row
-      (``count() OVER ()`` as a broadcast one-row scalar).
+      (``count() OVER ()``).
     * ``prefix_sum=(value_col, out_col)`` — exact global running sum of
       ``value_col`` in rank order (``sum(v) OVER (ORDER BY ... ROWS
-      UNBOUNDED PRECEDING)``): per-partition running sum + the
-      broadcast sum of earlier partitions' totals.
+      UNBOUNDED PRECEDING)``), of the type ``sum(value_col)`` has.
     * ``grand_total=(value_col, out_col)`` — attach ``sum(value_col)
-      OVER ()`` as a broadcast scalar (summed from the per-partition
-      totals — no second scan of ``df``'s lineage).
+      OVER ()`` (no second scan of ``df``'s lineage).
     * ``prefix_max=(value_col, out_col)`` — exact global running MAX
       of ``value_col`` in rank order (``max(v) OVER (ORDER BY ...
-      ROWS UNBOUNDED PRECEDING)``): per-partition running max
-      ``greatest``-ed with the broadcast max of earlier partitions
+      ROWS UNBOUNDED PRECEDING)``): the per-partition running max
+      ``greatest``-ed with the max of earlier partitions
       (``greatest`` skips the NULL offset of the first partition).
     """
     if prefix_sum and grand_total and prefix_sum[0] != grand_total[0]:
         raise ValueError("prefix_sum and grand_total must share a value col")
     vcol = (prefix_sum or grand_total or (None,))[0]
-    if checkpoint_input:
-        # One materialization of the input lineage BEFORE the range
-        # exchange: the RangePartitioner's sampling pass and the
-        # shuffle-map pass each execute the full input lineage, so an
-        # expensive upstream (a mapInPandas scorer, a multi-join
-        # rollup) is otherwise computed TWICE per call (guide §1.2/§2:
-        # don't compute things you throw away). Callers opt in where
-        # the lineage costs more than one extra block write.
-        df = _pin(df)
     # ``parts`` is a caller hint for frames BOUNDED by construction:
     # the row count has a ceiling fixed by the query, not by the
     # data — calendar days or months, dimension keys (regions,
     # nations), deciles, post-``limit(k)`` candidate lists. Data-width
     # keys (customers, tokens, cents values) do not qualify, however
     # small the test data. With parts=1 the RangePartitioner skips
-    # its sampling job (bounds are empty), the single partition makes
-    # every offset trivially zero, so there is no pin and no driver
-    # ``collect`` of offsets — the call runs no Spark job — and the
-    # window is still partition-keyed: semantics identical, ~4 fewer
-    # stages per call. NEVER pass it for data-width frames.
-    if parts == 1:
-        ranged = df.repartitionByRange(1, *order).withColumn(
-            "__sg_pid", F.spark_partition_id()
-        )
-        w1 = W.partitionBy("__sg_pid").orderBy(*order)
-        # round 12: totals come from a FULL-FRAME window over the same
-        # (partition, order) spec — Spark folds every frame below into
-        # ONE WindowExec, so the single partition is consumed exactly
-        # once and the former pin + two one-row aggregates + two
-        # broadcast cross joins (4 extra jobs per call) are gone.
-        # Single-partition ⇒ the full-frame sum/count ARE the global
-        # totals, value-identical to the old broadcast scalars.
-        wfull = w1.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-        out = ranged.withColumn(
-            rank_col, F.row_number().over(w1).cast("bigint")
-        )
-        if prefix_sum is not None:
-            out = out.withColumn(
-                prefix_sum[1],
-                F.sum(prefix_sum[0]).over(
-                    w1.rowsBetween(W.unboundedPreceding, 0)
-                ),
-            )
-        if prefix_max is not None:
-            out = out.withColumn(
-                prefix_max[1],
-                F.max(prefix_max[0]).over(
-                    w1.rowsBetween(W.unboundedPreceding, 0)
-                ),
-            )
-        if total_col is not None:
-            out = out.withColumn(
-                total_col, F.count(F.lit(1)).over(wfull).cast("bigint")
-            )
-        if grand_total is not None:
-            out = out.withColumn(
-                grand_total[1], F.sum(grand_total[0]).over(wfull)
-            )
-        return out.drop("__sg_pid")
-    # REQUIRED pin, not a perf hint: offsets (collected below) and the
-    # local row_numbers must observe the same physical range
-    # partitioning across actions — see _pin for the full argument
-    # and the cluster-mode fault-tolerance knob.
-    ranged = _pin(
-        df.repartitionByRange(*order).withColumn("__sg_pid", F.spark_partition_id())
+    # its sampling job (bounds are empty) and every offset is zero, so
+    # there is no pin and no driver ``collect`` — the call runs no
+    # Spark job. NEVER pass it for data-width frames.
+    bounded = parts == 1
+    ranged = df.repartitionByRange(*([1] if bounded else []), *order).withColumn(
+        "__sg_pid", F.spark_partition_id()
     )
-    per_part = [F.count(F.lit(1)).alias("__sg_cnt")]
-    if vcol is not None:
-        per_part.append(F.sum(vcol).alias("__sg_vsum"))
-    if prefix_max is not None:
-        per_part.append(F.max(prefix_max[0]).alias("__sg_vmax"))
-    counts = ranged.groupBy("__sg_pid").agg(*per_part)
-
-    # --- offsets: driver-exact fast path (round-11 optimization) ----
-    # The per-partition rollup is parameter-width (≤ the shuffle
-    # partition count — cluster width, never data width), so for
-    # integral value columns the prefix arithmetic is exact in Python
-    # and the offsets attach as LITERAL map lookups folded into the
-    # consumer's projection. That deletes, per call: the |parts|²
-    # triangular join, its BroadcastExchange job, the offsets hash
-    # join, and (for total/grand_total) a second aggregate + a
-    # broadcast cross join — measured 33→~20 single-task stages on
-    # window_rfm_segments at sf0.1. Every repo call site carries
-    # integer counts/cents (the edge-rounding discipline), so the
-    # fast path is bit-identical; anything non-int (or a partition
-    # count past the literal cap) falls back to the declarative
-    # broadcast-join path below, which is unchanged — at 10⁵-partition
-    # scale the broadcast join IS the right plan, locally the literal
-    # is (the cap is conf'able, not hard-coded to local geometry).
-    cap = int(
-        __import__("os").environ.get("SPARK_GRAFT_RANK_LITERAL_CAP", "4096")
-    )
-    rows = sorted(counts.collect(), key=lambda r: r["__sg_pid"])
-    exact = len(rows) <= cap and all(
-        v is None or (isinstance(v, int) and not isinstance(v, bool))
-        for r in rows
-        for v in tuple(r)[1:]
-    )
-
+    if not bounded:
+        # REQUIRED pin, not a perf hint: ``repartitionByRange`` samples
+        # its partition bounds with an RDD-id-seeded random pass, and
+        # each ACTION re-plans the query into fresh RDDs — so without a
+        # pin the driver-collected offsets below would be applied to a
+        # differently-bounded execution and the ranks / prefix sums
+        # would be corrupted (verified at 150k rows: duplicate and
+        # missing ranks). The lazy local checkpoint writes one copy of
+        # executor-local, NON-REPLICATED blocks and truncates the
+        # lineage. Fault-tolerance trade (guide §5): on a real cluster
+        # an executor loss makes the query FAIL (no lineage to
+        # recompute) instead of recomputing — acceptable for short
+        # jobs, not for long ones.
+        ranged = ranged.localCheckpoint(eager=False)
     w = W.partitionBy("__sg_pid").orderBy(*order)
-    local = ranged.withColumn("__sg_lrn", F.row_number().over(w))
+    upto = w.rowsBetween(W.unboundedPreceding, 0)
+    local = {rank_col: F.row_number().over(w)}
     if prefix_sum is not None:
-        local = local.withColumn(
-            "__sg_lcum",
-            F.sum(prefix_sum[0]).over(w.rowsBetween(W.unboundedPreceding, 0)),
-        )
+        local[prefix_sum[1]] = F.sum(vcol).over(upto)
     if prefix_max is not None:
-        local = local.withColumn(
-            "__sg_lmax",
-            F.max(prefix_max[0]).over(w.rowsBetween(W.unboundedPreceding, 0)),
-        )
-
-    if exact:
-        off_map: dict[int, int] = {}
-        voff_map: dict[int, int] = {}
-        moff_map: dict[int, int | None] = {}
-        run_c, run_v, run_m, saw_v = 0, 0, None, False
-        for r in rows:
-            pid = r["__sg_pid"]
-            off_map[pid] = run_c
-            run_c += r["__sg_cnt"]
-            if vcol is not None:
-                voff_map[pid] = run_v
-                if r["__sg_vsum"] is not None:
-                    saw_v = True
-                    run_v += r["__sg_vsum"]
-            if prefix_max is not None:
-                moff_map[pid] = run_m
-                vm = r["__sg_vmax"]
-                if vm is not None:
-                    run_m = vm if run_m is None else max(run_m, vm)
-
-        def lookup(mapping: dict, dtype: str):
-            items: list = []
-            for k, v in mapping.items():
-                items.append(F.lit(k).cast("int"))
-                items.append(F.lit(v).cast(dtype))
-            if not items:
-                return F.lit(None).cast(dtype)
-            # keys cover every pid that holds a row (they come FROM the
-            # rows), so the lookup never misses; try_element_at keeps
-            # the expression total under ANSI mode regardless.
-            return F.try_element_at(F.create_map(*items), F.col("__sg_pid"))
-
-        out = local.withColumn(
-            rank_col, (F.col("__sg_lrn") + lookup(off_map, "bigint")).cast("bigint")
-        )
-        if prefix_sum is not None:
-            out = out.withColumn(
-                prefix_sum[1], F.col("__sg_lcum") + lookup(voff_map, "bigint")
-            ).drop("__sg_lcum")
+        local[prefix_max[1]] = F.max(prefix_max[0]).over(upto)
+    if bounded:
+        # round 12: totals come from a FULL-FRAME window over the same
+        # (partition, order) spec — Spark folds every frame into ONE
+        # WindowExec, so the single partition is consumed exactly once.
+        # Single partition ⇒ the full-frame count/sum ARE the totals.
+        whole = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+        out, cols = ranged, local
+        total = F.count(F.lit(1)).over(whole)
+        gtotal = F.sum(vcol).over(whole) if vcol else None
+    else:
+        out = ranged.withColumns(local)
+        per_part = [F.count(F.lit(1)).alias("__sg_cnt")]
+        if vcol is not None:
+            per_part.append(F.sum(vcol).alias("__sg_vsum"))
         if prefix_max is not None:
-            mdtype = ranged.schema[prefix_max[0]].dataType.simpleString()
-            out = out.withColumn(
-                prefix_max[1],
-                F.greatest(F.col("__sg_lmax"), lookup(moff_map, mdtype)),
-            ).drop("__sg_lmax")
-        out = out.drop("__sg_pid", "__sg_lrn")
-        if total_col is not None:
-            out = out.withColumn(total_col, F.lit(run_c).cast("bigint"))
-        if grand_total is not None:
-            out = out.withColumn(
-                grand_total[1],
-                F.lit(run_v).cast("bigint") if saw_v else F.lit(None).cast("bigint"),
-            )
-        return out
+            per_part.append(F.max(prefix_max[0]).alias("__sg_vmax"))
+        counts = ranged.groupBy("__sg_pid").agg(*per_part)
+        # The rollup is parameter-width (≤ the shuffle partition count —
+        # cluster width, never data width), so the prefix folds run in
+        # Python, exactly, and attach as LITERAL map lookups folded into
+        # the consumer's projection: no triangular join, no broadcast,
+        # no second aggregate (round 11: 33→~20 single-task stages on
+        # window_rfm_segments at sf0.1). Literals take the rollup's own
+        # result type, so integral and decimal value columns are exact.
+        rows = sorted(counts.collect(), key=lambda r: r["__sg_pid"])
+        dtype = {f.name: f.dataType for f in counts.schema.fields}
 
-    # --- declarative fallback (non-integral values / huge clusters) --
-    a, b = counts.alias("a"), counts.alias("b")
-    # Prefix-sum of earlier partitions' totals. |partitions|² pairs —
-    # O(cluster width), not O(data) — and stays fully declarative (a
-    # window here would itself be an unpartitioned WindowExec).
-    offs = [F.coalesce(F.sum("b.__sg_cnt"), F.lit(0)).alias("__sg_off")]
-    if vcol is not None:
-        offs.append(
-            F.coalesce(F.sum("b.__sg_vsum"), F.lit(0)).alias("__sg_voff")
-        )
-    if prefix_max is not None:
-        # NULL for the first partition — greatest() skips it below
-        offs.append(F.max("b.__sg_vmax").alias("__sg_moff"))
-    offsets = (
-        a.join(b, F.col("b.__sg_pid") < F.col("a.__sg_pid"), "left")
-        .groupBy(F.col("a.__sg_pid").alias("__sg_pid"))
-        .agg(*offs)
-    )
-    out = (
-        local.join(F.broadcast(offsets), "__sg_pid")
-        .withColumn(
-            rank_col, (F.col("__sg_lrn") + F.col("__sg_off")).cast("bigint")
-        )
-    )
-    if prefix_sum is not None:
-        out = out.withColumn(
-            prefix_sum[1], F.col("__sg_lcum") + F.col("__sg_voff")
-        ).drop("__sg_lcum", "__sg_voff")
-    if prefix_max is not None:
-        out = out.withColumn(
-            prefix_max[1], F.greatest(F.col("__sg_lmax"), F.col("__sg_moff"))
-        ).drop("__sg_lmax", "__sg_moff")
-    out = out.drop("__sg_pid", "__sg_lrn", "__sg_off")
+        def offsets(name: str, start, fold):
+            """Literal ``pid -> fold of earlier partitions' name`` lookup,
+            and the fold over every partition."""
+            acc, items = start, []
+            for r in rows:
+                items += [F.lit(r["__sg_pid"]).cast("int"), F.lit(acc).cast(dtype[name])]
+                if r[name] is not None:
+                    acc = r[name] if acc is None else fold(acc, r[name])
+            if not items:
+                return F.lit(None).cast(dtype[name]), acc
+            # keys come FROM the rows, so the lookup never misses;
+            # try_element_at keeps the expression total under ANSI mode
+            return F.try_element_at(F.create_map(*items), F.col("__sg_pid")), acc
+
+        off, n = offsets("__sg_cnt", 0, add)
+        cols = {rank_col: F.col(rank_col) + off}
+        total = F.lit(n)
+        if vcol is not None:
+            # NULL offset until the first non-NULL value; the coalesce
+            # keeps SQL's skip-NULLs running sum on a NULL-valued row
+            # that opens a later partition (its local sum is NULL)
+            voff, s = offsets("__sg_vsum", None, add)
+            gtotal = F.lit(s).cast(dtype["__sg_vsum"])
+            if prefix_sum is not None:
+                cum = F.col(prefix_sum[1])
+                cols[prefix_sum[1]] = F.coalesce(cum + voff, cum, voff).cast(
+                    dtype["__sg_vsum"]
+                )
+        if prefix_max is not None:
+            moff = offsets("__sg_vmax", None, max)[0]
+            cols[prefix_max[1]] = F.greatest(F.col(prefix_max[1]), moff)
+    cols[rank_col] = cols[rank_col].cast("bigint")
     if total_col is not None:
-        total = counts.agg(F.sum("__sg_cnt").cast("bigint").alias(total_col))
-        out = broadcast_scalars(out, total)
+        cols[total_col] = total.cast("bigint")
     if grand_total is not None:
-        gt = counts.agg(F.sum("__sg_vsum").alias(grand_total[1]))
-        out = broadcast_scalars(out, gt)
-    return out
+        cols[grand_total[1]] = gtotal
+    return out.withColumns(cols).drop("__sg_pid")
 
 
 def with_global_ntile(
@@ -348,7 +207,6 @@ def with_global_ntile(
     k: int,
     order: Sequence[Column],
     tile_col: str,
-    checkpoint_input: bool = False,
 ) -> DataFrame:
     """Add an exact global ``ntile(k)`` over ``order`` via
     :func:`with_global_rank` + the SQL-standard tile-size rule.
@@ -356,13 +214,7 @@ def with_global_ntile(
     Matches ``F.ntile(k).over(W.orderBy(*order))`` value-for-value
     (cast to int, as Spark's ntile returns) while staying parallel.
     """
-    ranked = with_global_rank(
-        df,
-        order,
-        "__sg_rank",
-        total_col="__sg_n",
-        checkpoint_input=checkpoint_input,
-    )
+    ranked = with_global_rank(df, order, "__sg_rank", total_col="__sg_n")
     # First (n % k) tiles hold (n div k + 1) rows, the rest (n div k).
     # CASE evaluates lazily per row, so the q = 0 (n < k) division in
     # the ELSE branch is unreachable, never raised.

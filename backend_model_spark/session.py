@@ -115,7 +115,6 @@ def _jvm_bytes(size: str) -> int:
 # GC-tight at sf0.1 (window_rfm 2.5 s vs 1.7 s). SPARK_DRIVER_MEMORY
 # overrides it. A JVM crash report (hs_err_pid*.log) goes to the temp
 # dir, never into the working directory (which is often the checkout).
-# Env-overridable for other geometries.
 _DRIVER_JAVA_OPTS = (
     "-Xms{heap}"
     " -XX:InitialCodeCacheSize=512m -XX:ReservedCodeCacheSize=512m"
@@ -181,6 +180,8 @@ def get_spark(
     Local geometry is read from the host when this runs, not at import:
     ``local[n]`` and the default shuffle partitions from
     :func:`host_cores`, the heap from :func:`driver_heap_mb`.
+    ``extra_conf`` overrides any conf set here, e.g. the AQE partition
+    floor or the driver JVM options for another geometry.
     """
     cores = host_cores()
     sp = shuffle_partitions or cores
@@ -197,12 +198,8 @@ def get_spark(
         # scan, tfidf rollups, per-bin pair joins). 256 KB keeps those
         # stages at full local width (A/B: tfidf 1.45→1.03 s, overlap
         # topk 2.0→1.76 s, no regressions) and is INERT at scale,
-        # where bytes/parallelism ≫ any floor. Env-tunable for other
-        # geometries.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "256k"),
-        )
+        # where bytes/parallelism ≫ any floor.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -259,12 +256,7 @@ def get_spark(
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", heap)
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_DRIVER_JAVA_OPTS", _DRIVER_JAVA_OPTS.format(heap=heap)
-            ),
-        )
+        .config("spark.driver.extraJavaOptions", _DRIVER_JAVA_OPTS.format(heap=heap))
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{cores}]")

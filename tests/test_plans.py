@@ -689,7 +689,8 @@ def test_max_drawdown_two_stage_primitives(spark, sf_dir):
 
 
 # Spark jobs each entry may run while its DataFrame is being built:
-# the bounded rollups rank on with_global_rank's single-partition path
+# the bounded rollups (and the KMV sketch's merged bottoms, at most
+# 2·KMV_K rows) rank on with_global_rank's single-partition path
 # (no pin, no driver collect of offsets), and the sinks re-read their
 # files with the schema they just wrote (no footer-inference job), so
 # only the writes the entry itself performs remain.
@@ -698,6 +699,7 @@ _BUILD_JOBS = {
     "window_revenue_growth": 0,
     "events_changepoint": 0,
     "join_order_backlog": 0,
+    "agg_kmv_distinct_sketch": 0,
     "io_append_sink": 2,  # overwrite batch 1, append batch 2
     "io_dynamic_partition_overwrite": 2,  # seed write, restatement
 }
@@ -733,18 +735,21 @@ def test_build_runs_only_its_own_jobs(spark, sf_dir, name):
     )
 
 
-# Spark jobs of one noop write of each perfbench `lineage` entry. Under
-# AQE every query stage, broadcast and range-bound sample is a job. The
-# bounded results (q1, q5, cosine) sort in one partition with no range
-# exchange, and the broadcast query side and tfidf's document count
-# read the raw scan, not a spread copy; before that the counts were
-# q1 4, q5 8, window top 4, tfidf 11 and cosine 8.
+# Spark jobs of one noop write of each perfbench `lineage` entry and of
+# the other bounded results that sort in one partition. Under AQE every
+# query stage, broadcast and range-bound sample is a job. The bounded
+# results (q1, q5, cosine, the 5 rows of supplier per region) sort in
+# one partition with no range exchange, and the broadcast query side
+# and tfidf's document count read the raw scan, not a spread copy;
+# before that the counts were q1 4, q5 8, window top 4, tfidf 11,
+# cosine 8 and supplier per region 6.
 _ACTION_JOBS = {
     "q1_pricing_summary": 2,
     "join_q5_region_revenue": 6,
     "window_top_per_customer": 4,
     "text_tfidf": 10,
     "sim_cosine_topk_bruteforce": 5,
+    "join_supplier_per_region": 4,
 }
 
 
@@ -754,7 +759,8 @@ def _noop_write(df) -> None:
 
 @pytest.mark.parametrize("name", sorted(_ACTION_JOBS))
 def test_lineage_action_jobs(spark, sf_dir, name):
-    """An action on a `lineage` entry runs only jobs that buy parallelism."""
+    """An action on a `lineage` entry or a bounded result runs only jobs
+    that buy parallelism."""
     _noop_write(_QUERIES[name](spark, sf_dir))  # warm the schema memo
     df = _QUERIES[name](spark, sf_dir)
     jobs = _group_jobs(spark, f"action-jobs:{name}", lambda: _noop_write(df))

@@ -7,11 +7,13 @@ Covers the two correctness-adjacent items from the round-11 judge:
   serve a stale schema after an in-place rewrite of the 65th+ part);
 * ``with_global_rank``'s pin on the ranged frame is REQUIRED for
   correctness (range-exchange bounds are re-sampled per action), so
-  the ranks must form an exact 1..n permutation on a frame large
-  enough to trigger real range sampling — under both pin strategies
-  (``localcheckpoint`` default and the cluster-safe ``persist``) —
-  and the single-partition path (``parts=1``) must return the same
-  rows as the two-stage path, running prefix max included.
+  on a frame large enough to trigger real range sampling its rank,
+  running sum, grand total and running max must equal the
+  single-partition window's, exactly: with the session's settings,
+  under 7 shuffle partitions, with AQE off, on the single-partition
+  path (``parts=1``), and for a ``decimal(12,2)`` value column with
+  negatives and NULLs (the literal offsets take the rollup's own
+  type).
 """
 
 from __future__ import annotations
@@ -44,56 +46,77 @@ def test_dataset_key_observes_every_child(tmp_path):
     assert k2 != k1
 
 
-def _ranked_rows(spark, **kw):
+def _values():
+    """Value columns by case id: varied longs, and decimal cents with
+    negatives where four rows in five are NULL, so NULL rows open the
+    order and (almost surely) some later range partitions."""
+    return {
+        "long": ((F.col("id") * 7919) % 1009).cast("long"),
+        "decimal": F.when(F.col("id") % 5 != 1, None).otherwise(
+            (((F.col("id") * 7919) % 200_001 - 100_000) / 100).cast("decimal(12,2)")
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "conf,parts,value",
+    [
+        ({}, None, "long"),
+        ({"spark.sql.shuffle.partitions": "7"}, None, "long"),
+        ({"spark.sql.adaptive.enabled": "false"}, None, "long"),
+        ({}, 1, "long"),
+        ({}, None, "decimal"),
+    ],
+    ids=["localcheckpoint", "shuffle7", "aqe_off", "parts1", "decimal"],
+)
+def test_global_rank_is_exact_permutation(spark, conf, parts, value):
+    """Rank, running sum, grand total and running max equal the
+    single-partition window's, exactly and with its types."""
+    from pyspark.sql import Window as W
+
     from backend_model_spark.operators.scale_utils import with_global_rank
 
     n = 150_000
+    order = [F.col("k").asc(), F.col("id").asc()]
     # non-trivial distribution + ties on the first key so the
     # composite ordering and the range sampler both do real work
     df = (
         spark.range(n)
         .withColumn("k", (F.col("id") * 2654435761) % 1000)
-        .withColumn("v", F.lit(1).cast("long"))
+        .withColumn("v", _values()[value])
         .withColumn("m", (F.col("id") * 40503) % 100_003)
         .repartition(16)
     )
-    out = with_global_rank(
-        df,
-        [F.col("k").asc(), F.col("id").asc()],
-        "rk",
-        prefix_sum=("v", "cum"),
-        prefix_max=("m", "peak"),
-        **kw,
+    w = W.orderBy(*order)
+    upto = w.rowsBetween(W.unboundedPreceding, 0)
+    truth = df.select(
+        "id",
+        F.row_number().over(w).alias("rk"),
+        F.sum("v").over(upto).alias("cum"),
+        F.sum("v").over(W.partitionBy()).alias("gt"),
+        F.max("m").over(upto).alias("peak"),
     )
-    return n, out.select("rk", "cum", "peak", "k", "id", "m").collect()
-
-
-@pytest.mark.parametrize(
-    "pin_mode,parts",
-    [("localcheckpoint", None), ("persist", None), ("localcheckpoint", 1)],
-    ids=["localcheckpoint", "persist", "parts1"],
-)
-def test_global_rank_is_exact_permutation(spark, pin_mode, parts, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_RANK_PIN", pin_mode)
-    n, got = _ranked_rows(spark, parts=parts)
-    assert len(got) == n
-    ranks = sorted(r["rk"] for r in got)
-    assert ranks == list(range(1, n + 1)), "ranks must be a 1..n permutation"
-    # prefix sum of the constant 1 equals the rank itself
-    assert all(r["cum"] == r["rk"] for r in got)
-    # the rank order must agree with the declared sort order
-    by_rank = sorted(got, key=lambda r: r["rk"])
-    keys = [(r["k"], r["id"]) for r in by_rank]
-    assert keys == sorted(keys)
-    # the running max must be the max of every value up to the rank
-    peak = None
-    for r in by_rank:
-        peak = r["m"] if peak is None else max(peak, r["m"])
-        assert r["peak"] == peak
-    if parts == 1:
-        # row-for-row equal to the default two-stage path
-        _, two_stage = _ranked_rows(spark)
-        assert sorted(got) == sorted(two_stage)
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        got = with_global_rank(
+            df,
+            order,
+            "rk",
+            prefix_sum=("v", "cum"),
+            grand_total=("v", "gt"),
+            prefix_max=("m", "peak"),
+            parts=parts,
+        ).select(truth.columns)
+        rows = got.collect()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert len(rows) == n
+    types = lambda d: [f.dataType for f in d.schema][2:]  # noqa: E731
+    assert types(got) == types(truth)
+    assert sorted(rows) == sorted(truth.collect())
 
 
 def _cache_loaded(spark, df) -> bool:
