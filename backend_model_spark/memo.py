@@ -1,6 +1,7 @@
 """One session memo for the engine's shared expensive stages (LSH
 candidates, SemDeDup assignment, BRP reps, trainer features and fits),
-built once per Spark application. One rule for every site:
+built once per Spark application. One rule for every site: a miss runs
+exactly the jobs ``build`` runs; a hit runs none.
 
 * Keys are ``(applicationId, key)``. An insert drops other
   applications' entries without unpersisting: their context is gone.
@@ -10,11 +11,9 @@ built once per Spark application. One rule for every site:
 * Frame-owning entries share one LRU bound; eviction unpersists.
   Value-only entries live until the application changes.
 * An external ``clearCache()`` unpersists owned frames behind the
-  memo's back, and every consumer would recompute the whole lineage.
-  So a hit re-registers each dead frame at its recorded level, then
-  counts the dead frames latest-built (last in the value) first,
-  skipping one an earlier count already loaded through its cached
-  relation. A miss runs exactly the jobs ``build`` runs.
+  memo's back. A hit re-registers each dead frame at its recorded
+  storage level, so the first action that consumes it fills the cache
+  and later consumers read it.
 """
 
 from __future__ import annotations
@@ -37,13 +36,6 @@ def _live(df: DataFrame) -> bool:
     return sl.useMemory or sl.useDisk
 
 
-def _loaded(spark: SparkSession, df: DataFrame) -> bool:
-    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
-    return cached.isDefined() and (
-        cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
-    )
-
-
 def memo(spark: SparkSession, key: Hashable, build: Callable[[], Any]) -> Any:
     """The value memoized under ``key`` in this application; ``build()``
     makes it on a miss."""
@@ -51,12 +43,9 @@ def memo(spark: SparkSession, key: Hashable, build: Callable[[], Any]) -> Any:
     hit = _ENTRIES.get((app, key))
     if hit is not None:
         _ENTRIES.move_to_end((app, key))
-        dead = [(df, level) for df, level in hit[1] if not _live(df)]
-        for df, level in dead:
-            df.persist(level)
-        for i, (df, _) in enumerate(reversed(dead)):
-            if i == 0 or not _loaded(spark, df):
-                df.count()
+        for df, level in hit[1]:
+            if not _live(df):
+                df.persist(level)
         return hit[0]
     value = build()
     for k in [k for k in _ENTRIES if k[0] != app]:
@@ -75,7 +64,7 @@ def memo(spark: SparkSession, key: Hashable, build: Callable[[], Any]) -> Any:
 
 def lookup(spark: SparkSession, key: Hashable) -> Any:
     """The value memoized under ``key`` in this application, or None;
-    no recency update, no revalidation."""
+    no recency update, no re-registration."""
     hit = _ENTRIES.get((spark.sparkContext.applicationId, key))
     return None if hit is None else hit[0]
 

@@ -1792,14 +1792,9 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("h"),
         )
         .distinct()
-        .persist()
     )
     w = W.partitionBy("seg").orderBy("h")
-    bottom = (
-        ev.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= KMV_K)
-        .persist()
-    )
+    bottom = ev.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= KMV_K)
 
     def _est(kp: str, hk: str) -> F.Column:
         return F.expr(
@@ -1858,10 +1853,7 @@ def kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "div count(1) as bigint)"
         ).alias("jaccard_micro"),
     )
-    out = seg_rows.unionByName(union_row).orderBy("sketch")
-    ev.unpersist()
-    bottom.unpersist()
-    return out
+    return seg_rows.unionByName(union_row).orderBy("sketch")
 
 
 KMV_SKETCH_ORACLE = f"""

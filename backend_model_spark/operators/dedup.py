@@ -64,21 +64,6 @@ MINHASH_A = [1_000_003, 1_000_033, 1_000_037, 1_000_039,
 MINHASH_B = [0, 17, 31, 47, 59, 73, 89, 101]
 
 
-def _mh_word_spark(i: int) -> str:
-    """32-bit word i%4 of the shingle's md5, as a bigint SQL expr."""
-    return (
-        f"cast(conv(substring(md5(cast(shingle as binary)), "
-        f"{1 + 8 * (i % 4)}, 8), 16, 10) as bigint)"
-    )
-
-
-def _mh_expr_spark(i: int) -> str:
-    return (
-        f"({MINHASH_A[i]} * ({_mh_word_spark(i)} % {MINHASH_P})"
-        f" + {MINHASH_B[i]}) % {MINHASH_P}"
-    )
-
-
 def _mh_expr_from_digest(i: int) -> str:
     """Affine remix i over a PRE-COMPUTED md5 hex digest column
     ``mhd`` (round 11, guide §1.2): codegen's subexpression
@@ -188,7 +173,7 @@ cand AS (
 # (2-3 branches EACH: reps + star). It is memoized per (application,
 # sf_dir) like the candidate pairs below; MEMORY_AND_DISK because the
 # frame carries text.
-def _content_reps(spark: SparkSession, sf_dir: str, eager: bool = True):
+def _content_reps(spark: SparkSession, sf_dir: str):
     """(reps, star) — exact-dedup-first over shingle-eligible docs.
 
     ``reps`` is one (doc_id, text) representative (min doc_id) per
@@ -201,41 +186,31 @@ def _content_reps(spark: SparkSession, sf_dir: str, eager: bool = True):
     sees each distinct text once, so duplicate-group cost is linear,
     never C(g,2). SQL twin: :data:`DEDUP_FIRST_CTES`.
 
-    ``eager=False`` (round 12, guide §1.2): a caller whose NEXT
-    materialization's lineage itself scans every partition of
-    ``members`` (the banded build in :func:`lsh_candidate_pairs`)
-    may skip the dedicated count() action here — that action's only
-    job is to pre-build the cache blocks, and the caller's own first
-    action builds them identically through the InMemoryRelation. The
-    persist is registered either way; only WHO pays the build moves.
+    The digest-group frame is persisted but not counted: building it
+    runs no job. Every consumer builds the shingle index first
+    (:func:`_rep_shingled`), whose ``count()`` scans every partition
+    of the frame through its cached relation and so fills the cache;
+    later consumers read the built blocks.
     """
 
     def build():
         docs = load_table(spark, "documents", sf_dir)
         # compute-width exchange pin (round 11, guide §2.2): the
         # digest-window stage FUSES with the downstream shingle
-        # explode + md5 signature map side in the revalidation
-        # lineage; its shuffle is ~1 MB of compressed text but the
-        # stage is compute-bound, and AQE's byte-based coalescing
-        # squashed it onto 3 tasks (measured 0.68 s of a 2.5 s run).
-        # Pinning at the conf'd shuffle width keeps it at full
-        # parallelism; the window reuses the pinned exchange (same
-        # key), so no extra shuffle is added.
+        # explode + md5 signature map side; its shuffle is ~1 MB of
+        # compressed text but the stage is compute-bound, and AQE's
+        # byte-based coalescing squashed it onto 3 tasks (measured
+        # 0.68 s of a 2.5 s run). Pinning at the conf'd shuffle width
+        # keeps it at full parallelism; the window reuses the pinned
+        # exchange (same key), so no extra shuffle is added.
         sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        members = (
+        return (
             docs.filter(F.size(F.split(F.trim(F.col("text")), r"\s+")) >= 3)
             .select("doc_id", "text", F.md5("text").alias("h"))
             .repartition(sp, "h")
             .withColumn("rep_id", F.min("doc_id").over(Window.partitionBy("h")))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # eager materialization (round 11): the reps/star consumers —
-        # and a join's two map sides — run as CONCURRENT jobs; a lazy
-        # persist lets each re-run the digest window from parquet.
-        # One count() builds the blocks once, everyone else reads them.
-        if eager:
-            members.count()
-        return members
 
     members = memo(spark, ("dedup.reps", sf_dir), build)
     reps = members.filter(F.col("doc_id") == F.col("rep_id")).select(
@@ -275,7 +250,10 @@ def _rep_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
         reps, _ = _content_reps(spark, sf_dir)
         sh = _shingle_index(reps).persist()
-        sh.count()  # eager: concurrent consumers (see _content_reps)
+        # eager: a join's two map sides run as concurrent jobs, and a
+        # cold lazy cache would let each re-run the shingle explode.
+        # This count also fills the digest-group frame it reads.
+        sh.count()
         return sh
 
     return memo(spark, ("dedup.shingles", sf_dir), build)
@@ -577,15 +555,7 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The memo miss of :func:`lsh_candidate_pairs`."""
-    # eager=False (round 12): the first downstream action here is
-    # _rep_shingled's sh.count(), whose lineage scans every members
-    # partition through the persisted InMemoryRelation (reps =
-    # members.filter) — the cache blocks are built by THAT action and
-    # the dedicated members.count() job was pure overhead on the cold
-    # path (one whole action + its driver planning gap). Later
-    # consumers (the star branch of pairs, other family entries)
-    # read built blocks.
-    reps, star = _content_reps(spark, sf_dir, eager=False)
+    _, star = _content_reps(spark, sf_dir)
     # shared distinct index (MIN over the distinct set == MIN over the
     # raw explode, so the signature path reuses it too).
     # Round 12 (verdict ask #1): the round-11 "skip the _rep_shingled
@@ -820,7 +790,10 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         members = allv.withColumn(
             "rep_id", F.min("vec_id").over(Window.partitionBy("label", "v"))
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        members.count()  # eager: concurrent consumers (see _content_reps)
+        # eager: the grid-join sides and the star branch run as
+        # concurrent jobs; a cold lazy cache would let each re-run
+        # the window
+        members.count()
         return members
 
     members = memo(spark, ("dedup.emb_members", sf_dir), build)
@@ -1036,8 +1009,9 @@ def duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale the interesting output is the duplicate groups, not a
     copy of the corpus.
     """
-    # already materialized by the shared candidate stage — no persist
-    # of our own, and counting it is a cache read
+    # persisted by the shared candidate stage — no persist of our
+    # own; the edge count reads that cache (or fills it after an
+    # external clearCache())
     raw_edges = lsh_candidate_pairs(spark, sf_dir).select("doc_a", "doc_b")
     return _cluster_report(_connected_components(spark, raw_edges))
 
@@ -1051,6 +1025,14 @@ def _connected_components(spark: SparkSession, raw_edges: DataFrame) -> DataFram
     single-task union-find below ``SINGLE_TASK_MAX_EDGES``,
     contraction + hook/jump label propagation above — see
     :func:`duplicate_clusters` for the full strategy rationale.
+
+    This is the one allowed exception to the rule that building a
+    query's DataFrame runs no job. Connected components is an
+    iterative fixpoint: the edge ``count()`` picks the strategy, the
+    labels are checkpointed, and on the large-graph path each round
+    counts its changed labels to decide whether to stop, so the job
+    count depends on the data. ``tests/test_plans.py::_BUILD_JOBS``
+    pins it for the fixture.
     """
     n_edges = raw_edges.count()
     if n_edges <= SINGLE_TASK_MAX_EDGES:

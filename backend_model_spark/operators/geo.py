@@ -74,15 +74,9 @@ KNN_GRID_N_REF = 20_000
 KNN_GRID_MAX_HALVINGS = 8
 
 
-def _grid_halvings(n: int) -> int:
-    """Largest k ≤ MAX with n ≥ N_REF·4^k (pure integer compares)."""
-    k = 0
-    while k < KNN_GRID_MAX_HALVINGS and n >= KNN_GRID_N_REF * 4 ** (k + 1):
-        k += 1
-    return k
-
-
-# SQL twin of _grid_halvings: descending integer-threshold CASE
+# 2^k for the largest k ≤ MAX with n ≥ N_REF·4^k, as a descending
+# integer-threshold CASE over a count column ``n``; both engines
+# evaluate this same text
 _HALVINGS_SQL = "CASE " + " ".join(
     f"WHEN n >= {KNN_GRID_N_REF * 4 ** k} THEN {2 ** k}"
     for k in range(KNN_GRID_MAX_HALVINGS, 0, -1)
@@ -134,10 +128,11 @@ def knn_comps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``KNN_GRID_N_REF`` points, so ring population — and with it
     per-query candidate work — stays within a constant factor of the
     calibration level at any density (the round-3 fixed grid grew
-    candidates O(density): measured 8x at 10x). The count that picks
-    the level is one cheap metadata-only job; the level ladder is
-    integer-quantized and mirrored in the oracle, so both engines
-    always agree on the grid.
+    candidates O(density): measured 8x at 10x). The level is a scalar
+    subquery over the row count inside the plan, so building the
+    frame runs no job; the level ladder is integer-quantized and the
+    oracle evaluates the same CASE text, so both engines always agree
+    on the grid.
 
     Plan shape: query side (n/50 rows) explodes x9 to neighbor cells,
     equi-joins the cell-keyed full table on (cx, cy), haversine is
@@ -147,8 +142,12 @@ def knn_comps(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-micro discipline) with the neighbor key as tiebreak.
     """
     base = _coords(spark, sf_dir)
-    step = CELL_DEG / (2 ** _grid_halvings(base.count()))
-    cell = lambda c: F.floor(c / F.lit(step)).cast("int")
+    step = (
+        base.agg(F.count(F.lit(1)).alias("n"))
+        .select(F.lit(CELL_DEG) / F.expr(_HALVINGS_SQL))
+        .scalar()
+    )
+    cell = lambda c: F.floor(c / step).cast("int")
     pts = base.select(
         "key", "lat", "lon", cell(F.col("lat")).alias("cx"), cell(F.col("lon")).alias("cy")
     )

@@ -20,10 +20,6 @@ from pyspark.sql import SparkSession
 
 from backend_model_spark.sources.tables import TABLE_NAMES, table_path
 
-# Exact-match is the target (queries round floats at the edge); the
-# tolerance only classifies a failure as "float jitter" vs "wrong".
-FLOAT_REL_TOL = 1e-9
-
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
     con = duckdb.connect()

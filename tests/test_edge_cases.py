@@ -1314,30 +1314,39 @@ def test_blocked_correlation_matches_pandas_on_300_columns(spark):
     )
 
 
-def test_knn_grid_ladder_matches_sql_twin():
-    """The adaptive-grid level ladder must agree between the python
-    picker (Spark side) and the CASE twin (oracle side) at every
-    threshold boundary ±1 — a level disagreement would silently
-    diverge the candidate sets."""
+def test_knn_grid_ladder_matches_sql_twin(spark):
+    """The adaptive-grid level ladder must give the same power of two
+    on Spark (the query's scalar subquery) and on DuckDB (the oracle),
+    and the expected one, at every threshold boundary ±1 — a level
+    disagreement would silently diverge the candidate sets."""
     import duckdb
+    from pyspark.sql import functions as F
 
     from backend_model_spark.operators.geo import (
         KNN_GRID_MAX_HALVINGS,
         KNN_GRID_N_REF,
         _HALVINGS_SQL,
-        _grid_halvings,
     )
 
-    con = duckdb.connect()
     probes = [1, KNN_GRID_N_REF - 1, KNN_GRID_N_REF, KNN_GRID_N_REF + 1]
     for k in range(1, KNN_GRID_MAX_HALVINGS + 2):
         t = KNN_GRID_N_REF * 4**k
         probes += [t - 1, t, t + 1]
+    spark_pow2 = dict(
+        spark.createDataFrame([(n,) for n in probes], "n bigint")
+        .select("n", F.expr(_HALVINGS_SQL))
+        .collect()
+    )
+    con = duckdb.connect()
     for n in probes:
-        (sql_pow2,) = con.execute(
+        (duck_pow2,) = con.execute(
             f"SELECT {_HALVINGS_SQL} FROM (SELECT {n}::BIGINT AS n)"
         ).fetchone()
-        assert sql_pow2 == 2 ** _grid_halvings(n), f"ladder split at n={n}"
+        k = max(
+            [0]
+            + [j for j in range(1, KNN_GRID_MAX_HALVINGS + 1) if n >= KNN_GRID_N_REF * 4**j]
+        )
+        assert spark_pow2[n] == duck_pow2 == 2**k, f"ladder split at n={n}"
 
 
 def test_bpe_merges_match_python_reference_with_overlaps(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""The session memo: revalidation after clearCache, the LRU bound over
+"""The session memo: re-registration after clearCache, the LRU bound over
 frame-owning entries, and the purge of other applications' entries."""
 
 from __future__ import annotations
@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from backend_model_spark import memo
+from tests.conftest import group_jobs
 
 
 @pytest.fixture
@@ -38,6 +39,10 @@ def _frame(spark, tag: int):
 
 
 def test_hit_after_clearcache_rebuilds_dead_frames(spark, entries):
+    """A hit after clearCache() returns the same objects and runs no
+    job: it re-registers both dead frames, and the next action on the
+    later frame fills both caches."""
+
     def build():
         base = spark.range(200).withColumn("k", F.col("id") % 7).persist()
         base.count()
@@ -48,10 +53,16 @@ def test_hit_after_clearcache_rebuilds_dead_frames(spark, entries):
     base, rolled, _ = memo.memo(spark, "two-frames", build)
     spark.catalog.clearCache()
     assert not _live(base) and not _live(rolled)
-    got = memo.memo(spark, "two-frames", build)
+    got = []
+    hit = lambda: got.extend(memo.memo(spark, "two-frames", build))  # noqa: E731
+    jobs = group_jobs(spark, "memo-hit", hit)
     assert got[0] is base and got[1] is rolled  # a hit, not a rebuild
+    assert jobs == 0
+    assert _live(base) and _live(rolled)
+    assert not _cache_loaded(spark, base) and not _cache_loaded(spark, rolled)
+    assert rolled.count() == 7
     assert _cache_loaded(spark, rolled)
-    assert _cache_loaded(spark, base), "base was re-registered but never built"
+    assert _cache_loaded(spark, base), "rolled's cache was built without reading base's"
 
 
 def test_lru_bound_evicts_and_unpersists(spark, entries, monkeypatch):

@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 
 from backend_model_spark.plans import registry
+from tests.conftest import group_jobs
 
 registry._ensure_loaded()
 _QUERIES = registry.queries()
@@ -691,36 +692,28 @@ def test_max_drawdown_two_stage_primitives(spark, sf_dir):
 # Spark jobs each entry may run while its DataFrame is being built:
 # the bounded rollups (and the KMV sketch's merged bottoms, at most
 # 2·KMV_K rows) rank on with_global_rank's single-partition path
-# (no pin, no driver collect of offsets), and the sinks re-read their
-# files with the schema they just wrote (no footer-inference job), so
-# only the writes the entry itself performs remain.
+# (no pin, no driver collect of offsets), kNN comps picks its grid
+# level in a scalar subquery, and the sinks re-read their files with
+# the schema they just wrote (no footer-inference job), so only the
+# writes the entry itself performs remain. Duplicate clusters is the
+# one iterative fixpoint (see dedup._connected_components): its edge
+# count and label checkpoint run at build.
 _BUILD_JOBS = {
     "window_max_drawdown": 0,
     "window_revenue_growth": 0,
     "events_changepoint": 0,
     "join_order_backlog": 0,
     "agg_kmv_distinct_sketch": 0,
+    "geo_knn_comps": 0,
+    "dedup_duplicate_clusters": 4,  # edge count, label checkpoint
     "io_append_sink": 2,  # overwrite batch 1, append batch 2
     "io_dynamic_partition_overwrite": 2,  # seed write, restatement
 }
 
 
-def _group_jobs(spark, group, run) -> int:
-    """Spark jobs that ``run()`` starts under job group ``group``."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status tracker is fed by the asynchronous listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _build_jobs(spark, sf_dir, name, group) -> int:
     """Spark jobs run while building entry ``name``'s DataFrame."""
-    return _group_jobs(spark, group, lambda: _QUERIES[name](spark, sf_dir))
+    return group_jobs(spark, group, lambda: _QUERIES[name](spark, sf_dir))
 
 
 @pytest.mark.parametrize("name", sorted(_BUILD_JOBS))
@@ -763,23 +756,23 @@ def test_lineage_action_jobs(spark, sf_dir, name):
     that buy parallelism."""
     _noop_write(_QUERIES[name](spark, sf_dir))  # warm the schema memo
     df = _QUERIES[name](spark, sf_dir)
-    jobs = _group_jobs(spark, f"action-jobs:{name}", lambda: _noop_write(df))
+    jobs = group_jobs(spark, f"action-jobs:{name}", lambda: _noop_write(df))
     assert jobs == _ACTION_JOBS[name], (
         f"{name} ran {jobs} jobs per action, expected {_ACTION_JOBS[name]}"
     )
 
 
 # (memo hit, memo warm and cache cold) build jobs of entries that go
-# through the session memo. A hit whose frames are live runs no job of
-# its own. After clearCache() a hit rebuilds each dead frame with one
-# count(), which runs one job per query stage under AQE. The BRP
-# certificate runs its own checks at build, and the sf0.001 vectors
-# are duplicate-free, so its memo owns no frame. The trainer fits and
-# the tuning searches are value memos.
+# through the session memo. A hit runs no job: after clearCache() it
+# only re-registers the dead frames, and the first action that
+# consumes them fills the cache. The BRP certificate runs its own
+# checks at build, and the sf0.001 vectors are duplicate-free, so its
+# memo owns no frame. The trainer fits and the tuning searches are
+# value memos.
 _MEMO_BUILD_JOBS = {
-    "dedup_minhash_lsh_candidates": (0, 7),
-    "dedup_embedding_neardup": (0, 5),
-    "dedup_semantic_semdedup": (0, 11),
+    "dedup_minhash_lsh_candidates": (0, 0),
+    "dedup_embedding_neardup": (0, 0),
+    "dedup_semantic_semdedup": (0, 0),
     "mllib_brp_ann_join": (41, 41),
     "ml_mlp_train_adam": (0, 0),
     "ml_mlp_train_distributed": (0, 0),

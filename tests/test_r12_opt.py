@@ -23,6 +23,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import group_jobs
+
 
 def test_dataset_key_observes_every_child(tmp_path):
     from backend_model_spark.sources.tables import _dataset_key
@@ -126,16 +128,21 @@ def _cache_loaded(spark, df) -> bool:
     return cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
 
 
-def test_semdedup_memo_rebuilds_grouped_alone(spark, sf_dir):
-    """A memo hit where only ``grouped`` lost its cache must rebuild
-    ``grouped`` itself, not just re-count the still-live ``assigned``."""
+def test_semdedup_memo_reregisters_grouped_alone(spark, sf_dir):
+    """A memo hit where only ``grouped`` lost its cache re-registers
+    ``grouped`` at its storage level without running a job, keeps the
+    still-live ``assigned``, and the entry's rows are unchanged."""
+    from pyspark import StorageLevel
+
     from backend_model_spark import memo
     from backend_model_spark.operators import similarity
 
-    similarity._semdedup_parts(spark, sf_dir)
+    before = similarity.semdedup_clusters(spark, sf_dir).collect()
     grouped, assigned = memo.lookup(spark, ("semdedup", sf_dir))
-    assert _cache_loaded(spark, grouped) and _cache_loaded(spark, assigned)
     grouped.unpersist(blocking=True)
-    similarity._semdedup_parts(spark, sf_dir)
+    hit = lambda: similarity._semdedup_parts(spark, sf_dir)  # noqa: E731
+    assert group_jobs(spark, "semdedup-hit", hit) == 0
+    assert grouped.storageLevel == StorageLevel.MEMORY_AND_DISK
     assert _cache_loaded(spark, assigned)
-    assert _cache_loaded(spark, grouped), "grouped was re-registered but never built"
+    assert similarity.semdedup_clusters(spark, sf_dir).collect() == before
+    assert _cache_loaded(spark, grouped), "the entry's action did not fill grouped"
