@@ -19,6 +19,8 @@ Scale design:
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -317,6 +319,35 @@ ORDER BY canonical_doc_id
 """
 
 
+def _rep_overlaps(spark: SparkSession, sf_dir: str):
+    """(sized, star) — the shared inverted-index self-join of the
+    exact overlap entries (n-gram Jaccard, containment).
+
+    ``sized`` has one row per representative pair sharing at least one
+    shingle: (doc_a < doc_b, n_common, n_a, n_b) with n_a/n_b the two
+    distinct-shingle counts; the shingle equi-join never cross joins.
+    ``star`` is each rep→member star edge with its rep's count ``n_a``
+    (see :data:`DEDUP_FIRST_CTES`). Each entry adds only its score,
+    gate and literal star columns."""
+    _, star = _content_reps(spark, sf_dir)
+    shingled = _rep_shingled(spark, sf_dir)
+    sizes = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
+    a = shingled.alias("a")
+    b = shingled.alias("b")
+    common = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
+    return common.join(sa, "doc_a").join(sb, "doc_b"), star.join(sa, "doc_a")
+
+
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by exact word-3-gram Jaccard ≥ 0.05 via an
     inverted-index self-join (shingle equi-join, never a cross join).
@@ -331,28 +362,14 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair list is quadratic in duplicate-group size (a 4001-copy
     boilerplate group alone is 8M rows); the star form is linear and
     expansion-recoverable."""
-    _, star = _content_reps(spark, sf_dir)
-    shingled = _rep_shingled(spark, sf_dir)
-    # persisted: read three times below (sizes + both join sides)
-    sizes = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = shingled.alias("a")
-    b = shingled.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
+    sized, star = _rep_overlaps(spark, sf_dir)
     jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
     rep_pairs = (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", F.round(jac, 6))
+        sized.withColumn("jaccard", F.round(jac, 6))
         .filter(F.col("jaccard") >= 0.05)
         .select("doc_a", "doc_b", "n_common", "jaccard")
     )
-    star_rows = star.join(sa, "doc_a").select(
+    star_rows = star.select(
         "doc_a",
         "doc_b",
         F.col("n_a").alias("n_common"),
@@ -400,35 +417,18 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominated by the long doc). The sub-document-duplication signal
     CCNet-style corpus cleaning keys quote/nesting decisions on.
 
-    Same inverted-index equi-join skeleton as
-    :func:`ngram_jaccard_pairs` (shingle join, never cross); both
+    Same inverted-index equi-join as :func:`ngram_jaccard_pairs`
+    (:func:`_rep_overlaps`: shingle join, never cross); both
     directions report from ONE intersection computation. Gate:
     max-direction containment ≥ 0.5 (a real subset relation), in
     integer micro units. Round 8: exact-dedup-first star contract
     (see :data:`DEDUP_FIRST_CTES`) — identical docs are one
     rep→member star row at containment 1.0/1.0, never C(g,2) rows.
     """
-    _, star = _content_reps(spark, sf_dir)
-    shingled = _rep_shingled(spark, sf_dir)
-    sizes = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = shingled.alias("a")
-    b = shingled.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
+    sized, star = _rep_overlaps(spark, sf_dir)
     micro = lambda num, den: F.floor(num * 1000000 / den + F.lit(0.5)).cast("long")
     rep_pairs = (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("c_a_in_b_micro", micro(F.col("n_common"), F.col("n_a")))
+        sized.withColumn("c_a_in_b_micro", micro(F.col("n_common"), F.col("n_a")))
         .withColumn("c_b_in_a_micro", micro(F.col("n_common"), F.col("n_b")))
         .filter(
             F.greatest("c_a_in_b_micro", "c_b_in_a_micro") >= 500000
@@ -437,7 +437,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a", "doc_b", "n_common", "c_a_in_b_micro", "c_b_in_a_micro"
         )
     )
-    star_rows = star.join(sa, "doc_a").select(
+    star_rows = star.select(
         "doc_a",
         "doc_b",
         F.col("n_a").alias("n_common"),
@@ -700,27 +700,29 @@ ORDER BY doc_id
 EMBED_PAIR_BLOCKS = 4
 
 
-def _cell_cosine_kernel(left, right):
+def _cell_cosine_kernel(left, right, carry=()):
     """Exact pairwise cosine inside one grid cell — see
-    :func:`embedding_neardup_pairs` for the bit-parity argument.
+    :func:`grid_cosine_pairs` for the bit-parity argument.
 
-    left = cell's A-side rows (vec_id, label, v, __blk, __cj),
-    right = B-side; emits ordered pairs (a.vec_id < b.vec_id) whose
-    raw cosine clears the 0.4 gate with a 1e-6 margin (the exact
-    6-dp round + threshold happen JVM-side afterwards)."""
+    left = cell's A-side rows (vec_id, label, v, *carry), right =
+    B-side rows (bvec_id, blabel, bv, b<c> per carried column); emits
+    ordered pairs (a.vec_id < b.vec_id) whose raw cosine clears the
+    0.4 gate with a 1e-6 margin (the exact 6-dp round + threshold
+    happen JVM-side afterwards), plus each carried long column of the
+    pair's two rows as ``a_<c>`` / ``b_<c>``."""
     import numpy as np
     import pandas as pd
 
-    empty = pd.DataFrame(
-        {
-            "vec_a": pd.Series(dtype="int64"),
-            "vec_b": pd.Series(dtype="int64"),
-            "label": pd.Series(dtype="int32"),
-            "cos_raw": pd.Series(dtype="float64"),
-        }
-    )
     if len(left) == 0 or len(right) == 0:
-        return empty
+        return pd.DataFrame(
+            {
+                "vec_a": pd.Series(dtype="int64"),
+                "vec_b": pd.Series(dtype="int64"),
+                "label": pd.Series(dtype="int32"),
+                "cos_raw": pd.Series(dtype="float64"),
+                **{f"{s}_{c}": pd.Series(dtype="int64") for c in carry for s in "ab"},
+            }
+        )
     ids_a = left["vec_id"].to_numpy()
     ids_b = right["bvec_id"].to_numpy()
     va = np.stack(left["v"].to_numpy()).astype(np.float64, copy=False)
@@ -743,26 +745,103 @@ def _cell_cosine_kernel(left, right):
     ia, jb = np.nonzero(
         (ids_a[:, None] < ids_b[None, :]) & (cos >= 0.4 - 1e-6)
     )
-    return pd.DataFrame(
-        {
-            "vec_a": ids_a[ia],
-            "vec_b": ids_b[jb],
-            "label": np.full(len(ia), left["label"].iloc[0], dtype="int32"),
-            "cos_raw": cos[ia, jb],
-        }
+    out = {
+        "vec_a": ids_a[ia],
+        "vec_b": ids_b[jb],
+        "label": np.full(len(ia), left["label"].iloc[0], dtype="int32"),
+        "cos_raw": cos[ia, jb],
+    }
+    for c in carry:
+        out["a_" + c] = left[c].to_numpy()[ia]
+        out["b_" + c] = right["b" + c].to_numpy()[jb]
+    return pd.DataFrame(out)
+
+
+def grid_cosine_pairs(v: DataFrame, carry=()) -> DataFrame:
+    """Exact cosine of every within-label pair of ``v``'s rows
+    (vec_id, label, v = array<double>, plus the long columns named in
+    ``carry``): raw kernel output (vec_a, vec_b, label, cos_raw) with
+    vec_a < vec_b and cos_raw ≥ 0.4 − 1e-6, plus ``a_<c>`` / ``b_<c>``
+    for each carried column. Callers round and gate JVM-side.
+
+    GRID-BLOCKED THETA JOIN (the Okcan & Riedewald cell scheme; the
+    JVM-join reference formulation lives as the executable spec in
+    tests/test_edge_cases.py::test_grid_pairs_bound_per_cell_and_exact):
+    each label's all-pairs work is spread over EMBED_PAIR_BLOCKS²
+    cogrouped (label, i, j) cells, so a skewed label cannot serialize
+    one task.
+
+    VECTORIZED EXACT KERNEL (round-8 Zipf-stress fix #2): per-pair JVM
+    expression evaluation (lambda fold OR unrolled 64-term sum — both
+    measured, SCALE.md) pays ~µs/pair: 39M grid pairs at 10× cost
+    144-298 s. The cells evaluated as a cogrouped Arrow kernel run at
+    numpy speed while staying BIT-IDENTICAL to the JVM fold and
+    DuckDB's list_sum: products are elementwise IEEE multiplies and
+    the 64-dim reduction is an explicit d=0..63 loop of vectorized
+    adds — left-to-right association per pair, vectorized ACROSS
+    pairs, never matmul/BLAS (whose pairwise summation order would
+    drift ulps). The kernel emits raw cosines with a conservative
+    margin, so the rounding path stays byte-for-byte the one the
+    oracle mirrors."""
+    m = EMBED_PAIR_BLOCKS
+    cell = F.explode(F.array(*[F.lit(i) for i in range(m)]))
+    # EXPLICIT cell-key width (round 11): the kernel stage is compute-
+    # bound on per-cell pair work — AQE's byte-based coalescing saw a
+    # few MB of shuffle and squashed the numpy kernel onto ~5 tasks at
+    # sf0.1; pinning the exchange at the conf'd shuffle width keeps
+    # the same cluster-tunable fan-out and full local parallelism.
+    sp = int(v.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    ga = (
+        v.withColumn("__blk", F.pmod(F.hash("vec_id"), F.lit(m)))
+        .withColumn("__cj", cell)
+        .select(
+            F.col("label"), F.col("__blk").alias("__ci"), "__cj", "vec_id", "v", *carry
+        )
+        .repartition(sp, "label", "__ci", "__cj")
+        .groupBy("label", "__ci", "__cj")
+    )
+    # B side carries RENAMED columns: a self-cogroup shares attribute
+    # ids between sides, and Catalyst's dedup+pruning strips the right
+    # side's payload columns out of the Arrow batch (observed as a
+    # KeyError inside the kernel when the caller projects a column
+    # subset) — distinct names keep both payloads intact
+    gb = (
+        v.select(
+            F.col("vec_id").alias("bvec_id"),
+            F.col("label").alias("blabel"),
+            F.col("v").alias("bv"),
+            *[F.col(c).alias("b" + c) for c in carry],
+        )
+        .withColumn("__blk", F.pmod(F.hash("bvec_id"), F.lit(m)))
+        .withColumn("__ci", cell)
+        .select(
+            "blabel",
+            "__ci",
+            F.col("__blk").alias("__cj"),
+            "bvec_id",
+            "bv",
+            *["b" + c for c in carry],
+        )
+        .repartition(sp, "blabel", "__ci", "__cj")
+        .groupBy("blabel", "__ci", "__cj")
+    )
+    kernel = partial(_cell_cosine_kernel, carry=carry)
+    # the plan's Python node is named after the UDF's __name__
+    kernel.__name__ = _cell_cosine_kernel.__name__
+    return ga.cogroup(gb).applyInPandas(
+        kernel,
+        schema="vec_a long, vec_b long, label int, cos_raw double"
+        + "".join(f", a_{c} long, b_{c} long" for c in carry),
     )
 
 
 def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup: pairs with cosine ≥ 0.4, bucketed by
     label so the pairwise compare is per-bucket (the IVF trick), not a
-    global cross join — and grid-blocked within label (the Okcan &
-    Riedewald theta-join cell scheme, realized since round 8 by the
-    cogrouped Arrow kernel's (label, i, j) cell keys; the JVM-join
-    reference formulation lives as the executable spec in
-    tests/test_edge_cases.py::test_grid_pairs_bound_per_cell_and_exact)
-    so a skewed label cannot serialize one task (the round-2 shape
-    was per-label all-pairs in a single join cell). Dot products computed in double with identical
+    global cross join — and grid-blocked within label by
+    :func:`grid_cosine_pairs`, so a skewed label cannot serialize one
+    task (the round-2 shape was per-label all-pairs in a single join
+    cell). Dot products computed in double with identical
     left-to-right folds on both engines.
 
     Round 8 EXACT-DEDUP-FIRST STAR CONTRACT (the Zipf-stress fix, see
@@ -812,58 +891,9 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1.0).alias("cosine"),
         )
     )
-    # VECTORIZED EXACT KERNEL (round-8 Zipf-stress fix #2): the
-    # O(pairs-per-label) exact cosine is this entry's contract, and
-    # per-pair JVM expression evaluation (lambda fold OR unrolled
-    # 64-term sum — both measured, SCALE.md) pays ~µs/pair: 39M grid
-    # pairs at 10× cost 144-298 s. The same grid cells evaluated as a
-    # cogrouped Arrow kernel run at numpy speed while staying
-    # BIT-IDENTICAL to the JVM fold and DuckDB's list_sum: products
-    # are elementwise IEEE multiplies and the 64-dim reduction is an
-    # explicit d=0..63 loop of vectorized adds — left-to-right
-    # association per pair, vectorized ACROSS pairs, never matmul/BLAS
-    # (whose pairwise summation order would drift ulps). The kernel
-    # emits raw cosines with a conservative margin and the 6-dp edge
-    # round + threshold stay in JVM expressions, so the rounding path
-    # is byte-for-byte the one the oracle mirrors.
-    m = EMBED_PAIR_BLOCKS
-    cell = F.explode(F.array(*[F.lit(i) for i in range(m)]))
-    # EXPLICIT cell-key width (round 11): the kernel stage is compute-
-    # bound on per-cell pair work — AQE's byte-based coalescing saw a
-    # few MB of shuffle and squashed the numpy kernel onto ~5 tasks at
-    # sf0.1; pinning the exchange at the conf'd shuffle width keeps
-    # the same cluster-tunable fan-out and full local parallelism.
-    sp = int(v.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    ga = (
-        v.withColumn("__blk", F.pmod(F.hash("vec_id"), F.lit(m)))
-        .withColumn("__cj", cell)
-        .select(F.col("label"), F.col("__blk").alias("__ci"), "__cj", "vec_id", "v")
-        .repartition(sp, "label", "__ci", "__cj")
-        .groupBy("label", "__ci", "__cj")
-    )
-    # B side carries RENAMED columns: a self-cogroup shares attribute
-    # ids between sides, and Catalyst's dedup+pruning strips the right
-    # side's payload columns out of the Arrow batch (observed as a
-    # KeyError inside the kernel when the caller projects a column
-    # subset) — distinct names keep both payloads intact
-    gb = (
-        v.select(
-            F.col("vec_id").alias("bvec_id"),
-            F.col("label").alias("blabel"),
-            F.col("v").alias("bv"),
-        )
-        .withColumn("__blk", F.pmod(F.hash("bvec_id"), F.lit(m)))
-        .withColumn("__ci", cell)
-        .select("blabel", "__ci", F.col("__blk").alias("__cj"), "bvec_id", "bv")
-        .repartition(sp, "blabel", "__ci", "__cj")
-        .groupBy("blabel", "__ci", "__cj")
-    )
-    raw = ga.cogroup(gb).applyInPandas(
-        _cell_cosine_kernel,
-        schema="vec_a long, vec_b long, label int, cos_raw double",
-    )
     rep_pairs = (
-        raw.withColumn("cosine", F.round("cos_raw", 6))
+        grid_cosine_pairs(v)
+        .withColumn("cosine", F.round("cos_raw", 6))
         .filter(F.col("cosine") >= 0.4)
         .select("vec_a", "vec_b", "label", "cosine")
     )
@@ -1369,8 +1399,6 @@ def lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_a", "doc_b")
     )
-    # shingled stays persisted until the caller materializes
-    # (see lsh_graph_pagerank note); bench/driver reclaim via session
     return out
 
 

@@ -6,11 +6,11 @@ the oracle-checkable / seeded-deterministic slice of that surface).
   via sufficient statistics (single-pass distributive aggregates), the
   oracle-checkable core of linear modeling: DuckDB's ``regr_slope`` /
   ``regr_intercept`` / ``regr_r2`` verify the math exactly.
-* :func:`gbt_train_eval` — end-to-end MLlib pipeline (indexers →
-  assembler → GBT) trained on document features (the testdata's one
-  learnable label — see the round-7 note above ``GBT_FEATURES``);
-  registered via its certificate face, which includes a truthful
-  ``test_r2_positive`` generalization boolean.
+* :func:`gbt_train_eval_certified` — end-to-end MLlib pipeline
+  (indexers → assembler → GBT) trained on document features (the
+  testdata's one learnable label — see the round-7 note above
+  ``GBT_FEATURES``), registered as a certificate row that includes a
+  truthful ``test_r2_positive`` generalization boolean.
 """
 
 from __future__ import annotations
@@ -171,8 +171,8 @@ def _fitted_gbt(spark: SparkSession, sf_dir: str):
     column changes, partitionings, and engines.
 
     The fit is memoized per (application, sf_dir) and shared between
-    gbt_train_eval and gbt_feature_importance — one training serves
-    both views (metrics, importances), exactly like a model registry
+    the train-eval and feature-importance certificates — one training
+    serves both views (metrics, importances), exactly like a model registry
     in a production pipeline. Training is the most expensive single
     step in the whole registry, so recomputing it per query would
     double the correctness-gate cost for zero information."""
@@ -189,29 +189,12 @@ def _fitted_gbt(spark: SparkSession, sf_dir: str):
     return memo(spark, ("gbt", sf_dir), build)
 
 
-def gbt_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seeded MLlib GBT on documents (predict n_chars from
-    text-derived features), returning a schema-stable metrics row.
-    Rows-only check: training isn't SQL-expressible."""
-    from pyspark.ml.evaluation import RegressionEvaluator
-
-    model, train, test = _fitted_gbt(spark, sf_dir)
-    preds = model.transform(test)
-    evaluator = RegressionEvaluator(labelCol="label", predictionCol="prediction")
-    mae = evaluator.setMetricName("mae").evaluate(preds)
-    rmse = evaluator.setMetricName("rmse").evaluate(preds)
-    r2 = evaluator.setMetricName("r2").evaluate(preds)
-    return spark.createDataFrame(
-        [(train.count(), test.count(), float(mae), float(rmse), float(r2))],
-        "n_train bigint, n_test bigint, mae double, rmse double, r2 double",
-    )
-
-
 def gbt_train_eval_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checkable face of :func:`gbt_train_eval` (round-6
-    certificate pattern): the split is content-addressed and fully
-    deterministic (see :func:`_fitted_gbt`) but the trained metrics
-    are engine-local tree-ensemble floats, so the hash covers the
+    """Seeded MLlib GBT on documents (predict n_chars from
+    text-derived features; round-6 certificate pattern): the split is
+    content-addressed and fully deterministic (see
+    :func:`_fitted_gbt`) but the trained metrics are engine-local
+    tree-ensemble floats, so the hash covers the
     exact TOTAL row count (train + test must conserve documents) plus
     certificates — the split fraction lands near 0.8 (±0.10 — an md5
     bucket on a 500-row table has binomial sd ≈ 0.018),
@@ -261,11 +244,13 @@ FROM documents
 
 
 def gbt_feature_importance_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checkable face of :func:`gbt_feature_importance`: the
-    importance VALUES are tree-ensemble floats no SQL engine can
-    reproduce, so the hash covers the fixed feature list plus the
-    axioms any valid importance vector satisfies — every component
-    non-negative and the vector summing to 1 (MLlib normalizes)."""
+    """Feature importances of the seeded GBT of
+    :func:`gbt_train_eval_certified` — model interpretability as a
+    query. The importance VALUES are tree-ensemble floats no SQL
+    engine can reproduce, so the hash covers the fixed feature list
+    plus the axioms any valid importance vector satisfies — every
+    component non-negative and the vector summing to 1 (MLlib
+    normalizes)."""
     import math
 
     model, _, _ = _fitted_gbt(spark, sf_dir)
@@ -380,26 +365,6 @@ FROM lineitem
 GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
 """
-
-
-def gbt_feature_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature importances of the seeded GBT from
-    :func:`gbt_train_eval` — model interpretability as a query
-    (rows-only: importances aren't SQL-expressible; deterministic
-    under the fixed seed/split). Importance ratios are floor-rounded
-    for a stable schema check.
-    """
-    import math
-
-    model, _, _ = _fitted_gbt(spark, sf_dir)
-    imps = model.stages[-1].featureImportances.toArray()
-    rows = [
-        (name, math.floor(float(v) * 1_000_000 + 0.5) / 1_000_000)
-        for name, v in zip(GBT_FEATURES, imps)
-    ]
-    return spark.createDataFrame(
-        rows, "feature string, importance double"
-    ).orderBy(F.col("importance").desc(), F.col("feature").asc())
 
 
 IRLS_STEPS = 8

@@ -6,15 +6,12 @@ These pair with the md5-deterministic implementations in
 versions are cross-engine oracle-checkable; these use MLlib's native
 LSH families (seeded, deterministic within Spark, but not expressible
 in DuckDB SQL) — the production-scale path. Since round 6 each entry
-registers its ``*_certified`` face: exact cross-engine facts plus
-contract-certificate booleans are hashed against a full DuckDB
-oracle, while the engine-local outputs (pair lists, cluster sizes,
-variance ratios) remain available on the underlying functions.
-
-Both faces of each entry run the SAME fitted pipeline through the
-shared ``_minhash_pairs`` / ``_brp_pairs`` / ``_kmeans_pred`` /
-``_pca_ratios`` helpers — a parameter tuned on one face cannot leave
-the other silently certifying a different pipeline.
+is registered as a ``*_certified`` certificate: exact cross-engine
+facts plus contract-certificate booleans are hashed against a full
+DuckDB oracle, while the engine-local outputs (pair lists, cluster
+sizes, variance ratios) stay inside the certificate. The fitted
+pipelines live in ``_minhash_parts`` / ``_brp_parts`` /
+``_kmeans_pred`` / ``_pca_ratios``, which the tests probe directly.
 """
 
 from __future__ import annotations
@@ -100,7 +97,7 @@ def _star_expectations(keyed: DataFrame, key_col: str, id_col: str, a: str, b: s
     group (linear, mirroring ``dedup_keep_list``). Computed via
     groupBy+join, NOT the expansion's own window lineage, so it is an
     independent witness of the rep assignment + star emission. SHARED
-    by both certified faces and the flip test (round-7 review lesson:
+    by both LSH certificates and the flip test (round-7 review lesson:
     hand-copied check formulas drift silently)."""
     groups = keyed.groupBy(key_col).agg(
         F.min(id_col).alias("_rep"), F.count(F.lit(1)).alias("_c")
@@ -122,7 +119,7 @@ def _minhash_parts(spark: SparkSession, sf_dir: str):
     """(shingled, reps, cand, kept, star) — the ONE MinHashLSH
     pipeline (shingles → HashingTF 2^18 binary → 4-table MinHash →
     Jaccard < 0.9 self-join; 8 → 4 tables round 9, certified by
-    ``sample_recall_ok``) shared by the plain and certified faces.
+    ``sample_recall_ok``).
     ``reps`` is the representative doc frame the recall certificate
     probes; ``cand`` the uncapped rep-level candidate list
     (certificate-only); ``kept`` its per-anchor top-``K_CAP`` prefix
@@ -148,7 +145,7 @@ def _minhash_parts(spark: SparkSession, sf_dir: str):
     output linear in the input, full pair list recoverable by
     expanding through the star edges. This intentionally DIVERGES
     from approxSimilarityJoin's all-pairs contract on duplicated
-    corpora (documented on both registered faces); on a
+    corpora; on a
     duplicate-free corpus the output is identical to the full join.
 
     DUPLICATE-FREE SHORT-CIRCUIT (round 8): one cheap two-column
@@ -235,11 +232,32 @@ def _minhash_parts(spark: SparkSession, sf_dir: str):
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str):
-    """(shingled, emitted pairs) — the capped contract face:
+    """(shingled, emitted pairs) — the capped contract:
     per-anchor top-``K_CAP`` candidates plus the duplicate star
     edges. See :func:`_minhash_parts` for the pipeline."""
     shingled, _, _, kept, star = _minhash_parts(spark, sf_dir)
     return shingled, kept.unionByName(star)
+
+
+def _topk_recall(topk: DataFrame, kept: DataFrame, a: str, b: str, id_col: str):
+    """Share of the exact probe answers ``topk`` (p_id, ``id_col``)
+    that the emitted ``kept`` pairs (``a`` = probe, ``b`` = neighbor)
+    recall, or None when the exact answer is empty (nothing to
+    recall). The tail of both sampled-recall certificates."""
+    # tiny (≤ probes×K) and consumed twice: don't re-pay the exact
+    # side's brute force for the hits join
+    topk = topk.persist()
+    try:
+        n_exact = topk.count()
+        if n_exact == 0:
+            return None
+        hits = topk.join(
+            kept.select(F.col(a).alias("p_id"), F.col(b).alias(id_col)),
+            ["p_id", id_col],
+        ).count()
+        return hits / n_exact
+    finally:
+        topk.unpersist()
 
 
 def _minhash_sample_recall(reps: DataFrame, kept: DataFrame):
@@ -293,54 +311,18 @@ def _minhash_sample_recall(reps: DataFrame, kept: DataFrame):
         .withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= K_CAP)
     )
-    topk = topk.persist()  # tiny (≤ probes×K); consumed twice
     try:
-        n_exact = topk.count()
-        if n_exact == 0:
-            return None
-        hits = topk.join(
-            kept.select(F.col("doc_a").alias("p_id"), F.col("doc_b").alias("doc_id")),
-            ["p_id", "doc_id"],
-        ).count()
-        return hits / n_exact
+        return _topk_recall(topk, kept, "doc_a", "doc_b", "doc_id")
     finally:
         sh.unpersist()
-        topk.unpersist()
-
-
-def mllib_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHashLSH near-dup join over shingle sets (Jaccard distance
-    ≤ 0.9): shingles → HashingTF sparse vectors → approxSimilarityJoin.
-
-    Scale: approxSimilarityJoin explodes each row into its OR-amplified
-    hash buckets and equi-joins on bucket — shuffle on hash keys, no
-    all-pairs compare.
-
-    CONTRACT (rounds 8-9): on a duplicated corpus the output is the
-    keep-list shape — rep-level LSH candidate pairs plus rep→member
-    star edges at distance 0 — NOT approxSimilarityJoin's all-pairs
-    list (which is quadratic in duplicate-group size); and since
-    round 9 the candidate list is rank-bounded to the ``K_CAP``
-    nearest per anchor. The unbounded list exists only inside the
-    certificate face; see :func:`_minhash_parts`.
-
-    SCALE PATH NOTE: this entry is certified MLlib interop. The
-    repo's production-scale near-dup path is the md5-deterministic
-    LSH family (``dedup.lsh_candidate_pairs``, dedup.py — 1.7× at
-    Zipf 10× vs this entry's MLlib fixed-bucket cost).
-    """
-    _, pairs = _minhash_pairs(spark, sf_dir)
-    return pairs.select(
-        "doc_a", "doc_b", F.round("jaccard_dist", 6).alias("jaccard_dist")
-    ).orderBy("doc_a", "doc_b")
 
 
 def _brp_parts(spark: SparkSession, sf_dir: str):
     """(vecs, reps, cand, kept, star) — the ONE BRP pipeline
     (bucketLength 0.3 since round 9, 4 tables, Euclidean < 1.15
-    self-join) shared by the plain and certified faces, memoized per
-    (application, sf_dir); ``reps`` may be persisted and is OWNED BY
-    THE MEMO (callers must not unpersist it). ``cand`` is the uncapped
+    self-join), memoized per (application, sf_dir); ``reps`` may be
+    persisted and is OWNED BY THE MEMO (callers must not unpersist
+    it). ``cand`` is the uncapped
     rep-level candidate list (certificate-only); ``kept`` its
     per-anchor top-``K_CAP`` prefix (the emitted contract); ``star``
     the rep→member duplicate edges.
@@ -436,7 +418,7 @@ def _brp_build(spark: SparkSession, sf_dir: str):
 
 
 def _brp_pairs(spark: SparkSession, sf_dir: str):
-    """(vecs-with-arr, emitted pairs) — the capped contract face:
+    """(vecs-with-arr, emitted pairs) — the capped contract:
     per-anchor top-``K_CAP`` candidates plus the duplicate star
     edges. See :func:`_brp_parts` for the pipeline."""
     vecs, _, _, kept, star = _brp_parts(spark, sf_dir)
@@ -475,41 +457,13 @@ def _brp_sample_recall(reps: DataFrame, kept: DataFrame):
         .filter(F.col("d2") < 1.15 * 1.15)
         .withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= K_CAP)
-    ).persist()  # tiny (≤ probes×K); consumed twice — don't re-pay
-    try:           # the probes×reps brute force for the hits join
-        n_exact = topk.count()
-        if n_exact == 0:
-            return None
-        hits = topk.join(
-            kept.select(F.col("vec_a").alias("p_id"), F.col("vec_b").alias("vec_id")),
-            ["p_id", "vec_id"],
-        ).count()
-        return hits / n_exact
-    finally:
-        topk.unpersist()
-
-
-def mllib_brp_ann_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Euclidean ANN self-join via BucketedRandomProjectionLSH over the
-    embedding vectors, the MLlib scale path for similarity search.
-
-    CONTRACT (rounds 8-9): on a duplicated corpus the output is the
-    keep-list shape — rep-level LSH candidates + rep→member star
-    edges at distance 0, linear in input — not approxSimilarityJoin's
-    quadratic all-pairs list; and since round 9 the candidate list is
-    rank-bounded to the ``K_CAP`` nearest per anchor (output ≤
-    K·reps + duplicates, the top-k contract a 100 TB user actually
-    needs). The unbounded list exists only inside the certificate
-    face; see :func:`_brp_parts`."""
-    _, pairs = _brp_pairs(spark, sf_dir)
-    return pairs.select(
-        "vec_a", "vec_b", F.round("euclidean_dist", 6).alias("euclidean_dist")
-    ).orderBy("vec_a", "vec_b")
+    )
+    return _topk_recall(topk, kept, "vec_a", "vec_b", "vec_id")
 
 
 def _kmeans_pred(spark: SparkSession, sf_dir: str):
     """(predictions, silhouette) from the ONE seeded KMeans fit
-    (k=10, maxIter=20) shared by the plain and certified faces."""
+    (k=10, maxIter=20)."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.evaluation import ClusteringEvaluator
 
@@ -526,29 +480,8 @@ def _kmeans_pred(spark: SparkSession, sf_dir: str):
     return pred, silhouette
 
 
-def mllib_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MLlib KMeans over the embedding vectors (k=10, fixed seed):
-    cluster sizes plus silhouette — the trained sibling of the
-    deterministic E-step in ``similarity.centroid_assign``.
-
-    Scale: Lloyd iterations are data-parallel map-reduce per step
-    (assign = broadcast centroids + one scan; update = one shuffle of
-    k×dim partial sums); the fitted model is driver-held and tiny.
-    Centroid init is seeded-random, not expressible in the SQL oracle
-    — the registered face is :func:`mllib_kmeans_clusters_certified`.
-    """
-    pred, silhouette = _kmeans_pred(spark, sf_dir)
-    return (
-        pred.groupBy(F.col("prediction").alias("cluster"))
-        .agg(F.count(F.lit(1)).alias("n_vectors"))
-        .withColumn("silhouette", F.round(F.lit(silhouette), 4))
-        .orderBy("cluster")
-    )
-
-
 def _pca_ratios(spark: SparkSession, sf_dir: str) -> list[float]:
-    """Explained-variance ratios from the ONE PCA fit (k=8) shared by
-    the plain and certified faces."""
+    """Explained-variance ratios from the ONE PCA fit (k=8)."""
     from pyspark.ml.feature import PCA
 
     emb = load_table(spark, "embeddings", sf_dir).select(
@@ -558,34 +491,6 @@ def _pca_ratios(spark: SparkSession, sf_dir: str) -> list[float]:
     )
     model = PCA(k=8, inputCol="features", outputCol="pc").fit(emb)
     return [float(v) for v in model.explainedVariance]
-
-
-def mllib_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCA over the embedding corpus: top-8 principal components'
-    explained-variance ratios — the dimensionality check run before
-    committing to a quantization/indexing budget (how many of the 64
-    dims carry signal).
-
-    Eigen-decomposition isn't SQL-expressible; ratios are
-    deterministic (eigenvalues are sign/rotation-invariant even where
-    eigenvectors aren't) and rounded with the floor discipline. The
-    registered face is :func:`mllib_pca_variance_certified`.
-
-    Scale: MLlib PCA computes the Gramian distributively (one pass,
-    map-side d×d partial products; d=64 → 4 KB per task), then the
-    driver eigendecomposes the tiny d×d matrix. Never materializes a
-    row matrix on the driver.
-    """
-    import math
-
-    ratios = _pca_ratios(spark, sf_dir)
-    rows = [
-        (i + 1, float(math.floor(r * 1_000_000 + 0.5)) / 1_000_000)
-        for i, r in enumerate(ratios)
-    ]
-    return spark.createDataFrame(
-        rows, "component int, variance_ratio double"
-    ).orderBy("component")
 
 
 def mllib_fpgrowth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -669,18 +574,17 @@ ORDER BY itemset
 
 
 # ---------------------------------------------------------------------------
-# Round-6 certificate faces: same fitted pipelines (shared helpers
-# above), but the REGISTERED output hashes exact cross-engine facts +
-# certificate booleans (the `agg_approx_distinct` pattern) instead of
-# engine-local values. Non-vacuousness and boolean-flip proofs:
-# tests/test_certificates.py.
+# Round-6 certificates: the fitted pipelines above, but the REGISTERED
+# output hashes exact cross-engine facts + certificate booleans (the
+# `agg_approx_distinct` pattern) instead of engine-local values.
+# Non-vacuousness and boolean-flip proofs: tests/test_certificates.py.
 # ---------------------------------------------------------------------------
 
 
 def _jaccard_dev_excess(pairs: DataFrame, shingled: DataFrame):
     """max over candidate pairs of (|reported jaccard_dist − exact
     set-Jaccard distance| − collision allowance), or None with no
-    pairs. SHARED by the certified face and its flip test (round-7
+    pairs. SHARED by the MinHash certificate and its flip test (round-7
     review: a hand-copied formula in the test drifts silently).
 
     Allowance per pair: (μ + 6√μ + 4)/u where u = |shingle union| and
@@ -714,7 +618,7 @@ def _jaccard_dev_excess(pairs: DataFrame, shingled: DataFrame):
 def _euclid_dev(pairs: DataFrame, vecs: DataFrame):
     """max over candidate pairs of |reported euclidean_dist − exact
     recomputation from the raw arrays|, or None with no pairs. SHARED
-    by the certified face and its flip test. Exact to float-summation
+    by the BRP certificate and its flip test. Exact to float-summation
     order (BRP's keyDistance runs on the raw vectors — no hashing)."""
     exact = F.sqrt(
         F.aggregate(
@@ -738,8 +642,73 @@ def _euclid_dev(pairs: DataFrame, vecs: DataFrame):
     )
 
 
+def _lsh_certificate(spark, parts, ids, key, dist, dev, recall, names):
+    """The one certificate row of both LSH twins — see
+    :func:`mllib_minhash_neardup_certified` for what each boolean
+    certifies.
+
+    ``parts`` = (base, reps, cand, kept, star) from the twin's
+    pipeline; ``ids`` = (id, anchor, neighbor) column names; ``key`` =
+    (name, column) of the exact-duplicate digest over ``base``;
+    ``dist`` = (distance column, threshold); ``dev`` = (exact-distance
+    deviation function of (pairs, base), tolerance); ``recall`` =
+    (sampled-recall function of (reps, kept), floor); ``names`` = the
+    row count, duplicate-pair count and star-edge boolean columns.
+
+    Eager by measurement: a lazy row of scalar subqueries gave the
+    same values and no build jobs, but recomputed the MinHash
+    candidate join once per subquery (about 2× slower at sf0.1)."""
+    base, reps, cand, kept, star = parts
+    id_col, a, b = ids
+    dist_col, threshold = dist
+    base = base.persist()
+    cand = cand.persist()
+    kept = kept.persist()
+    pairs = kept.unionByName(star).persist()
+    # independent star-edge witness (linear — never a C(g,2) self-join,
+    # which would itself be quadratic on a mega-duplicate group)
+    n_dup_pairs, expected = _star_expectations(
+        base.select(id_col, key[1].alias(key[0])), key[0], id_col, a, b
+    )
+    n_rows = base.count()
+    n_missing = expected.join(pairs, [a, b], "left_anti").count()
+    max_dist = pairs.agg(F.max(dist_col)).collect()[0][0]
+    # the LSH-stage certificate (round 7): every reported distance
+    # recomputed from the raw inputs
+    deviation = dev[0](pairs, base)
+    # round 9 — the cap is exactly the per-anchor top-K prefix of the
+    # unbounded candidate list (which lives only here)
+    kcap_ok = _kcap_topk_ok(cand, kept, a, dist_col, b)
+    sampled = recall[0](reps, kept)
+    # reps is NOT unpersisted: the BRP session memo owns it
+    for df in (base, cand, kept, pairs):
+        df.unpersist()
+    n, n_pairs, found = names
+    return spark.createDataFrame(
+        [
+            (
+                n_rows,
+                n_dup_pairs,
+                bool(n_missing == 0),
+                bool(max_dist is None or max_dist <= threshold),
+                bool(deviation is None or deviation <= dev[1]),
+                bool(kcap_ok),
+                bool(sampled is None or sampled >= recall[1]),
+            )
+        ],
+        f"{n} bigint, {n_pairs} bigint, {found} boolean, "
+        "pairs_valid boolean, dist_exact_ok boolean, "
+        "kcap_topk_ok boolean, sample_recall_ok boolean",
+    )
+
+
 def mllib_minhash_neardup_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checkable face of :func:`mllib_minhash_neardup`.
+    """MinHashLSH near-dup self-join over shingle sets (Jaccard
+    distance < 0.9; see :func:`_minhash_parts`), registered as its
+    certificate row. The emitted pairs — per-anchor top-``K_CAP``
+    rep-level candidates plus rep→member star edges at distance 0 —
+    follow MLlib's seeded hashing, which DuckDB cannot reproduce, so
+    they stay inside the certificate (:func:`_lsh_certificate`).
 
     Hashed columns: exact corpus facts (docs with >=1 shingle, exact
     duplicate-text pair count — recomputed by the oracle straight
@@ -790,41 +759,15 @@ def mllib_minhash_neardup_certified(spark: SparkSession, sf_dir: str) -> DataFra
       ≥ ``MH_RECALL_FLOOR`` recalled by the emitted pairs (measured
       1.0 at sf0.01/sf0.1/Zipf with 4 hash tables).
     """
-    shingled, reps, cand, kept, star = _minhash_parts(spark, sf_dir)
-    shingled = shingled.persist()
-    cand = cand.persist()
-    kept = kept.persist()
-    pairs = kept.unionByName(star).persist()
-    # independent star-edge witness (linear — never a C(g,2) self-join,
-    # which would itself be quadratic on a mega-duplicate group)
-    dig = shingled.select("doc_id", F.md5(F.col("text")).alias("h"))
-    n_dup_pairs, expected = _star_expectations(dig, "h", "doc_id", "doc_a", "doc_b")
-    n_docs = shingled.count()
-    n_missing = expected.join(pairs, ["doc_a", "doc_b"], "left_anti").count()
-    max_dist = pairs.agg(F.max("jaccard_dist")).collect()[0][0]
-    # exact set-Jaccard recomputation per candidate (pairs are few)
-    excess = _jaccard_dev_excess(pairs, shingled)
-    # round 9 — the cap is exactly the per-anchor top-K prefix of the
-    # unbounded candidate list (which lives only here)
-    kcap_ok = _kcap_topk_ok(cand, kept, "doc_a", "jaccard_dist", "doc_b")
-    recall = _minhash_sample_recall(reps, kept)
-    for df in (shingled, cand, kept, pairs):
-        df.unpersist()
-    return spark.createDataFrame(
-        [
-            (
-                n_docs,
-                n_dup_pairs,
-                bool(n_missing == 0),
-                bool(max_dist is None or max_dist <= 0.9),
-                bool(excess is None or excess <= 0.0),
-                bool(kcap_ok),
-                bool(recall is None or recall >= MH_RECALL_FLOOR),
-            )
-        ],
-        "n_docs bigint, n_exact_dup_pairs bigint, "
-        "exact_dups_found boolean, pairs_valid boolean, dist_exact_ok boolean, "
-        "kcap_topk_ok boolean, sample_recall_ok boolean",
+    return _lsh_certificate(
+        spark,
+        _minhash_parts(spark, sf_dir),
+        ("doc_id", "doc_a", "doc_b"),
+        ("h", F.md5(F.col("text"))),
+        ("jaccard_dist", 0.9),
+        (_jaccard_dev_excess, 0.0),
+        (_minhash_sample_recall, MH_RECALL_FLOOR),
+        ("n_docs", "n_exact_dup_pairs", "exact_dups_found"),
     )
 
 
@@ -847,7 +790,9 @@ FROM g
 
 
 def mllib_brp_ann_join_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checkable face of :func:`mllib_brp_ann_join`: exact
+    """Euclidean ANN self-join via BucketedRandomProjectionLSH over
+    the embedding vectors (distance < 1.15; see :func:`_brp_parts`),
+    registered as its certificate row (:func:`_lsh_certificate`): exact
     corpus facts (vector count, identical-vector pair count — list
     equality groups, cross-engine exact) + certificates —
 
@@ -879,41 +824,15 @@ def mllib_brp_ann_join_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
       pairs (measured 1.0 on the driver testdata; crossed columns or
       a broken bucket join drive it toward 0).
     """
-    vecs, reps, cand, kept, star = _brp_parts(spark, sf_dir)
-    vecs = vecs.persist()
-    cand = cand.persist()
-    kept = kept.persist()
-    pairs = kept.unionByName(star).persist()
-    # independent star-edge witness (linear, groupBy on the raw arrays)
-    n_twin_pairs, expected = _star_expectations(
-        vecs.select("vec_id", "arr"), "arr", "vec_id", "vec_a", "vec_b"
-    )
-    n_vecs = vecs.count()
-    n_missing = expected.join(pairs, ["vec_a", "vec_b"], "left_anti").count()
-    max_dist = pairs.agg(F.max("euclidean_dist")).collect()[0][0]
-    # round 7 — restored LSH-STAGE certificate (shared helper; a
-    # broken metric or crossed pair wiring flips it)
-    exact_dev = _euclid_dev(pairs, vecs)
-    kcap_ok = _kcap_topk_ok(cand, kept, "vec_a", "euclidean_dist", "vec_b")
-    recall = _brp_sample_recall(reps, kept)
-    # reps is NOT unpersisted: the session memo owns it
-    for df in (vecs, cand, kept, pairs):
-        df.unpersist()
-    return spark.createDataFrame(
-        [
-            (
-                n_vecs,
-                n_twin_pairs,
-                bool(n_missing == 0),
-                bool(max_dist is None or max_dist <= 1.15),
-                bool(exact_dev is None or exact_dev <= 1e-9),
-                bool(kcap_ok),
-                bool(recall is None or recall >= BRP_RECALL_FLOOR),
-            )
-        ],
-        "n_vectors bigint, n_identical_pairs bigint, "
-        "zero_dist_found boolean, pairs_valid boolean, dist_exact_ok boolean, "
-        "kcap_topk_ok boolean, sample_recall_ok boolean",
+    return _lsh_certificate(
+        spark,
+        _brp_parts(spark, sf_dir),
+        ("vec_id", "vec_a", "vec_b"),
+        ("arr", F.col("arr")),
+        ("euclidean_dist", 1.15),
+        (_euclid_dev, 1e-9),
+        (_brp_sample_recall, BRP_RECALL_FLOOR),
+        ("n_vectors", "n_identical_pairs", "zero_dist_found"),
     )
 
 
@@ -932,7 +851,9 @@ FROM g
 
 
 def mllib_kmeans_clusters_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checkable face of :func:`mllib_kmeans_clusters`: the
+    """MLlib KMeans over the embedding vectors (k=10, fixed seed; see
+    :func:`_kmeans_pred`) — the trained sibling of the deterministic
+    E-step in ``similarity.centroid_assign`` — registered as the
     exact INPUT vector count plus pipeline certificates (cluster
     count in [1, k], cluster sizes conserve the input, silhouette in
     [-1, 1]) — the seeded centroids themselves stay engine-local.
@@ -971,10 +892,10 @@ FROM embeddings
 
 
 def mllib_pca_variance_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checkable face of :func:`mllib_pca_variance`: the
-    explained-variance RATIOS stay engine-local (eigensolver floats);
-    what is hashed are the spectral certificates every correct PCA
-    satisfies — 8 components, ratios non-negative and non-increasing
+    """PCA over the embedding corpus (top 8 components; see
+    :func:`_pca_ratios`): the explained-variance RATIOS stay
+    engine-local (eigensolver floats); what is hashed are the
+    spectral certificates every correct PCA satisfies — 8 components, ratios non-negative and non-increasing
     (eigenvalues sorted), summing to <= 1, and the top component
     carrying at least the uniform 1/64 share (lambda_max >= mean
     eigenvalue)."""

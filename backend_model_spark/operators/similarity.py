@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from backend_model_spark.memo import memo
+from backend_model_spark.operators.dedup import grid_cosine_pairs
 from backend_model_spark.operators.scale_utils import sort_bounded
 from backend_model_spark.sources.tables import load_table, spread
 
@@ -2102,64 +2103,6 @@ def _semdedup_build(spark: SparkSession, sf_dir: str):
     return grouped, assigned
 
 
-def _cell_cosine_ctr_kernel(left, right):
-    """Semdedup's grid-cell pairwise cosine — the same vectorized
-    numpy fold as :func:`backend_model_spark.operators.dedup.
-    _cell_cosine_kernel` (see there for the bit-parity argument:
-    left-to-right accumulation, never BLAS), extended to PASS THROUGH
-    each side's centroid-cosine keep-priority (``ctr`` /``bctr``).
-    Carrying the two longs through the kernel lets the drop rule run
-    directly on the kernel output — no joins back against the
-    rep-width ``assigned`` frame (round 11, guide §3: at corpus scale
-    those were two extra shuffles or a reps-width broadcast)."""
-    import numpy as np
-    import pandas as pd
-
-    empty = pd.DataFrame(
-        {
-            "vec_a": pd.Series(dtype="int64"),
-            "vec_b": pd.Series(dtype="int64"),
-            "label": pd.Series(dtype="int32"),
-            "cos_raw": pd.Series(dtype="float64"),
-            "a_ctr": pd.Series(dtype="int64"),
-            "b_ctr": pd.Series(dtype="int64"),
-        }
-    )
-    if len(left) == 0 or len(right) == 0:
-        return empty
-    ids_a = left["vec_id"].to_numpy()
-    ids_b = right["bvec_id"].to_numpy()
-    ctr_a = left["ctr"].to_numpy()
-    ctr_b = right["bctr"].to_numpy()
-    va = np.stack(left["v"].to_numpy()).astype(np.float64, copy=False)
-    vb = np.stack(right["bv"].to_numpy()).astype(np.float64, copy=False)
-    d = va.shape[1]
-    acc = np.zeros((len(ids_a), len(ids_b)))
-    for k in range(d):
-        acc += np.multiply.outer(va[:, k], vb[:, k])
-    n2a = np.zeros(len(ids_a))
-    n2b = np.zeros(len(ids_b))
-    for k in range(d):
-        n2a += va[:, k] * va[:, k]
-        n2b += vb[:, k] * vb[:, k]
-    denom = np.multiply.outer(np.sqrt(n2a), np.sqrt(n2b))
-    with np.errstate(divide="ignore", invalid="ignore"):
-        cos = np.where(denom == 0.0, 0.0, acc / denom)
-    ia, jb = np.nonzero(
-        (ids_a[:, None] < ids_b[None, :]) & (cos >= 0.4 - 1e-6)
-    )
-    return pd.DataFrame(
-        {
-            "vec_a": ids_a[ia],
-            "vec_b": ids_b[jb],
-            "label": np.full(len(ia), left["label"].iloc[0], dtype="int32"),
-            "cos_raw": cos[ia, jb],
-            "a_ctr": ctr_a[ia],
-            "b_ctr": ctr_b[jb],
-        }
-    )
-
-
 def semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup over the embeddings corpus: per-cluster kept/dropped
     counts after within-cluster cosine deduplication.
@@ -2212,82 +2155,39 @@ def semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drop decision is a semi-join shape, never an iterative loop;
     the member rollup is a rep-sized hash join.
     """
-    from backend_model_spark.operators.dedup import EMBED_PAIR_BLOCKS
-
     # the shared Arrow kernel's conservative emission margin is built
     # for the family's 0.4 gate — keep the constants locked together
     assert SEMDEDUP_TAU_MICRO == 400_000
 
     members, assigned = _semdedup_parts(spark, sf_dir)
     # VECTORIZED REP-PAIR KERNEL (round 11): the within-cluster pair
-    # cosines run through dedup's cogrouped Arrow kernel — grid-
-    # blocked (cluster, i, j) cells so one big cluster never
-    # serializes a task, numpy left-to-right folds BIT-IDENTICAL to
-    # the JVM/DuckDB expression (see embedding_neardup_pairs for the
-    # parity argument). Per-pair JVM expression evaluation paid
-    # ~13 µs/pair: the Zipf 10× corpus (20 000 distinct vectors in 10
-    # clusters → ~20M rep pairs) measured 49.9 s; the kernel emits
-    # raw cosines above a conservative margin and the EXACT micro-
-    # floor + τ gate + drop rule stay in JVM expressions, byte-for-
-    # byte the path the oracle mirrors.
-    m = EMBED_PAIR_BLOCKS
-    cell = F.explode(F.array(*[F.lit(i) for i in range(m)]))
-    base = assigned.select(
-        "vec_id",
-        "v",
-        F.col("cluster").alias("label"),
-        F.col("ctr_cos_micro").alias("ctr"),
-    )
-    # EXPLICIT cell-key width (round 11): the kernel stage is compute-
-    # bound on per-cell pair work — AQE's byte-based coalescing saw a
-    # few MB of shuffle and squashed the numpy kernel onto ~5 tasks at
-    # sf0.1; pinning the exchange at the conf'd shuffle width keeps
-    # the same cluster-tunable fan-out and full local parallelism.
-    sp = int(base.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    ga = (
-        base.withColumn("__blk", F.pmod(F.hash("vec_id"), F.lit(m)))
-        .withColumn("__cj", cell)
-        .select(
-            F.col("label"),
-            F.col("__blk").alias("__ci"),
-            "__cj",
+    # cosines run through dedup's grid-blocked cosine join — (cluster,
+    # i, j) cells so one big cluster never serializes a task, numpy
+    # left-to-right folds BIT-IDENTICAL to the JVM/DuckDB expression.
+    # Per-pair JVM expression evaluation paid ~13 µs/pair: the Zipf
+    # 10× corpus (20 000 distinct vectors in 10 clusters → ~20M rep
+    # pairs) measured 49.9 s; the kernel emits raw cosines above a
+    # conservative margin and the EXACT micro-floor + τ gate + drop
+    # rule stay in JVM expressions, byte-for-byte the path the oracle
+    # mirrors. Each side's centroid-cosine keep-priority ``ctr`` rides
+    # through the kernel, so the drop rule runs directly on its output
+    # with no join back against the rep-width ``assigned`` frame
+    # (round 11, guide §3: those were two extra shuffles or a
+    # reps-width broadcast at corpus scale).
+    raw = grid_cosine_pairs(
+        assigned.select(
             "vec_id",
             "v",
-            "ctr",
-        )
-        .repartition(sp, "label", "__ci", "__cj")
-        .groupBy("label", "__ci", "__cj")
-    )
-    gb = (
-        base.select(
-            F.col("vec_id").alias("bvec_id"),
-            F.col("label").alias("blabel"),
-            F.col("v").alias("bv"),
-            F.col("ctr").alias("bctr"),
-        )
-        .withColumn("__blk", F.pmod(F.hash("bvec_id"), F.lit(m)))
-        .withColumn("__ci", cell)
-        .select(
-            "blabel", "__ci", F.col("__blk").alias("__cj"), "bvec_id", "bv", "bctr"
-        )
-        .repartition(sp, "blabel", "__ci", "__cj")
-        .groupBy("blabel", "__ci", "__cj")
-    )
-    raw = ga.cogroup(gb).applyInPandas(
-        _cell_cosine_ctr_kernel,
-        schema=(
-            "vec_a long, vec_b long, label int, cos_raw double,"
-            " a_ctr long, b_ctr long"
+            F.col("cluster").alias("label"),
+            F.col("ctr_cos_micro").alias("ctr"),
         ),
+        carry=("ctr",),
     )
     # rep b is dropped when a co-clustered rep a clears the gate AND
     # has keep-priority: farther from the centroid (lower ctr cosine),
     # vec_id as the deterministic tiebreak. The kernel emits each
     # unordered pair once with vec_a < vec_b, so the dominated rep is
     # vec_b iff a_ctr ≤ b_ctr (the tie falls to the lower id = a).
-    # a_ctr/b_ctr ride along from the kernel (same values the former
-    # joins against ``assigned`` supplied — they ARE assigned's
-    # columns), so no post-kernel join remains.
     gated = raw.withColumn(
         "pair_cos_micro",
         F.floor(F.col("cos_raw") * 1_000_000 + F.lit(0.5)).cast("long"),

@@ -586,6 +586,54 @@ def test_grid_pairs_bound_per_cell_and_exact(spark):
     assert n_cells_big == m * m
 
 
+def test_cell_cosine_kernel_carry_passes_payload():
+    """The grid-cell kernel emits the same pairs and raw cosines with
+    and without carried columns, and each carried ``a_<c>``/``b_<c>``
+    is the payload of that pair's own row — on random cells holding a
+    zero vector, and on cells with an empty side."""
+    import numpy as np
+
+    from backend_model_spark.operators.dedup import _cell_cosine_kernel
+
+    rng = np.random.default_rng(14)
+    base = rng.normal(size=64)
+
+    def side(n, pre):
+        ids = rng.choice(1000, size=n, replace=False).astype("int64")
+        # shared direction + per-row noise: cosines straddle the gate
+        vs = [base + rng.normal(scale=s, size=64) for s in rng.uniform(0.1, 2.5, n)]
+        if n:
+            vs[0] = np.zeros(64)
+        return pd.DataFrame(
+            {
+                pre + "vec_id": ids,
+                pre + "label": np.full(n, 3, dtype="int32"),
+                pre + "v": vs,
+                pre + "ctr": ids * 7 + 3,
+            }
+        )
+
+    core = ["vec_a", "vec_b", "label", "cos_raw"]
+    for n_left, n_right in [(40, 50), (0, 6), (6, 0)]:
+        left, right = side(n_left, ""), side(n_right, "b")
+        plain = _cell_cosine_kernel(left, right)
+        carried = _cell_cosine_kernel(left, right, carry=("ctr",))
+        assert list(plain.columns) == core
+        assert list(carried.columns) == core + ["a_ctr", "b_ctr"]
+        pd.testing.assert_frame_equal(carried[core], plain)
+        assert (carried["a_ctr"] == carried["vec_a"] * 7 + 3).all()
+        assert (carried["b_ctr"] == carried["vec_b"] * 7 + 3).all()
+        if n_left and n_right:
+            # non-vacuous: pairs clear the gate, zero vectors never do
+            assert len(plain) > 0
+            assert (plain["vec_a"] < plain["vec_b"]).all()
+            zeros = {left["vec_id"].iloc[0], right["bvec_id"].iloc[0]}
+            assert not set(plain["vec_a"]) & zeros
+            assert not set(plain["vec_b"]) & zeros
+        else:
+            assert len(plain) == 0
+
+
 def test_global_rank_empty_and_single_row(spark):
     """The two-stage rank primitive on degenerate inputs: empty frame
     stays empty (no null-offset join explosions); single row ranks 1,

@@ -697,7 +697,9 @@ def test_max_drawdown_two_stage_primitives(spark, sf_dir):
 # the schema they just wrote (no footer-inference job), so only the
 # writes the entry itself performs remain. Duplicate clusters is the
 # one iterative fixpoint (see dedup._connected_components): its edge
-# count and label checkpoint run at build.
+# count and label checkpoint run at build. The MinHash certificate runs
+# its checks at build (mllib_ops._lsh_certificate, shared with the BRP
+# twin pinned in _MEMO_BUILD_JOBS).
 _BUILD_JOBS = {
     "window_max_drawdown": 0,
     "window_revenue_growth": 0,
@@ -708,6 +710,7 @@ _BUILD_JOBS = {
     "dedup_duplicate_clusters": 4,  # edge count, label checkpoint
     "io_append_sink": 2,  # overwrite batch 1, append batch 2
     "io_dynamic_partition_overwrite": 2,  # seed write, restatement
+    "mllib_minhash_neardup": 48,
 }
 
 
