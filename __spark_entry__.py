@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 import sys
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -26,9 +26,9 @@ def entry(spark: SparkSession) -> DataFrame:
     return q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def queries() -> Mapping[str, Callable[[SparkSession, str], DataFrame]]:
     return registry.queries()
 
 
-def oracle_sql() -> dict[str, str]:
+def oracle_sql() -> Mapping[str, str]:
     return registry.oracle_sql()

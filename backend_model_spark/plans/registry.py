@@ -1,14 +1,22 @@
-"""Central query registry: name -> (spark_fn, oracle_sql | None).
+"""Central query registry: name -> (spark_fn, oracle_sql).
 
-``__spark_entry__.py`` re-exports this as the driver contract. Every
-operator family registers here; oracle_sql is ``None`` only for
-genuinely non-SQL-expressible ops (approximate LSH, streaming state,
-ML training), which the driver checks rows-only.
+``__spark_entry__.py`` re-exports this as the driver contract.
+``plans/catalog.py`` registers every entry by name: the dotted path of
+its module, and the names of the query function and of its DuckDB
+oracle string in that module. Every entry carries an oracle.
+
+``queries()`` and ``oracle_sql()`` are read-only mappings in registry
+order. Looking an entry up imports its module the first time and
+returns the module's own function or string; ``in``, ``len`` and
+iterating the names import nothing. A driver that answers a few
+queries thus loads only their operator modules, not all of them and
+``pyspark.ml``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import importlib
+from collections.abc import Callable, Iterator, Mapping
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -18,17 +26,18 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 @dataclass(frozen=True)
 class RegisteredQuery:
-    fn: QueryFn
-    oracle: str | None  # DuckDB-runnable ANSI SQL, or None for rows-only
+    module: str  # dotted path of the implementing module
+    fn: str  # the query function's name in it
+    oracle: str  # the name of its DuckDB-runnable ANSI SQL string in it
 
 
 _REGISTRY: dict[str, RegisteredQuery] = {}
 
 
-def register(name: str, fn: QueryFn, oracle: str | None) -> None:
+def register(name: str, module: str, fn: str, oracle: str) -> None:
     if name in _REGISTRY:
         raise ValueError(f"duplicate query name {name!r}")
-    _REGISTRY[name] = RegisteredQuery(fn=fn, oracle=oracle)
+    _REGISTRY[name] = RegisteredQuery(module=module, fn=fn, oracle=oracle)
 
 
 def promote(names: list[str]) -> None:
@@ -51,24 +60,32 @@ def promote(names: list[str]) -> None:
     _REGISTRY.update(reordered)
 
 
-def queries() -> dict[str, QueryFn]:
-    _ensure_loaded()
-    return {name: rq.fn for name, rq in _REGISTRY.items()}
+class _Resolved(Mapping):
+    """One attribute of every entry, by name, in registry order."""
+
+    def __init__(self, attr: str):
+        from backend_model_spark.plans import catalog  # noqa: F401 - registers the names
+
+        self._attr = attr
+
+    def __getitem__(self, name: str):
+        rq = _REGISTRY[name]
+        return getattr(importlib.import_module(rq.module), getattr(rq, self._attr))
+
+    # Mapping's default ``in`` looks the entry up, which imports it
+    def __contains__(self, name: object) -> bool:
+        return name in _REGISTRY
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(_REGISTRY)
+
+    def __len__(self) -> int:
+        return len(_REGISTRY)
 
 
-def oracle_sql() -> dict[str, str]:
-    _ensure_loaded()
-    return {name: rq.oracle for name, rq in _REGISTRY.items() if rq.oracle}
+def queries() -> Mapping[str, QueryFn]:
+    return _Resolved("fn")
 
 
-_LOADED = False
-
-
-def _ensure_loaded() -> None:
-    """Import every operator module exactly once (they self-register)."""
-    global _LOADED
-    if _LOADED:
-        return
-    from backend_model_spark.plans import catalog  # noqa: F401
-
-    _LOADED = True
+def oracle_sql() -> Mapping[str, str]:
+    return _Resolved("oracle")

@@ -173,7 +173,6 @@ def _span_mtime(fn, dirty: set[str], cache: dict) -> int:
 def audit() -> dict:
     from backend_model_spark.plans import registry
 
-    registry._ensure_loaded()
     qs = registry.queries()
 
     # 1-2: entry -> implementing file + function-closure last-change.

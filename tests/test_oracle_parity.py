@@ -12,7 +12,6 @@ import pytest
 from backend_model_spark.plans import registry
 from backend_model_spark.testing.oracle import compare
 
-registry._ensure_loaded()
 _QUERIES = registry.queries()
 _ORACLES = registry.oracle_sql()
 _ORACLE_NAMES = sorted(_ORACLES)

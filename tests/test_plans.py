@@ -15,7 +15,6 @@ import pytest
 from backend_model_spark.plans import registry
 from tests.conftest import group_jobs
 
-registry._ensure_loaded()
 _QUERIES = registry.queries()
 
 

@@ -2,7 +2,10 @@
 the settings a ``get_spark`` session carries."""
 
 import gc
+import json
 import os
+import subprocess
+import sys
 import threading
 
 from backend_model_spark.session import (
@@ -91,3 +94,67 @@ def test_session_skips_call_site_capture(spark, sf_dir, monkeypatch):
         gc.enable()
         monkeypatch.undo()
     assert 0 < len(sent) <= _Q1_BUILD_COMMANDS_MAX, len(sent)
+
+
+def test_python_workers_import_the_installed_pyspark(spark):
+    """The local worker daemon imports pyspark from the installed
+    package, which has a bytecode cache, not from Spark's pyspark.zip."""
+
+    # nested, so it is pickled by value: pytest imports this module
+    # under a name the workers cannot import
+    def worker_pyspark(it):
+        import pandas as pd
+        import pyspark
+
+        for _ in it:
+            yield pd.DataFrame({"path": [pyspark.__file__]})
+
+    path = spark.range(1, numPartitions=1).mapInPandas(
+        worker_pyspark, "path string"
+    ).first().path
+    assert ".zip" not in path, path
+
+
+_OUTSIDE_ROOT = """
+import json, sys
+sys.path.insert(0, {root!r})
+from backend_model_spark.session import get_spark
+
+def worker_files(it):
+    import pandas as pd
+    import pyspark
+    import backend_model_spark
+    for _ in it:
+        yield pd.DataFrame(
+            {{"pyspark": [pyspark.__file__], "package": [backend_model_spark.__file__]}}
+        )
+
+spark = get_spark("outside-root")
+row = spark.range(1, numPartitions=1).mapInPandas(
+    worker_files, "pyspark string, package string"
+).first()
+spark.stop()
+print(json.dumps(row.asDict()))
+"""
+
+
+def test_udf_runs_when_driver_starts_outside_the_repo(tmp_path):
+    """A driver whose working directory and PYTHONPATH do not hold the
+    repository still runs Python UDFs: the worker daemon and the
+    package reach the workers through the PYTHONPATH the session
+    module sets before the JVM starts."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(
+        SPARK_DRIVER_MEMORY="1g",
+        SPARK_GRAFT_CPUS="1",
+        SPARK_GRAFT_LOCAL_DIR=str(tmp_path / "local"),
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _OUTSIDE_ROOT.format(root=root)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.splitlines()[-1])
+    assert got["package"] == os.path.join(root, "backend_model_spark", "__init__.py")
+    assert ".zip" not in got["pyspark"], got["pyspark"]
