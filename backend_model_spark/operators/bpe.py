@@ -4,26 +4,30 @@ algorithm behind GPT/Llama tokenizers and the natural companion to
 ``text_bpe_token_count`` (which only counts with a FIXED pattern).
 
 Why this is a Spark-shaped problem: classic BPE looks sequential, but
-each round is two aggregations over the WORD-FREQUENCY VOCAB, not the
-corpus — (1) sum pair frequencies weighted by word count, (2) argmax
-with a deterministic tie-break — plus a positional rewrite applying
-the winning merge. The corpus is touched exactly ONCE (the word-count
-rollup: one shuffle on the word key, map-side combinable); every
-round after that runs on the bounded vocab table (≤ ``VOCAB_TOP``
-rows), so learning N merges over 100 TB costs one corpus scan + N
-tiny distributed rounds. The winning pair flows into the next round
-as a broadcast one-row frame — no driver round-trips, no collect.
+its rounds run on the WORD-FREQUENCY VOCAB, not the corpus. The corpus
+is touched exactly ONCE (the word-count rollup: one shuffle on the
+word key, map-side combinable); learning reads only the top
+``VOCAB_TOP`` words, so all N rounds — sum overlapping adjacent-pair
+counts weighted by word count, pick the best pair, rewrite every word
+with it — run as plain Python in ONE grouped-map task over that
+bounded table (:func:`_learn`). Learning N merges over 100 TB costs
+one corpus scan plus one ≤ ``VOCAB_TOP``-row group, with no
+per-round synchronisation. Applying the merges is row-local: the
+sorted merge list rides a broadcast one-row frame onto every word row
+and a ``mapInPandas`` rewrites each word (:func:`_merge`). Both
+entries return a lazy plan; building one runs no Spark job.
 
 Greedy left-to-right merge application (the part naive SQL gets wrong
-for runs like "aaa") is expressed positionally: match positions group
-into consecutive runs (pos − row_number key) and only ODD positions
-within a run merge — exactly the non-overlapping greedy semantics,
-and identically expressible with window functions on both engines.
-The DuckDB oracle unrolls the same rounds as generated CTE chains
-from the same constants (the MLP-oracle precedent).
+for runs like "aaa") is a left-to-right scan in :func:`_merge`. The
+DuckDB oracle expresses the same semantics positionally — match
+positions group into consecutive runs (pos − row_number key) and only
+ODD positions within a run merge — and unrolls the rounds as generated
+CTE chains from the same constants (the MLP-oracle precedent).
 
-Determinism: pure integer counts; argmax breaks ties by (count desc,
-left asc, right asc); all window orders are total. No floats anywhere.
+Determinism: pure integer counts; the best pair is the maximum of
+(count desc, left asc, right asc), a total order, so the learner's
+result does not depend on the order its group's rows arrive in. No
+floats until the final chars-per-token ratio.
 
 Reference anchor: the reference tokenizes text only through sklearn
 vectorizers (SURVEY.md §2.6 F8); this is the training-data-pipeline
@@ -32,8 +36,12 @@ extension of that capability (SURVEY §2.11 charter).
 
 from __future__ import annotations
 
+from collections import Counter
+from collections.abc import Iterator
+
+import pandas as pd
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from backend_model_spark.sources.tables import load_table
@@ -43,115 +51,93 @@ VOCAB_TOP = 2000  # bounded vocab table: top words by (count, word)
 MAX_WORD_LEN = 20
 
 
-def _word_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One corpus pass: lowercase alpha word counts, top ``VOCAB_TOP``
-    by (count desc, word asc) — the only corpus-sized stage."""
+def _word_counts(spark: SparkSession, sf_dir: str, *keys: str) -> DataFrame:
+    """One corpus pass: lowercase alpha word counts ``c`` per
+    (*keys, word) — the only corpus-sized stage."""
     docs = load_table(spark, "documents", sf_dir)
-    words = (
+    return (
         docs.select(
-            F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("word")
+            *keys,
+            F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("word"),
         )
         .filter((F.col("word") != "") & (F.length("word") <= MAX_WORD_LEN))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("wc"))
+        .groupBy(*keys, "word")
+        .agg(F.count(F.lit(1)).alias("c"))
     )
+
+
+def _merge(tokens: list[str], l: str, r: str) -> list[str]:
+    """Greedy left-to-right application of merge (l, r): a match
+    consumes the token after it, so "aaa" under (a, a) is [aa][a]."""
+    out, i = [], 0
+    while i < len(tokens):
+        if i + 1 < len(tokens) and tokens[i] == l and tokens[i + 1] == r:
+            out.append(l + r)
+            i += 2
+        else:
+            out.append(tokens[i])
+            i += 1
+    return out
+
+
+def _learn(vocab: pd.DataFrame) -> pd.DataFrame:
+    """Up to ``N_MERGES`` greedy BPE rounds over the whole (word, wc)
+    vocab; stops early once no word has two tokens left."""
+    seqs = [(list(w), int(wc)) for w, wc in zip(vocab["word"], vocab["wc"])]
+    rows = []
+    for rnd in range(1, N_MERGES + 1):
+        counts: Counter[tuple[str, str]] = Counter()
+        for toks, wc in seqs:
+            for pair in zip(toks, toks[1:]):
+                counts[pair] += wc
+        if not counts:
+            break
+        (l, r), pc = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        rows.append((rnd, l, r, l + r, pc))
+        seqs = [(_merge(toks, l, r), wc) for toks, wc in seqs]
+    return pd.DataFrame(
+        rows, columns=["round", "lhs", "rhs", "merged", "pair_count"]
+    )
+
+
+def _learned_merges(counts: DataFrame) -> DataFrame:
+    """(round, lhs, rhs, merged, pair_count) learned on the top
+    ``VOCAB_TOP`` rows of a (word, wc) table, in one Python group."""
     # global top-k as orderBy+limit: Spark plans this as a distributed
     # TakeOrderedAndProject (per-partition heap + driver merge of k
     # rows), never a single-partition WindowExec over the vocab. The
     # (wc desc, word asc) order is total, so the k-prefix is unique.
-    return (
-        words.orderBy(F.col("wc").desc(), F.col("word").asc())
+    vocab = (
+        counts.orderBy(F.col("wc").desc(), F.col("word").asc())
         .limit(VOCAB_TOP)
         .select("word", "wc")
+    )
+    # one literal group; aliased, since a bare integer literal in
+    # groupBy is read as a column ordinal
+    return vocab.groupBy(F.lit(0).alias("g")).applyInPandas(
+        _learn,
+        "round int, lhs string, rhs string, merged string, pair_count bigint",
     )
 
 
 def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn the first ``N_MERGES`` BPE merges; returns one row per
     round: (round, left, right, merged, pair_count)."""
-    vocab = _word_vocab(spark, sf_dir)
-    # seq: (word, wc, pos, tok) — initial tokens are single characters
-    seq = (
-        vocab.select(
-            "word",
-            "wc",
-            F.posexplode(F.split(F.col("word"), "(?!^)")).alias("pos", "tok"),
-        )
-        # Spark's split keeps the trailing empty match (limit=-1
-        # semantics); dropping it leaves positions dense 0..len-1
-        .filter(F.col("tok") != "")
-        .localCheckpoint()
-    )
-
-    merge_rows = []
-    for rnd in range(1, N_MERGES + 1):
-        best = _best_pair(seq).localCheckpoint()  # 1 row; read twice
-        merge_rows.append(
-            best.select(
-                F.lit(rnd).alias("round"),
-                F.col("l").alias("lhs"),
-                F.col("r").alias("rhs"),
-                F.concat("l", "r").alias("merged"),
-                F.col("pc").cast("long").alias("pair_count"),
-            )
-        )
-        seq = _apply_merge(seq, best).localCheckpoint()
-
-    out = merge_rows[0]
-    for mr in merge_rows[1:]:
-        out = out.unionAll(mr)
-    return out.orderBy("round")
+    counts = _word_counts(spark, sf_dir).withColumnRenamed("c", "wc")
+    return _learned_merges(counts).orderBy("round")
 
 
-def _best_pair(seq: DataFrame) -> DataFrame:
-    """Highest-frequency adjacent token pair of a (word, wc, pos, tok)
-    frame, tie-broken (count desc, l asc, r asc) — one row (l, r, pc)."""
-    wp = W.partitionBy("word").orderBy("pos")
-    return (
-        seq.withColumn("nxt", F.lead("tok").over(wp))
-        .filter(F.col("nxt").isNotNull())
-        .groupBy(F.col("tok").alias("l"), F.col("nxt").alias("r"))
-        .agg(F.sum("wc").alias("pc"))
-        .orderBy(F.col("pc").desc(), F.col("l").asc(), F.col("r").asc())
-        .limit(1)
-    )
-
-
-def _apply_merge(seq: DataFrame, best: DataFrame) -> DataFrame:
-    """Greedy left-to-right application of the broadcast (l, r) merge:
-    match positions → consecutive runs (pos − row_number key) → only
-    odd-in-run positions merge; the following position is consumed."""
-    wm = W.partitionBy("word").orderBy("pos")
-    paired = seq.withColumn("nxt", F.lead("tok").over(wm))
-    m = paired.crossJoin(F.broadcast(best.select("l", "r"))).withColumn(
-        "is_m", (F.col("tok") == F.col("l")) & (F.col("nxt") == F.col("r"))
-    )
-    runs = m.withColumn(
-        "mrn",
-        F.when(
-            F.col("is_m"),
-            F.row_number().over(W.partitionBy("word", "is_m").orderBy("pos")),
-        ),
-    ).withColumn("run_key", F.when(F.col("is_m"), F.col("pos") - F.col("mrn")))
-    keep = runs.withColumn(
-        "rin",
-        F.when(
-            F.col("is_m"),
-            F.row_number().over(W.partitionBy("word", "run_key").orderBy("pos")),
-        ),
-    ).withColumn("do_merge", F.col("is_m") & (F.col("rin") % 2 == 1))
-    return (
-        keep.withColumn("consumed", F.lag("do_merge", 1, False).over(wm))
-        .filter(~F.col("consumed"))
-        .select(
-            "word",
-            "wc",
-            F.row_number().over(wm).alias("pos"),
-            F.when(F.col("do_merge"), F.concat("tok", "nxt"))
-            .otherwise(F.col("tok"))
-            .alias("tok"),
-        )
-    )
+def _segment(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Token count ``n_tok`` of each row's word after applying the
+    row's merge list (``ls``, ``rs``) in order."""
+    for pdf in batches:
+        n_tok = []
+        for word, ls, rs in zip(pdf["word"], pdf["ls"], pdf["rs"]):
+            toks = list(word)
+            for l, r in zip(ls, rs):
+                toks = _merge(toks, l, r)
+            n_tok.append(len(toks))
+        yield pdf[["source", "word", "c"]].assign(n_tok=n_tok)
 
 
 def bpe_segment_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,57 +146,27 @@ def bpe_segment_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     characters, and the compression the merges bought
     (chars-per-token, micro-rounded).
 
-    Shape: merges are re-derived on the top-``VOCAB_TOP`` vocab (same
-    lineage as :func:`bpe_learn_merges` — tiny); application runs on
-    the DISTINCT-WORD table, never the corpus: every round rewrites
-    one row per (word, position), and the corpus-sized work is only
-    the two word rollups (global + per-source) at the edges. At
-    100 TB: 2 corpus-rollup shuffles + N vocab-sized rounds + one
-    broadcast join of per-word token counts onto the per-source
-    rollup.
+    Shape: one (source, word) rollup feeds both halves. Its global
+    word totals feed the same learner as :func:`bpe_learn_merges`;
+    the learned merges, sorted by round into one broadcast row, are
+    applied row-locally to the rollup itself in a ``mapInPandas``, so
+    the corpus is scanned once and its rollup exchange is reused. At
+    100 TB: 1 corpus-rollup shuffle + one vocab-sized Python group +
+    a row-local Python pass over the distinct (source, word) rows.
+    When the vocab yields fewer than ``N_MERGES`` merges the result
+    is empty, as in the oracle, whose apply chain then cross-joins an
+    empty best pair.
     """
-    docs = load_table(spark, "documents", sf_dir)
-    words = (
-        docs.select(
-            F.col("source"),
-            F.explode(F.split(F.lower(F.col("text")), "[^a-z]+")).alias("word"),
-        )
-        .filter((F.col("word") != "") & (F.length("word") <= MAX_WORD_LEN))
-        .groupBy("source", "word")
-        .agg(F.count(F.lit(1)).alias("c"))
-    ).localCheckpoint()  # read twice: learner vocab + final join
-
-    # learner state: top-VOCAB_TOP global vocab (identical selection
-    # to bpe_learn_merges, derived from the same per-source rollup)
-    gw = words.groupBy("word").agg(F.sum("c").alias("wc"))
-    # same TakeOrderedAndProject top-k as _word_vocab (total order ⇒
-    # unique prefix; no single-partition window)
-    vocab = (
-        gw.orderBy(F.col("wc").desc(), F.col("word").asc())
-        .limit(VOCAB_TOP)
-        .select("word", "wc")
+    words = _word_counts(spark, sf_dir, "source")
+    merges = (
+        _learned_merges(words.groupBy("word").agg(F.sum("c").alias("wc")))
+        .agg(F.sort_array(F.collect_list(F.struct("round", "lhs", "rhs"))).alias("m"))
+        .filter(F.size("m") == N_MERGES)
+        .select(F.col("m.lhs").alias("ls"), F.col("m.rhs").alias("rs"))
     )
-    chars = lambda df: (
-        df.select(
-            "word",
-            "wc",
-            F.posexplode(F.split(F.col("word"), "(?!^)")).alias("pos", "tok"),
-        ).filter(F.col("tok") != "")
-    )
-    learn_seq = chars(vocab).localCheckpoint()
-    # apply-side state: EVERY distinct word (weight unused in rewrite)
-    apply_seq = chars(
-        gw.select("word", F.lit(1).alias("wc"))
-    ).localCheckpoint()
-
-    for _ in range(N_MERGES):
-        best = _best_pair(learn_seq).localCheckpoint()
-        learn_seq = _apply_merge(learn_seq, best).localCheckpoint()
-        apply_seq = _apply_merge(apply_seq, best).localCheckpoint()
-
-    per_word = apply_seq.groupBy("word").agg(F.count(F.lit(1)).alias("n_tok"))
     return (
-        words.join(F.broadcast(per_word), "word")
+        words.crossJoin(F.broadcast(merges))
+        .mapInPandas(_segment, "source string, word string, c bigint, n_tok int")
         .groupBy("source")
         .agg(
             F.sum(F.col("c") * F.col("n_tok")).cast("long").alias("total_tokens"),
@@ -319,7 +275,7 @@ BPE_MERGES_ORACLE = _bpe_oracle()
 def _apply_ctes(r: int, prev: str, best: str) -> tuple[str, str]:
     """Unrolled APPLY-only round: rewrite token table ``prev`` with
     the already-selected merge ``best`` — the SQL twin of
-    :func:`_apply_merge`. Returns (cte_sql, next_seq_name)."""
+    :func:`_merge`. Returns (cte_sql, next_seq_name)."""
     p = f"a{r}_"
     ctes = f"""
 {p}m AS (

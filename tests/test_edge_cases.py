@@ -1397,25 +1397,46 @@ def test_knn_grid_ladder_matches_sql_twin(spark):
         assert spark_pow2[n] == duck_pow2 == 2**k, f"ladder split at n={n}"
 
 
-def test_bpe_merges_match_python_reference_with_overlaps(spark, tmp_path):
-    """The distributed merge learner must equal a straightforward
-    sequential BPE implementation — same pair counts (overlapping
-    occurrences included), same (count desc, pair asc) tie-break,
-    same GREEDY left-to-right application. 'aaaa' exercises the
-    run-parity rule: matches at positions 1,2,3 must merge as
-    [aa][aa], never the overlapping middle."""
-    import pandas as pd
+_BPE_TEXT = "aaaa aaaa aaaa banana banana bandana apple apples grape "
 
-    from backend_model_spark.operators.bpe import N_MERGES, bpe_learn_merges
 
-    text = "aaaa aaaa aaaa banana banana bandana apple apples grape "
+@pytest.mark.parametrize(
+    "texts, first_pair, n_rounds",
+    [
+        pytest.param(
+            [_BPE_TEXT, _BPE_TEXT + " aaaa banana"], ("a", "a"), 5, id="overlaps"
+        ),
+        # two learnable pairs, then every word is a single token
+        pytest.param(["ab ab", "cd"], ("a", "b"), 2, id="short_vocab"),
+    ],
+)
+def test_bpe_merges_match_python_reference_with_overlaps(
+    spark, tmp_path, texts, first_pair, n_rounds
+):
+    """The merge learner and the corpus segmenter must equal a
+    straightforward sequential BPE implementation — same pair counts
+    (overlapping occurrences included), same (count desc, pair asc)
+    tie-break, same GREEDY left-to-right application, and per source
+    the same token and character totals. 'aaaa' exercises the overlap
+    rule: matches at positions 1,2,3 must merge as [aa][aa], never the
+    overlapping middle. A vocab with fewer than ``N_MERGES`` learnable
+    pairs learns only the rounds it finds, and the segmenter then
+    returns no row, as the oracle does."""
+    import math
+
+    from backend_model_spark.operators.bpe import (
+        N_MERGES,
+        bpe_learn_merges,
+        bpe_segment_corpus,
+    )
+
     docs = pd.DataFrame(
         {
-            "doc_id": [0, 1],
-            "text": [text, text + " aaaa banana"],
-            "lang": ["en", "en"],
-            "source": ["s0", "s0"],
-            "n_chars": [len(text), len(text) + 12],
+            "doc_id": list(range(len(texts))),
+            "text": texts,
+            "lang": ["en"] * len(texts),
+            "source": [f"s{i}" for i in range(len(texts))],
+            "n_chars": [len(t) for t in texts],
         }
     )
     docs.to_parquet(tmp_path / "documents.parquet")
@@ -1424,6 +1445,7 @@ def test_bpe_merges_match_python_reference_with_overlaps(spark, tmp_path):
         (r.lhs, r.rhs, r.pair_count)
         for r in bpe_learn_merges(spark, str(tmp_path)).collect()
     ]
+    seg = [tuple(r) for r in bpe_segment_corpus(spark, str(tmp_path)).collect()]
 
     # sequential reference
     words: dict[str, int] = {}
@@ -1438,6 +1460,8 @@ def test_bpe_merges_match_python_reference_with_overlaps(spark, tmp_path):
             s = seqs[w]
             for i in range(len(s) - 1):
                 counts[(s[i], s[i + 1])] = counts.get((s[i], s[i + 1]), 0) + c
+        if not counts:
+            break
         (a, b), c = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
         expect.append((a, b, c))
         for w in seqs:
@@ -1450,9 +1474,20 @@ def test_bpe_merges_match_python_reference_with_overlaps(spark, tmp_path):
                     res.append(s[i])
                     i += 1
             seqs[w] = res
+    totals: dict[str, list[int]] = {}
+    for t, src in zip(docs["text"], docs["source"]):
+        for w in t.split():
+            tot = totals.setdefault(src, [0, 0])
+            tot[0] += len(seqs[w])
+            tot[1] += len(w)
+    expect_seg = [
+        (src, n_tok, n_chr, math.floor(n_chr / n_tok * 1000000 + 0.5) / 1000000)
+        for src, (n_tok, n_chr) in sorted(totals.items())
+        if len(expect) == N_MERGES
+    ]
     assert out == expect, f"{out} != {expect}"
-    # and the overlap case really engaged: first merge is (a, a)
-    assert out[0][0] == "a" and out[0][1] == "a"
+    assert seg == expect_seg, f"{seg} != {expect_seg}"
+    assert len(out) == n_rounds and out[0][:2] == first_pair
 
 
 def test_k_anonymity_audit_hand_computed(spark, tmp_path):

@@ -15,26 +15,12 @@ from backend_model_spark.testing.oracle import compare
 _QUERIES = registry.queries()
 _ORACLES = registry.oracle_sql()
 _ORACLE_NAMES = sorted(_ORACLES)
-_ROWS_ONLY_NAMES = sorted(set(_QUERIES) - set(_ORACLES))
 
 
 @pytest.mark.parametrize("name", _ORACLE_NAMES)
 def test_query_matches_oracle(spark, sf_dir, name):
     result = compare(name, spark, _QUERIES[name], _ORACLES[name], sf_dir)
     assert result.ok, str(result)
-
-
-def test_no_rows_only_entries_remain():
-    """Round 6 eliminated the rows-only tail (every registered entry
-    carries a full DuckDB oracle); this pins that invariant so a new
-    oracle-less registration fails loudly. Replaces the old
-    per-rows-only-entry smoke test, which skipped with an empty
-    parameter set once the tail hit zero — the suite's one mystery
-    skip (round-7 verdict item)."""
-    assert _ROWS_ONLY_NAMES == [], (
-        f"entries registered without an oracle: {_ROWS_ONLY_NAMES} — "
-        "add an oracle_sql (or a certificate oracle) for each"
-    )
 
 
 def test_entry_smoke(spark):

@@ -698,7 +698,9 @@ def test_max_drawdown_two_stage_primitives(spark, sf_dir):
 # one iterative fixpoint (see dedup._connected_components): its edge
 # count and label checkpoint run at build. The MinHash certificate runs
 # its checks at build (mllib_ops._lsh_certificate, shared with the BRP
-# twin pinned in _MEMO_BUILD_JOBS).
+# twin pinned in _MEMO_BUILD_JOBS). The BPE entries learn their merges
+# in one grouped-map stage inside the plan (before that, learn ran 32
+# jobs and segment 51).
 _BUILD_JOBS = {
     "window_max_drawdown": 0,
     "window_revenue_growth": 0,
@@ -710,6 +712,8 @@ _BUILD_JOBS = {
     "io_append_sink": 2,  # overwrite batch 1, append batch 2
     "io_dynamic_partition_overwrite": 2,  # seed write, restatement
     "mllib_minhash_neardup": 48,
+    "text_bpe_learn_merges": 0,
+    "text_bpe_segment_corpus": 0,
 }
 
 
@@ -964,20 +968,23 @@ def test_pq_adc_topk_salted_and_broadcast_lut(spark, sf_dir):
     )
 
 
-def test_bpe_learner_rounds_are_materialized(spark, sf_dir):
-    """The merge learner's output plan must read ONLY checkpointed
-    round results — no parquet rescans, no window stages: the corpus
-    is touched once (inside the first checkpoint) and each round's
-    vocab rewrite is materialized before the next consumes it, so
-    collecting the merges can never re-derive N rounds of lineage."""
-    from backend_model_spark.operators.bpe import bpe_learn_merges
-
-    df = bpe_learn_merges(spark, sf_dir)
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert "Scan parquet" not in plan, "output must not re-scan the corpus"
-    assert "Window" not in plan, "round lineage must be checkpointed away"
+def test_bpe_learns_in_one_grouped_map_stage(spark, sf_dir):
+    """BPE carries no N-round lineage to re-derive: every merge round
+    runs inside ONE grouped-map Python stage over the bounded vocab,
+    with no window stage, and the segmenter applies the merges to the
+    corpus rollup it learned from, so collecting it reads the corpus
+    once (the rollup exchange is reused)."""
+    for name in ("text_bpe_learn_merges", "text_bpe_segment_corpus"):
+        df = _QUERIES[name](spark, sf_dir)
+        optimized = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Window" not in optimized, name
+        assert optimized.count("FlatMapGroupsInPandas") == 1, name
+    df.collect()  # the segmenter, the loop's last entry
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    final = executed.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("FileScan parquet") == 1
+    assert "ReusedExchange" in final
 
 
 def test_one_row_fanouts_do_not_rescan(spark, sf_dir):
