@@ -6,20 +6,18 @@ The reference's product is two Keras FCFF price regressors
 bayesian_optimization_model/keras_metadata.pb: Dense stacks with
 LeakyReLU/ELU, BatchNorm, Dropout) whose sole production use is
 "score a batch of rows". This module deploys that capability
-Spark-natively: the weight matrices are broadcast once per job and an
-Arrow-batched ``mapInPandas`` runs the forward pass as numpy matmuls
-— no per-row Python, no JVM↔Python chatter beyond Arrow batches, no
-driver participation. At 100 TB the scoring cost is a single
-narrow-dependency map over the fact table: no shuffle at all.
+Spark-natively through ONE feature projection
+(:func:`lineitem_features`) and ONE scorer (:func:`score`): the
+weights (2–6 KB) travel in the scoring closure and an Arrow-batched
+``mapInPandas`` runs the forward pass as numpy matmuls — no per-row
+Python, no JVM↔Python chatter beyond Arrow batches, no driver
+participation. At 100 TB the scoring cost is a single
+narrow-dependency map over the fact table: no shuffle at all. Every
+served net — both fixed-weight regressors and the in-engine-trained
+one (ml/train_distributed.py) — goes through that one scorer.
 
-A pure-Catalyst alternative (:func:`forward_expr` — the net compiled
-to chained selectExpr stages, the same per-layer text the DuckDB
-oracle runs) was built and measured in round 6 and LOSES end-to-end:
-the fused whole-stage-codegen method is ~15.9 KB of bytecode, past
-HotSpot's ~8 KB JIT compile limit, so the scoring loop runs in the
-bytecode interpreter (5.5 s vs 1.7 s at sf0.1; full experiment
-matrix in SCALE.md). It is kept, bit-identical to numpy (pinned by
-test), as the oracle-text generator and the documented experiment.
+Why not compile the net to Catalyst expressions: measured and
+rejected (SCALE.md, "Round-6 experiment — JVM-expression scoring").
 
 Inference-form parity with the Keras stack: BatchNorm folds into the
 adjacent Dense affine at inference and Dropout is identity, so the
@@ -44,9 +42,11 @@ exact in binary floating point). The one edge round is the final
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backend_model_spark.sources.tables import load_table
@@ -164,28 +164,19 @@ QW3_B = [
 QB3_B = [13180537]
 
 
+def _arrays(*mats) -> dict[str, np.ndarray]:
+    keys = ("W1", "B1", "W2", "B2", "W3", "B3")
+    return {k: np.asarray(m, dtype=np.float64) for k, m in zip(keys, mats)}
+
+
 def weight_arrays() -> dict[str, np.ndarray]:
     """Float64 weight matrices on the exact 1/256 dyadic grid."""
-    return {
-        "W1": np.asarray(QW1, dtype=np.float64),
-        "B1": np.asarray(QB1, dtype=np.float64),
-        "W2": np.asarray(QW2, dtype=np.float64),
-        "B2": np.asarray(QB2, dtype=np.float64),
-        "W3": np.asarray(QW3, dtype=np.float64),
-        "B3": np.asarray(QB3, dtype=np.float64),
-    }
+    return _arrays(QW1, QB1, QW2, QB2, QW3, QB3)
 
 
 def weight_arrays_b() -> dict[str, np.ndarray]:
     """Model B ("bayes") float64 weight matrices, same dyadic grid."""
-    return {
-        "W1": np.asarray(QW1_B, dtype=np.float64),
-        "B1": np.asarray(QB1_B, dtype=np.float64),
-        "W2": np.asarray(QW2_B, dtype=np.float64),
-        "B2": np.asarray(QB2_B, dtype=np.float64),
-        "W3": np.asarray(QW3_B, dtype=np.float64),
-        "B3": np.asarray(QB3_B, dtype=np.float64),
-    }
+    return _arrays(QW1_B, QB1_B, QW2_B, QB2_B, QW3_B, QB3_B)
 
 
 def forward_numpy(
@@ -226,130 +217,115 @@ def predict_cents(
     return np.floor(forward_numpy(X, w, leaky) * 100.0 + 0.5).astype(np.int64)
 
 
+# ---------------------------------------------------------------------------
+# The one feature projection and the one scorer, shared by every served
+# net (the trainer's feature frame reads the same projection)
+# ---------------------------------------------------------------------------
+
+FEATURES = ["x1", "x2", "x3", "x4"]
+
+
+def _pct(c: str) -> Column:
+    """``floor(c*100 + 0.5)`` as an exact long: integer cents of a
+    price, integer percent of a rate."""
+    return F.floor(F.col(c) * 100 + F.lit(0.5)).cast("long")
+
+
+def lineitem_features() -> list[Column]:
+    """The net's four inputs ``FEATURES`` as exact longs (see the
+    weights' header comment)."""
+    return [
+        F.floor(F.col("l_extendedprice") / 1000.0).cast("long").alias("x1"),
+        _pct("l_discount").alias("x2"),
+        _pct("l_tax").alias("x3"),
+        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("x4"),
+    ]
+
+
+def charge_e4() -> Column:
+    """The invoice charge price*(1-disc)*(1+tax) in 1e-4-cent units, as
+    the exact int64 product price_cents*(100-disc_pct)*(100+tax_pct)
+    of integerized columns (≤ ~1.2e11)."""
+    return (
+        _pct("l_extendedprice")
+        * (F.lit(100) - _pct("l_discount"))
+        * (F.lit(100) + _pct("l_tax"))
+    )
+
+
+def score(
+    feats: DataFrame,
+    keep: list[str],
+    predictors: dict[str, Callable[[np.ndarray], np.ndarray]],
+) -> DataFrame:
+    """THE scorer: one ``mapInPandas`` stage over ``feats`` (which holds
+    ``FEATURES`` and ``keep``). Per Arrow batch, every predictor maps
+    the (n, 4) float64 feature matrix to n integers; the output is the
+    ``keep`` columns passed through plus one bigint column per
+    predictor, in order. The predictors travel in the task closure,
+    weights included (2–6 KB; measured at noise level against a
+    broadcast, SCALE.md)."""
+    import pandas as pd
+
+    types = [f"{c} {feats.schema[c].dataType.simpleString()}" for c in keep]
+    schema = ", ".join(types + [f"{p} long" for p in predictors])
+
+    def run(batches):
+        for pdf in batches:
+            X = pdf[FEATURES].to_numpy(dtype=np.float64)
+            out = {c: pdf[c] for c in keep}
+            out.update((p, f(X)) for p, f in predictors.items())
+            yield pd.DataFrame(out)
+
+    return feats.select(*keep, *FEATURES).mapInPandas(run, schema)
+
+
 def mlp_batch_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score every lineitem with the fixed-weights MLP.
 
     Plan shape: parquet scan (4 feature columns + key, pruned) ->
-    JVM-side integerization (floor expressions, codegen) -> ONE
-    ArrowEvalPython / mapInPandas stage running numpy matmuls per
-    Arrow batch with the BROADCAST weight dict. Narrow pipeline
-    end-to-end: zero shuffles, parallelism = input splits, so the
-    operator scales linearly with executors at any SF. The weights
-    (~2 KB) broadcast once per job, not per task closure
-    serialization per batch.
-
-    Why NOT the pure-expression path (:func:`forward_expr`, kept as
-    the oracle generator and a measured experiment): the round-6
-    benchmark showed the fused whole-stage-codegen method for the
-    3-layer stack is ~15.9 KB of bytecode -- past HotSpot's ~8 KB
-    JIT compile limit -- so the entire scoring loop runs in the
-    BYTECODE INTERPRETER: 5.5 s end-to-end at sf0.1 (noop sink,
-    steady-state) vs 1.7 s for this numpy path. Every remediation
-    measured worse or non-local: hugeMethodLimit=8000 fallback
-    3-5 s, methodSplitThreshold cannot split the fused consume
-    loop, array+higher-order-function layers 49 s (interpreted
-    lambdas), and session-wide codegen.wholeStage=false reaches
-    0.64 s but deoptimizes every other query. Full numbers in
-    SCALE.md.
+    JVM-side integerization (floor expressions, codegen) -> the ONE
+    mapInPandas stage of :func:`score`, numpy matmuls per Arrow
+    batch. Narrow pipeline end-to-end: zero shuffles, parallelism =
+    input splits, so the operator scales linearly with executors at
+    any SF. Why not a pure-expression net: see the module docstring.
     """
-    import pandas as pd
-
-    bc = spark.sparkContext.broadcast(
-        {k: v.tolist() for k, v in weight_arrays().items()}
-    )
-
+    w = weight_arrays()
     feats = load_table(spark, "lineitem", sf_dir).select(
         F.col("l_orderkey").cast("long").alias("l_orderkey"),
         F.col("l_linenumber").cast("int").alias("l_linenumber"),
-        F.floor(F.col("l_extendedprice") / 1000.0).cast("double").alias("x1"),
-        F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("double").alias("x2"),
-        F.floor(F.col("l_tax") * 100 + F.lit(0.5)).cast("double").alias("x3"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("double").alias("x4"),
+        *lineitem_features(),
     )
-
-    def score(batches):
-        w = {k: np.asarray(v, dtype=np.float64) for k, v in bc.value.items()}
-        for pdf in batches:
-            X = pdf[["x1", "x2", "x3", "x4"]].to_numpy(dtype=np.float64)
-            yield pd.DataFrame(
-                {
-                    "l_orderkey": pdf["l_orderkey"],
-                    "l_linenumber": pdf["l_linenumber"],
-                    "pred_price_cents": predict_cents(X, w),
-                }
-            )
-
-    return feats.mapInPandas(
-        score, "l_orderkey long, l_linenumber int, pred_price_cents long"
+    return score(
+        feats,
+        ["l_orderkey", "l_linenumber"],
+        {"pred_price_cents": lambda X: predict_cents(X, w)},
     )
 
 
-FEAT_SQL = """
-  SELECT l_orderkey, CAST(l_linenumber AS INTEGER) AS l_linenumber,
+# the oracle's twin of lineitem_features(), read by all three
+# fixed-weight oracles
+FEAT_COLS_SQL = """
     CAST(FLOOR(l_extendedprice / 1000.0) AS DOUBLE) AS x1,
     CAST(FLOOR(l_discount * 100 + 0.5) AS DOUBLE) AS x2,
     CAST(FLOOR(l_tax * 100 + 0.5) AS DOUBLE) AS x3,
-    CAST(FLOOR(l_quantity + 0.5) AS DOUBLE) AS x4
-  FROM lineitem
-"""
+    CAST(FLOOR(l_quantity + 0.5) AS DOUBLE) AS x4"""
 
 
 def _affine_expr(prev_cols, W, B, out, j) -> str:
     """One hidden unit as a sum-of-products over the integer
-    numerators, divided once by 256 — identical text on the Spark
-    (selectExpr) and DuckDB (CTE) sides.
-
-    ``256e0``, NOT ``256.0``: Spark parses ``256.0`` as DECIMAL(4,1)
-    and its FLOOR returns BIGINT, so ``FLOOR(...)/256.0`` would take
-    the scale-truncating DECIMAL division path (inexact, diverges
-    from the dyadic numpy/DuckDB results); the scientific literal is
-    a DOUBLE in both engines and keeps every op in exact IEEE math.
-    """
+    numerators, divided once by 256. ``256e0`` is a DOUBLE literal,
+    so the division stays in exact IEEE math."""
     terms = " + ".join(f"{prev_cols[i]}*({W[i][j]})" for i in range(len(prev_cols)))
     return f"({terms} + ({B[j]})) / 256e0 AS {out}{j}"
 
 
 def _act_expr(col, out, slope: str) -> str:
-    """LeakyReLU + re-quantize to the 1/256 grid, shared text (same
-    ``256e0`` double-literal rule as :func:`_affine_expr`)."""
+    """LeakyReLU + re-quantize to the 1/256 grid."""
     return (
         f"FLOOR((CASE WHEN {col} >= 0 THEN {col} "
         f"ELSE {slope}*{col} END) * 256e0) / 256e0 AS {out}"
     )
-
-
-def forward_expr(
-    df: DataFrame,
-    W1, B1, W2, B2, W3, B3,
-    slope: str,
-    keep: list[str],
-    p: str = "",
-) -> DataFrame:
-    """JVM-side forward pass: the SAME per-layer expression text the
-    oracle CTEs use, applied as one ``selectExpr`` stage per layer,
-    no Python worker at all. Returns ``df`` with ``keep`` plus a
-    ``{p}y0`` dollars column.
-
-    NOT the shipping scoring path: measured 3× slower end-to-end
-    than the numpy ``mapInPandas`` envelope because the fused
-    whole-stage-codegen method exceeds HotSpot's JIT compile limit
-    and runs interpreted (see module docstring / SCALE.md). Kept as
-    the oracle-text twin and pinned bit-identical to numpy.
-
-    Every intermediate is dyadic (see module docstring), so the
-    Catalyst-evaluated sum-of-products is bit-identical to the numpy
-    matmul AND to the DuckDB CTE chain — the three paths share one
-    algebra, two of them share the literal expression text.
-    """
-    h1, h2 = len(W1[0]), len(W2[0])
-    xs = [f"x{i + 1}" for i in range(len(W1))]
-    df = df.selectExpr(*keep, *[_affine_expr(xs, W1, B1, f"{p}z1_", j) for j in range(h1)])
-    df = df.selectExpr(*keep, *[_act_expr(f"{p}z1_{j}", f"{p}a1_{j}", slope) for j in range(h1)])
-    a1c = [f"{p}a1_{j}" for j in range(h1)]
-    df = df.selectExpr(*keep, *[_affine_expr(a1c, W2, B2, f"{p}z2_", j) for j in range(h2)])
-    df = df.selectExpr(*keep, *[_act_expr(f"{p}z2_{j}", f"{p}a2_{j}", slope) for j in range(h2)])
-    a2c = [f"{p}a2_{j}" for j in range(h2)]
-    return df.selectExpr(*keep, _affine_expr(a2c, W3, B3, f"{p}y", 0))
 
 
 def _sql_net_ctes(
@@ -360,28 +336,21 @@ def _sql_net_ctes(
     keep: str = "l_orderkey, l_linenumber",
 ) -> tuple[str, str]:
     """Layer-by-layer CTE chain for ONE net from the SAME integer
-    numerators the Spark path broadcasts — one CTE per affine layer,
+    numerators the Spark scorer carries — one CTE per affine layer,
     one per activation, sum-of-products per hidden unit. Returns
     (cte_sql, final_cte_name); the final CTE exposes ``keep`` plus a
     ``y0`` dollars column. ``p`` prefixes every CTE/column so two
     nets can coexist in one query; ``slope`` is the (dyadic) leaky
     slope as a SQL literal."""
     h1, h2 = len(W1[0]), len(W2[0])
-
-    def affine(prev_cols, W, B, out, j):
-        return _affine_expr(prev_cols, W, B, out, j)
-
-    def act(col, out):
-        return _act_expr(col, out, slope)
-
     xs = [f"x{i + 1}" for i in range(len(W1))]
-    z1 = ",\n    ".join(affine(xs, W1, B1, f"{p}z1_", j) for j in range(h1))
-    a1 = ",\n    ".join(act(f"{p}z1_{j}", f"{p}a1_{j}") for j in range(h1))
+    z1 = ",\n    ".join(_affine_expr(xs, W1, B1, f"{p}z1_", j) for j in range(h1))
+    a1 = ",\n    ".join(_act_expr(f"{p}z1_{j}", f"{p}a1_{j}", slope) for j in range(h1))
     a1c = [f"{p}a1_{j}" for j in range(h1)]
-    z2 = ",\n    ".join(affine(a1c, W2, B2, f"{p}z2_", j) for j in range(h2))
-    a2 = ",\n    ".join(act(f"{p}z2_{j}", f"{p}a2_{j}") for j in range(h2))
+    z2 = ",\n    ".join(_affine_expr(a1c, W2, B2, f"{p}z2_", j) for j in range(h2))
+    a2 = ",\n    ".join(_act_expr(f"{p}z2_{j}", f"{p}a2_{j}", slope) for j in range(h2))
     a2c = [f"{p}a2_{j}" for j in range(h2)]
-    y = affine(a2c, W3, B3, f"{p}y", 0)
+    y = _affine_expr(a2c, W3, B3, f"{p}y", 0)
     ctes = f"""
 {p}zl1 AS (SELECT {keep}, {z1} FROM {feat}),
 {p}al1 AS (SELECT {keep}, {a1} FROM {p}zl1),
@@ -394,7 +363,10 @@ def _sql_net_ctes(
 def _sql_forward() -> str:
     ctes, final = _sql_net_ctes("", QW1, QB1, QW2, QB2, QW3, QB3, "0.25")
     return f"""
-WITH feat AS ({FEAT_SQL}),{ctes}
+WITH feat AS (
+  SELECT l_orderkey, CAST(l_linenumber AS INTEGER) AS l_linenumber,{FEAT_COLS_SQL}
+  FROM lineitem
+),{ctes}
 SELECT l_orderkey, l_linenumber,
   CAST(FLOOR(y0 * 100.0 + 0.5) AS BIGINT) AS pred_price_cents
 FROM {final}
@@ -421,48 +393,19 @@ def mlp_model_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     HUGEINT) and doubles appear only in the final rounded divide.
     Scale: identical to :func:`mlp_batch_inference` — narrow pipeline,
     zero shuffles before the 2-row aggregate; scoring two nets costs
-    two matmul stacks over the same Arrow batch, not two scans (the
-    pure-expression alternative measured SLOWER — JIT bailout on the
-    fused codegen method, see mlp_batch_inference/SCALE.md).
+    two matmul stacks over the same Arrow batch, not two scans.
     """
-    import pandas as pd
-
-    bc = spark.sparkContext.broadcast(
-        {
-            "grid": {k: v.tolist() for k, v in weight_arrays().items()},
-            "bayes": {k: v.tolist() for k, v in weight_arrays_b().items()},
-        }
-    )
-    charge_e4 = (
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-        * (F.lit(100) - F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long"))
-        * (F.lit(100) + F.floor(F.col("l_tax") * 100 + F.lit(0.5)).cast("long"))
-    )
+    wg, wb = weight_arrays(), weight_arrays_b()
     feats = load_table(spark, "lineitem", sf_dir).select(
-        charge_e4.alias("charge_e4"),
-        F.floor(F.col("l_extendedprice") / 1000.0).cast("double").alias("x1"),
-        F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("double").alias("x2"),
-        F.floor(F.col("l_tax") * 100 + F.lit(0.5)).cast("double").alias("x3"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("double").alias("x4"),
+        charge_e4().alias("charge_e4"), *lineitem_features()
     )
-
-    def score(batches):
-        w = {
-            m: {k: np.asarray(v, dtype=np.float64) for k, v in ws.items()}
-            for m, ws in bc.value.items()
-        }
-        for pdf in batches:
-            X = pdf[["x1", "x2", "x3", "x4"]].to_numpy(dtype=np.float64)
-            yield pd.DataFrame(
-                {
-                    "charge_e4": pdf["charge_e4"],
-                    "pred_grid": predict_cents(X, w["grid"], LEAKY),
-                    "pred_bayes": predict_cents(X, w["bayes"], LEAKY_B),
-                }
-            )
-
-    scored = feats.mapInPandas(
-        score, "charge_e4 long, pred_grid long, pred_bayes long"
+    scored = score(
+        feats,
+        ["charge_e4"],
+        {
+            "pred_grid": lambda X: predict_cents(X, wg, LEAKY),
+            "pred_bayes": lambda X: predict_cents(X, wb, LEAKY_B),
+        },
     )
     diff = scored.select(
         F.expr(
@@ -504,11 +447,7 @@ WITH feat AS (
     ROW_NUMBER() OVER () AS rid,
     CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)
       * (100 - CAST(FLOOR(l_discount * 100 + 0.5) AS BIGINT))
-      * (100 + CAST(FLOOR(l_tax * 100 + 0.5) AS BIGINT)) AS charge_e4,
-    CAST(FLOOR(l_extendedprice / 1000.0) AS DOUBLE) AS x1,
-    CAST(FLOOR(l_discount * 100 + 0.5) AS DOUBLE) AS x2,
-    CAST(FLOOR(l_tax * 100 + 0.5) AS DOUBLE) AS x3,
-    CAST(FLOOR(l_quantity + 0.5) AS DOUBLE) AS x4
+      * (100 + CAST(FLOOR(l_tax * 100 + 0.5) AS BIGINT)) AS charge_e4,{FEAT_COLS_SQL}
   FROM lineitem
 ),{a_ctes},{b_ctes},
 diffs AS (
@@ -573,41 +512,19 @@ def mlp_calibration_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup is map-side combinable and the cumulative window runs on
     10 rows.
     """
-    import pandas as pd
-
     from backend_model_spark.operators.scale_utils import with_global_ntile
 
-    bc = spark.sparkContext.broadcast(
-        {k: v.tolist() for k, v in weight_arrays().items()}
-    )
+    w = weight_arrays()
     feats = load_table(spark, "lineitem", sf_dir).select(
         F.col("l_orderkey").cast("long").alias("l_orderkey"),
         F.col("l_linenumber").cast("int").alias("l_linenumber"),
-        F.floor(F.col("l_extendedprice") / 1000.0).cast("double").alias("x1"),
-        F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("double").alias("x2"),
-        F.floor(F.col("l_tax") * 100 + F.lit(0.5)).cast("double").alias("x3"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("double").alias("x4"),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("actual_cents"),
+        _pct("l_extendedprice").alias("actual_cents"),
+        *lineitem_features(),
     )
-
-    def score(batches):
-        w = {k: np.asarray(v, dtype=np.float64) for k, v in bc.value.items()}
-        for pdf in batches:
-            X = pdf[["x1", "x2", "x3", "x4"]].to_numpy(dtype=np.float64)
-            yield pd.DataFrame(
-                {
-                    "l_orderkey": pdf["l_orderkey"],
-                    "l_linenumber": pdf["l_linenumber"],
-                    "actual_cents": pdf["actual_cents"],
-                    "pred_cents": predict_cents(X, w),
-                }
-            )
-
-    scored = feats.mapInPandas(
-        score,
-        "l_orderkey long, l_linenumber int, actual_cents long, pred_cents long",
+    scored = score(
+        feats,
+        ["l_orderkey", "l_linenumber", "actual_cents"],
+        {"pred_cents": lambda X: predict_cents(X, w)},
     )
     tiled = with_global_ntile(
         # the range partitioner's sampling pass would otherwise run the
@@ -659,11 +576,7 @@ def mlp_calibration_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_calibration() -> str:
     feat = f"""
   SELECT l_orderkey, CAST(l_linenumber AS INTEGER) AS l_linenumber,
-    CAST(FLOOR(l_extendedprice / 1000.0) AS DOUBLE) AS x1,
-    CAST(FLOOR(l_discount * 100 + 0.5) AS DOUBLE) AS x2,
-    CAST(FLOOR(l_tax * 100 + 0.5) AS DOUBLE) AS x3,
-    CAST(FLOOR(l_quantity + 0.5) AS DOUBLE) AS x4,
-    CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS actual_cents
+    CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT) AS actual_cents,{FEAT_COLS_SQL}
   FROM lineitem
 """
     ctes, final = _sql_net_ctes(

@@ -76,6 +76,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from backend_model_spark.memo import memo
+from backend_model_spark.ml.mlp import FEATURES, charge_e4, lineitem_features, score
 from backend_model_spark.sources.tables import load_table
 
 WG = float(1 << 16)   # weight grid (16 fractional bits); exact int->float
@@ -89,7 +90,6 @@ TRAIN_H2 = 4
 TRAIN_LEAKY = 0.25
 TRAIN_LR = 0.15  # monotone-decrease margin measured: mono up to ≥0.2, diverges by 0.3
 TRAIN_EPOCHS = 16
-FEATURES = ["x1", "x2", "x3", "x4"]
 
 # mini-batch schedule (round 11): same scan I/O per epoch as full GD,
 # 8 updates per epoch instead of 1
@@ -301,12 +301,17 @@ def _mu_sd(n: int, s: int, q: int) -> tuple[float, float]:
     return mu, math.sqrt(var) if var > 0 else 1.0
 
 
-def _standardize(x: np.ndarray, y: np.ndarray, m: dict) -> tuple:
-    """(standardized features, normalized target) under moments ``m``."""
+def _standardize_x(x: np.ndarray, m: dict) -> np.ndarray:
+    """Features standardized under moments ``m``."""
     mus = np.array([m[c][0] for c in FEATURES])
     sds = np.array([m[c][1] for c in FEATURES])
+    return (x - mus) / sds
+
+
+def _standardize(x: np.ndarray, y: np.ndarray, m: dict) -> tuple:
+    """(standardized features, normalized target) under moments ``m``."""
     ym, ys = m["y"]
-    return (x - mus) / sds, (y - ym) / ys
+    return _standardize_x(x, m), (y - ym) / ys
 
 
 # ---------------------------------------------------------------------------
@@ -317,11 +322,11 @@ def _standardize(x: np.ndarray, y: np.ndarray, m: dict) -> tuple:
 def _feature_frame(
     spark: SparkSession, sf_dir: str, row_filter: str | None = None
 ) -> DataFrame:
-    """Integer features + integer-dollar target, all exact: the same
-    4 features the serving net uses (ml/mlp.py) and the Q1-style
-    invoice charge via the exact int64 product
-    price_cents·(100−disc)·(100+tax) (see ml/mlp.py model-compare for
-    why the literal predict-price task is unlearnable on this data),
+    """Integer features + integer-dollar target, all exact: the serving
+    net's 4 features (ml/mlp.py ``lineitem_features``) and the Q1-style
+    invoice charge (ml/mlp.py ``charge_e4``; see the weights' header
+    there for why the literal predict-price task is unlearnable on
+    this data),
     plus the row's content hash ``h``: the first 32 md5 bits of the
     comma-joined exact integers, so batch ``b`` of NB is ``h % NB == b``
     in Spark SQL and in the serial twin alike.
@@ -335,17 +340,9 @@ def _feature_frame(
     li = load_table(spark, "lineitem", sf_dir)
     if row_filter is not None:
         li = li.filter(F.expr(row_filter))
-    charge_e4 = (
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-        * (F.lit(100) - F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long"))
-        * (F.lit(100) + F.floor(F.col("l_tax") * 100 + F.lit(0.5)).cast("long"))
-    )
     feats = li.select(
-        F.floor(F.col("l_extendedprice") / 1000.0).cast("long").alias("x1"),
-        F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long").alias("x2"),
-        F.floor(F.col("l_tax") * 100 + F.lit(0.5)).cast("long").alias("x3"),
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("x4"),
-        F.floor(charge_e4 / F.lit(1e6) + F.lit(0.5)).cast("long").alias("y"),
+        *lineitem_features(),
+        F.floor(charge_e4() / F.lit(1e6) + F.lit(0.5)).cast("long").alias("y"),
     )
     tup = F.concat_ws(",", *[F.col(c).cast("string") for c in FEATURES + ["y"]])
     return feats.withColumn(
@@ -646,57 +643,42 @@ FROM lineitem
 def mlp_train_then_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's full model LIFECYCLE in one engine job: the
     in-engine-trained weights (:func:`train_distributed`, one cached
-    fit per application) deployed through the serving shape of
-    ml/mlp.py — broadcast weights + one zero-shuffle mapInPandas
-    scoring pass — and evaluated with exact integer error sums.
+    fit per application) deployed through ml/mlp.py's one scorer — a
+    zero-shuffle mapInPandas pass with the weights in its closure —
+    and evaluated with exact integer error sums.
 
     Per row: the deterministic forward pass (the training
     :func:`_forward`, same no-BLAS math) on standardized features,
     de-normalized to dollars, edge-rounded to integer cents; the
-    actual is the integer-dollar target × 100. Errors are int64
-    cents, SSE accumulates in decimal(38,0), so the rollup is exact
-    and the RMSE/MAE/bias literals pin the trained model's deployed
-    accuracy. ``serve_matches_train``: the serving-side MSE (cents,
-    re-normalized) reproduces the trainer's final full-batch loss to
-    within the cent-rounding tolerance — the train→serve contract a
-    model registry would enforce before promotion.
+    actual is the integer-dollar target × 100, computed in the JVM.
+    Errors are int64 cents, SSE accumulates in decimal(38,0), so the
+    rollup is exact and the RMSE/MAE/bias literals pin the trained
+    model's deployed accuracy. ``serve_matches_train``: the
+    serving-side MSE (cents, re-normalized) reproduces the trainer's
+    final full-batch loss to within the cent-rounding tolerance — the
+    train→serve contract a model registry would enforce before
+    promotion.
 
     Scale: one narrow scan + mapInPandas + a map-side-combinable
     1-row aggregate; the fit itself is the cached trainer (see
     :func:`mlp_train_distributed`)."""
-    import pandas as pd
-
     wts, losses, m = fit(spark, sf_dir)
     ym, ys = m["y"]
-    bc = spark.sparkContext.broadcast([w.tolist() for w in wts])
 
-    def score(batches):
-        wl = [np.asarray(w, dtype=np.float64) for w in bc.value]
-        for pdf in batches:
-            x = pdf[FEATURES].to_numpy(dtype=np.float64)
-            y = pdf["y"].to_numpy(dtype=np.float64)
-            xs, _ = _standardize(x, y, m)
-            pred = _forward(xs, wl, TRAIN_LEAKY)[-1] * ys + ym
-            yield pd.DataFrame(
-                {
-                    "pred_cents": np.floor(pred * 100.0 + 0.5).astype(np.int64),
-                    "actual_cents": (y * 100.0).astype(np.int64),
-                }
-            )
+    def predict(x):
+        pred = _forward(_standardize_x(x, m), wts, TRAIN_LEAKY)[-1] * ys + ym
+        return np.floor(pred * 100.0 + 0.5).astype(np.int64)
 
-    scored = (
-        _feats_and_moments(spark, sf_dir)[0]
-        .select(*FEATURES, "y")
-        .mapInPandas(score, "pred_cents long, actual_cents long")
+    scored = score(
+        _feats_and_moments(spark, sf_dir)[0], ["y"], {"pred_cents": predict}
     )
-    d = (F.col("pred_cents") - F.col("actual_cents")).cast("decimal(38,0)")
+    d = (F.col("pred_cents") - F.col("y") * 100).cast("decimal(38,0)")
     agg = scored.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(d * d).alias("sse"),
         F.sum(F.abs(d)).alias("sae"),
         F.sum(d).alias("sd"),
     ).collect()[0]
-    bc.destroy()  # the rollup is collected; nothing lazy still needs it
     n = int(agg["n"])
     mse_cents2 = int(agg["sse"]) / n
     rmse_c = int(math.floor(math.sqrt(mse_cents2) + 0.5))

@@ -1039,8 +1039,9 @@ register(
     "FOREACH_BATCH_ORACLE",
 )
 # round-4: fixed-weights FCFF batch inference (the reference's model-
-# serving path) — broadcast dyadic-quantized weights + one mapInPandas
-# stage, full DuckDB oracle (layer-by-layer SQL from the same weights)
+# serving path) — the one mapInPandas scorer with the dyadic-quantized
+# weights in its closure, full DuckDB oracle (layer-by-layer SQL from
+# the same weights)
 register("ml_mlp_batch_inference", ml_mlp, "mlp_batch_inference", "MLP_ORACLE")
 # champion-challenger: both deployed nets (grid- vs bayes-tuned, the
 # reference's SavedModel pair) scored in ONE scan, per-model error
@@ -1090,10 +1091,11 @@ register(
     "tuning_subsample_champion",
     "SUBSAMPLE_CHAMPION_ORACLE",
 )
-# the lifecycle closure: in-engine-TRAINED weights deployed through the
-# serving shape (broadcast + zero-shuffle mapInPandas) and evaluated
-# with exact integer error sums; serve_matches_train certifies the
-# serving MSE reproduces the trainer's final loss (model-registry gate)
+# the lifecycle closure: in-engine-TRAINED weights deployed through
+# the one serving scorer (zero-shuffle mapInPandas, closure weights)
+# and evaluated with exact integer error sums; serve_matches_train
+# certifies the serving MSE reproduces the trainer's final loss
+# (model-registry gate)
 register(
     "ml_mlp_train_serve_e2e",
     ml_train,

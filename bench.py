@@ -120,9 +120,9 @@ HEADLINE = [
     # cell-ring equi-join candidate shape (no nested-loop) in the
     # bench
     "geo_knn_comps",
-    # round 4: the model-serving path — broadcast-weights MLP scored
-    # through one Arrow mapInPandas stage; holds the zero-shuffle
-    # narrow-pipeline serving shape in the bench
+    # round 4: the model-serving path — the MLP scored through the one
+    # Arrow mapInPandas scorer (weights in its closure); holds the
+    # zero-shuffle narrow-pipeline serving shape in the bench
     "ml_mlp_batch_inference",
     # round 4: PQ asymmetric-distance search — the compressed-code
     # ANN scan (codes + broadcast LUT + salted two-stage rank)

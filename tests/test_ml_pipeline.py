@@ -131,9 +131,10 @@ def test_bayesian_loop_deterministic_and_improving(splits):
 
 
 def test_mlp_spark_matches_numpy_exactly(spark, sf_dir):
-    """The JVM-expression scoring path must equal the pure-numpy
-    forward pass BIT-FOR-BIT (the dyadic-grid exactness contract),
-    row by row."""
+    """The shipping scoring path (the one ``mapInPandas`` scorer over
+    the JVM-side feature projection) must equal the pure-numpy forward
+    pass BIT-FOR-BIT (the dyadic-grid exactness contract), row by
+    row."""
     import numpy as np
     import pyarrow.parquet as pq
 
@@ -260,40 +261,6 @@ def test_mlp_plan_is_shuffle_free_arrow_stage(spark, sf_dir):
     )
     assert "MapInPandas" in plan or "ArrowEvalPython" in plan
     assert "Exchange" not in plan, "batch inference must not shuffle"
-
-
-def test_forward_expr_bit_identical_to_numpy(spark, sf_dir):
-    """The Catalyst expression twin (forward_expr — the exact text the
-    DuckDB oracle runs) must match the shipping numpy path
-    BIT-FOR-BIT on real feature rows: this is what certifies the
-    oracle's semantics against the serving implementation.  Also pins
-    the 256e0 double-literal rule — with 256.0, Spark's
-    DECIMAL-division path silently truncates scale and ±1-cent
-    diffs appear."""
-    import numpy as np
-
-    from backend_model_spark.ml import mlp
-
-    feats = (
-        mlp.load_table(spark, "lineitem", sf_dir)
-        .selectExpr(
-            "CAST(FLOOR(l_extendedprice / 1000.0) AS DOUBLE) x1",
-            "CAST(FLOOR(l_discount * 100 + 0.5) AS DOUBLE) x2",
-            "CAST(FLOOR(l_tax * 100 + 0.5) AS DOUBLE) x3",
-            "CAST(FLOOR(l_quantity + 0.5) AS DOUBLE) x4",
-        )
-    )
-    out = mlp.forward_expr(
-        feats,
-        mlp.QW1, mlp.QB1, mlp.QW2, mlp.QB2, mlp.QW3, mlp.QB3,
-        "0.25",
-        ["x1", "x2", "x3", "x4"],
-    ).selectExpr(
-        "x1", "x2", "x3", "x4",
-        "CAST(FLOOR(y0 * 100.0 + 0.5) AS BIGINT) AS pred",
-    ).toPandas()
-    X = out[["x1", "x2", "x3", "x4"]].to_numpy(np.float64)
-    assert (out["pred"].to_numpy() == mlp.predict_cents(X)).all()
 
 
 def test_mlp_model_b_requantization_exact():

@@ -700,7 +700,9 @@ def test_max_drawdown_two_stage_primitives(spark, sf_dir):
 # its checks at build (mllib_ops._lsh_certificate, shared with the BRP
 # twin pinned in _MEMO_BUILD_JOBS). The BPE entries learn their merges
 # in one grouped-map stage inside the plan (before that, learn ran 32
-# jobs and segment 51).
+# jobs and segment 51). The three fixed-weight MLP entries share one
+# scorer (ml/mlp.py score); only the calibration deciles' data-width
+# rank pins its scored frame at build.
 _BUILD_JOBS = {
     "window_max_drawdown": 0,
     "window_revenue_growth": 0,
@@ -714,6 +716,9 @@ _BUILD_JOBS = {
     "mllib_minhash_neardup": 48,
     "text_bpe_learn_merges": 0,
     "text_bpe_segment_corpus": 0,
+    "ml_mlp_batch_inference": 0,
+    "ml_mlp_model_compare": 0,
+    "ml_mlp_calibration_deciles": 4,  # with_global_ntile pin, count, collect
 }
 
 
@@ -774,7 +779,9 @@ def test_lineage_action_jobs(spark, sf_dir, name):
 # consumes them fills the cache. The BRP certificate runs its own
 # checks at build, and the sf0.001 vectors are duplicate-free, so its
 # memo owns no frame. The trainer fits and the tuning searches are
-# value memos.
+# value memos. Train-then-serve collects its error rollup over the
+# memoized feature frame at build; after clearCache() that collect
+# also refills the frame's cache through its repartition: two more jobs.
 _MEMO_BUILD_JOBS = {
     "dedup_minhash_lsh_candidates": (0, 0),
     "dedup_embedding_neardup": (0, 0),
@@ -784,6 +791,7 @@ _MEMO_BUILD_JOBS = {
     "ml_mlp_train_distributed": (0, 0),
     "ml_mlp_train_minibatch": (0, 0),
     "ml_tuning_grid_champion": (0, 0),
+    "ml_mlp_train_serve_e2e": (2, 4),
 }
 
 
