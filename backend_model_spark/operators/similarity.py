@@ -19,7 +19,7 @@ oracle comparison is exact after a single round at the edge.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -79,25 +79,64 @@ def _with_norm(df: DataFrame) -> DataFrame:
     return df.withColumn("vn", F.expr(NORM.format(a="v")))
 
 
+def _cosine(a: str, b: str, na: str | None = None, nb: str | None = None) -> Column:
+    """:func:`_safe_cos` of array columns ``a`` and ``b``. ``na`` and
+    ``nb`` name precomputed norm columns (:func:`_with_norm`); a norm
+    not given is folded inline, in the same order."""
+    return F.expr(
+        _safe_cos(
+            DOT.format(a=a, b=b),
+            f"{na or NORM.format(a=a)} * {nb or NORM.format(a=b)}",
+        )
+    )
+
+
 SALT_BUCKETS = 32  # stage-1 fan-out knob: ≈ shuffle parallelism / |queries|
 
 
-def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k: first N_QUERIES vectors as queries against
-    the full corpus. The query side is tiny → broadcast join; the
-    corpus is scanned once; top-k per query via TWO-STAGE salted
-    ranking.
+def _salted_topk(
+    scored: DataFrame, score: str, descending: bool, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """Per-query top-TOP_K of ``scored`` (q_id, vec_id, *carry, score)
+    by (score, vec_id), in TWO stages so top-k parallelism follows the
+    corpus, not the query count.
 
     A single window partitioned by q_id would funnel the whole scored
-    corpus through |queries| tasks (10 here) — parallelism pinned to
-    the QUERY count, not the corpus. Instead stage 1 ranks within
-    (q_id, salt) where salt = md5(vec_id) % SALT_BUCKETS — a
+    corpus through |queries| tasks (10 here). Stage 1 ranks within
+    (q_id, salt), salt = md5(vec_id) % SALT_BUCKETS — a
     content-derived, partitioning-independent bucket — keeping only
     TOP_K per bucket: parallelism |queries|·SALT_BUCKETS, each task
     seeing ~1/SALT_BUCKETS of the corpus (raise SALT_BUCKETS with the
     cluster; any salting yields the same global top-k, so the knob is
     pure parallelism). Stage 2 re-ranks the surviving
     |queries|·SALT_BUCKETS·TOP_K rows — trivially small at any SF.
+
+    Returns (q_id, neighbor_id, *carry, score, rank), unsorted: each
+    caller keeps its own final sort."""
+    key = F.col(score).desc() if descending else F.col(score).asc()
+    order = (key, F.col("vec_id").asc())
+    salt = F.expr(
+        f"conv(substring(md5(cast(vec_id as string)), 1, 4), 16, 10) % {SALT_BUCKETS}"
+    )
+    survivors = (
+        scored.withColumn("salt", salt)
+        .withColumn(
+            "lrank", F.row_number().over(W.partitionBy("q_id", "salt").orderBy(*order))
+        )
+        .filter(F.col("lrank") <= TOP_K)
+        .select("q_id", "vec_id", *carry, score)
+    )
+    return (
+        survivors.withColumn("rank", F.row_number().over(W.partitionBy("q_id").orderBy(*order)))
+        .filter(F.col("rank") <= TOP_K)
+        .select("q_id", F.col("vec_id").alias("neighbor_id"), *carry, score, "rank")
+    )
+
+
+def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-k: first N_QUERIES vectors as queries against
+    the full corpus. The query side is tiny → broadcast join; the
+    corpus is scanned once; top-k per query via :func:`_salted_topk`.
     """
     # norms are per-vector, not per-pair: compute once on each side
     # before the join (the corpus norm would otherwise be re-folded
@@ -109,32 +148,11 @@ def cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("qv"),
         F.col("vn").alias("qn"),
     )
-    cos = F.expr(_safe_cos(DOT.format(a="qv", b="v"), "qn * vn"))
-    scored = (
-        emb.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
-        .withColumn("cosine", F.round(cos, 6))
-        .withColumn(
-            "salt",
-            F.expr(f"conv(substring(md5(cast(vec_id as string)), 1, 4), 16, 10) % {SALT_BUCKETS}"),
-        )
+    scored = emb.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id")).withColumn(
+        "cosine", F.round(_cosine("qv", "v", "qn", "vn"), 6)
     )
-    w1 = W.partitionBy("q_id", "salt").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    survivors = (
-        scored.withColumn("lrank", F.row_number().over(w1))
-        .filter(F.col("lrank") <= TOP_K)
-        .select("q_id", "vec_id", "cosine")
-    )
-    w2 = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
     # N_QUERIES·TOP_K rows: bounded by construction
-    return sort_bounded(
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank"),
-        "q_id",
-        "rank",
-    )
+    return sort_bounded(_salted_topk(scored, "cosine", descending=True), "q_id", "rank")
 
 
 COSINE_TOPK_ORACLE = f"""
@@ -192,30 +210,18 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     queries = queries.select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
-    qc_cos = F.expr(
-        _safe_cos(
-            DOT.format(a="qv", b="cv"),
-            f"{NORM.format(a='qv')} * {NORM.format(a='cv')}",
-        )
-    )
     wq = W.partitionBy("q_id").orderBy(F.col("c_cos").desc(), F.col("c_label").asc())
     probe = (
         queries.crossJoin(F.broadcast(centroids))
-        .withColumn("c_cos", F.round(qc_cos, 6))
+        .withColumn("c_cos", F.round(_cosine("qv", "cv"), 6))
         .withColumn("c_rank", F.row_number().over(wq))
         .filter(F.col("c_rank") == 1)
         .select("q_id", "qv", F.col("c_label").alias("probe_label"))
     )
-    cos = F.expr(
-        _safe_cos(
-            DOT.format(a="qv", b="v"),
-            f"{NORM.format(a='qv')} * {NORM.format(a='v')}",
-        )
-    )
     w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
     return (
         emb.join(F.broadcast(probe), (F.col("label") == F.col("probe_label")) & (F.col("vec_id") != F.col("q_id")))
-        .withColumn("cosine", F.round(cos, 6))
+        .withColumn("cosine", F.round(_cosine("qv", "v"), 6))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 3)
         .select("q_id", "probe_label", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
@@ -382,6 +388,56 @@ ORDER BY e.vec_id
 """
 
 
+def _micro_means(df: DataFrame, key: str) -> DataFrame:
+    """(key, cv): the mean of the ``v`` arrays of each ``key`` group.
+    Components go through integer micro-unit sums, not avg(): a double
+    SUM is fold-order-dependent (Spark partial aggs vs DuckDB's scan
+    order), and a 1-ulp drift flips ROUND at the 1e-6 boundary.
+    Integer sums commute exactly."""
+    return (
+        df.select(key, F.posexplode("v").alias("pos", "x"))
+        .groupBy(key, "pos")
+        .agg(
+            F.sum(F.floor(F.col("x") * 1_000_000 + F.lit(0.5)).cast("long")).alias("sm"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .withColumn("c", F.col("sm") / F.col("n") / F.lit(1_000_000.0))
+        .groupBy(key)
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
+        .select(key, F.expr("transform(pc, s -> s.c)").alias("cv"))
+    )
+
+
+def _nearest_centroid(
+    vecs: DataFrame, centroids: DataFrame, keys: tuple[str, ...], payload: Column, micro: str
+) -> DataFrame:
+    """E-step: (*keys, best, micro) — per ``keys`` group of ``vecs``
+    (``v``), the ``payload`` of its nearest ``centroids`` row
+    (c_label, cv) by cosine, and that cosine as micro-units.
+
+    ``micro`` is the ONLY discretization: FLOOR on the raw double
+    (identical IEEE op in both engines). No intermediate ROUND —
+    Spark's BigDecimal half-up and DuckDB's float rounding disagree
+    on boundary doubles (see duckdb-spark parity discipline).
+    The pick is a max_by, not a row_number window (round 11, guide
+    §2.1): the K candidate rows per group are co-located after the
+    broadcast cross join, so the partial max_by collapses them
+    map-side BEFORE the exchange — group-width shuffle, no sort. Key
+    (micro, -c_label) is unique per group (labels distinct) ⇒
+    identical pick to ORDER BY micro DESC, c_label ASC LIMIT 1."""
+    return (
+        vecs.crossJoin(F.broadcast(centroids))
+        .withColumn(micro, F.floor(_cosine("v", "cv") * 1_000_000 + F.lit(0.5)).cast("long"))
+        .groupBy(*keys)
+        .agg(
+            F.max_by(payload, F.struct(F.col(micro), (-F.col("c_label")).alias("nl"))).alias(
+                "best"
+            ),
+            F.max(micro).alias(micro),
+        )
+    )
+
+
 def centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means E-step over the full corpus: every vector is assigned
     to its nearest per-label mean centroid (cosine), emitting the
@@ -396,60 +452,12 @@ def centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     averaging floats under hash comparison.
     """
     emb = _as_double(load_table(spark, "embeddings", sf_dir))
-    pos = emb.select("label", F.posexplode("v").alias("pos", "x"))
-    # centroid components via integer micro-unit sums, not avg():
-    # a double SUM is fold-order-dependent (Spark partial aggs vs
-    # DuckDB's scan order), and a 1-ulp drift flips ROUND at the
-    # 1e-6 boundary. Integer sums commute exactly.
-    centroids = (
-        pos.groupBy("label", "pos")
-        .agg(
-            F.sum(F.floor(F.col("x") * 1_000_000 + F.lit(0.5)).cast("long")).alias(
-                "sm"
-            ),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .withColumn("c", F.col("sm") / F.col("n") / F.lit(1_000_000.0))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-        .select(
-            F.col("label").alias("c_label"),
-            F.expr("transform(pc, s -> s.c)").alias("cv"),
-        )
-    )
-    cos = F.expr(
-        _safe_cos(
-            DOT.format(a="v", b="cv"),
-            f"{NORM.format(a='v')} * {NORM.format(a='cv')}",
-        )
-    )
-    # cos_micro is the ONLY discretization: FLOOR on the raw double
-    # (identical IEEE op in both engines). No intermediate ROUND —
-    # Spark's BigDecimal half-up and DuckDB's float rounding disagree
-    # on boundary doubles (see duckdb-spark parity discipline).
-    # nearest-centroid pick via max_by instead of a row_number window
-    # (round 11, guide §2.1): the K candidate rows per vector are
-    # co-located after the broadcast cross join, so the partial
-    # max_by collapses them map-side BEFORE the exchange — vec-width
-    # shuffle, no sort. Key (cos_micro, -c_label) is unique per
-    # vector (labels distinct) ⇒ identical pick to ORDER BY
-    # cos_micro DESC, c_label ASC LIMIT 1.
-    assigned = (
-        emb.crossJoin(F.broadcast(centroids))
-        .withColumn(
-            "cos_micro", F.floor(cos * 1_000_000 + F.lit(0.5)).cast("long")
-        )
-        .groupBy("vec_id", "label")
-        .agg(
-            F.max_by(
-                F.col("c_label"),
-                F.struct(F.col("cos_micro"), (-F.col("c_label")).alias("nl")),
-            ).alias("c_label"),
-            F.max("cos_micro").alias("cos_micro"),
-        )
+    centroids = _micro_means(emb, "label").withColumnRenamed("label", "c_label")
+    assigned = _nearest_centroid(
+        emb, centroids, ("vec_id", "label"), F.col("c_label"), "cos_micro"
     )
     return (
-        assigned.groupBy("label", F.col("c_label").alias("assigned_label"))
+        assigned.groupBy("label", F.col("best").alias("assigned_label"))
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
             F.sum("cos_micro").alias("sum_cos_micro"),
@@ -686,6 +694,60 @@ def _pq_centroids(cells: DataFrame) -> DataFrame:
     )
 
 
+def _sq_sum(a: str, b: str) -> Column:
+    """BIGINT sum of squared differences of two micro-unit columns —
+    every PQ distance; no float accumulation anywhere."""
+    return F.sum((F.col(a) - F.col(b)) * (F.col(a) - F.col(b)))
+
+
+def _pq_nearest(cells: DataFrame, centroids: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(dists, codes): the subspace-distance table (vec_id, sub,
+    cand_label, dist) of every subvector to every codebook centroid,
+    and its per-(vec_id, sub) argmin (vec_id, sub, best, code) —
+    ``best`` = min struct(dist, cand_label), so ties break by label,
+    and ``code`` = its label. A caller that needs the corpus shuffled
+    once by vec_id passes ``cells.repartition("vec_id")``."""
+    dists = (
+        cells.join(F.broadcast(centroids), ["sub", "dim"])
+        .groupBy("vec_id", "sub", "cand_label")
+        .agg(_sq_sum("x_int", "c_int").alias("dist"))
+    )
+    codes = (
+        dists.groupBy("vec_id", "sub")
+        .agg(F.min(F.struct("dist", "cand_label")).alias("best"))
+        .withColumn("code", F.col("best.cand_label"))
+    )
+    return dists, codes
+
+
+def _pq_lut(cells: DataFrame, centroids: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(qcells, lut): the first N_QUERIES vectors' cells (q_id, sub,
+    dim, q_int) and their ADC lookup table (q_id, sub, code, qdist) —
+    the RAW query subvector's distance to EVERY centroid (that is the
+    "asymmetric" in ADC: queries are never quantized)."""
+    qcells = cells.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("q_id"), "sub", "dim", F.col("x_int").alias("q_int")
+    )
+    lut = (
+        qcells.join(F.broadcast(centroids), ["sub", "dim"])
+        .groupBy("q_id", "sub", F.col("cand_label").alias("code"))
+        .agg(_sq_sum("q_int", "c_int").alias("qdist"))
+    )
+    return qcells, lut
+
+
+def _pq_adc(codes: DataFrame, lut: DataFrame) -> DataFrame:
+    """(q_id, vec_id, adc_dist): every corpus code word scored against
+    the broadcast LUT — the sum of its subspaces' query distances —
+    the query itself excluded."""
+    return (
+        codes.join(F.broadcast(lut), ["sub", "code"])
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .groupBy("q_id", "vec_id")
+        .agg(F.sum("qdist").alias("adc_dist"))
+    )
+
+
 def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization (the IVF-PQ building block): split each
     64-dim embedding into 8 subspaces, quantize every subvector to the
@@ -708,22 +770,8 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     are 8 small ints per vector — the 64× compression that makes
     billion-scale ANN RAM-resident.
     """
-    emb = load_table(spark, "embeddings", sf_dir)
-    cells = _pq_cells(emb)
-    centroids = _pq_centroids(cells)
-    dists = (
-        cells.join(F.broadcast(centroids), ["sub", "dim"])
-        .groupBy("vec_id", "sub", "cand_label")
-        .agg(
-            F.sum(
-                (F.col("x_int") - F.col("c_int"))
-                * (F.col("x_int") - F.col("c_int"))
-            ).alias("dist")
-        )
-    )
-    assigned = dists.groupBy("vec_id", "sub").agg(
-        F.min(F.struct("dist", "cand_label")).alias("best")
-    )
+    cells = _pq_cells(load_table(spark, "embeddings", sf_dir))
+    _, assigned = _pq_nearest(cells, _pq_centroids(cells))
     return (
         assigned.groupBy("vec_id")
         .agg(
@@ -796,8 +844,8 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: corpus codes (vec_id, sub, code) join the BROADCAST LUT
     (q_id, sub, code, qdist — |queries|·subspaces·k rows of index
     metadata), partial-sum map-side, one shuffle of pre-combined
-    (q_id, vec_id) rows, then the same salted two-stage rank as
-    :func:`cosine_topk_bruteforce` so top-k parallelism follows the
+    (q_id, vec_id) rows, then the salted two-stage rank
+    (:func:`_salted_topk`) so top-k parallelism follows the
     corpus. Compare: exact search moves |corpus|·d floats; ADC moves
     |corpus| code words and |queries|·k·d LUT integers. At >>1000
     queries the LUT stops being a join side and becomes a
@@ -809,11 +857,8 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties break by (dist, code) at assignment and (dist, vec_id) at
     ranking on both engines. No floats anywhere.
     """
-    emb = load_table(spark, "embeddings", sf_dir)
-    cells = _pq_cells(emb)
+    cells = _pq_cells(load_table(spark, "embeddings", sf_dir))
     centroids = _pq_centroids(cells)
-
-    sq = lambda a, b: (a - b) * (a - b)
     # corpus side: nearest-centroid code per (vec_id, sub) — exactly
     # pq_encode's assignment (the index build this search runs against).
     # REPARTITION-ONCE-BY-vec_id (round-10 sf1 stage audit): hash(vec_id)
@@ -825,50 +870,10 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # agg and the scored partial-agg emitted ~6.5 rows per group at
     # sf1 (measured: the scored stage wrote 1.29M rows for 200k
     # groups; shuffle factor 19x on 10x data → ~10x after the fix).
-    codes = (
-        cells.repartition("vec_id")
-        .join(F.broadcast(centroids), ["sub", "dim"])
-        .groupBy("vec_id", "sub", "cand_label")
-        .agg(F.sum(sq(F.col("x_int"), F.col("c_int"))).alias("dist"))
-        .groupBy("vec_id", "sub")
-        .agg(F.min(F.struct("dist", "cand_label")).alias("best"))
-        .select("vec_id", "sub", F.col("best.cand_label").alias("code"))
-    )
-    # query side: RAW subvector distance to EVERY centroid (that is
-    # the "asymmetric" in ADC — queries are never quantized)
-    lut = (
-        cells.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("q_id"), "sub", "dim", F.col("x_int").alias("q_int"))
-        .join(F.broadcast(centroids), ["sub", "dim"])
-        .groupBy("q_id", "sub", F.col("cand_label").alias("code"))
-        .agg(F.sum(sq(F.col("q_int"), F.col("c_int"))).alias("qdist"))
-    )
-    scored = (
-        codes.join(F.broadcast(lut), ["sub", "code"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("qdist").alias("adc_dist"))
-        .withColumn(
-            "salt",
-            F.expr(
-                f"conv(substring(md5(cast(vec_id as string)), 1, 4), 16, 10) % {SALT_BUCKETS}"
-            ),
-        )
-    )
-    w1 = W.partitionBy("q_id", "salt").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    survivors = (
-        scored.withColumn("lrank", F.row_number().over(w1))
-        .filter(F.col("lrank") <= TOP_K)
-        .select("q_id", "vec_id", "adc_dist")
-    )
-    w2 = W.partitionBy("q_id").orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
-    return (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "adc_dist", "rank")
-        .orderBy("q_id", "rank")
+    _, codes = _pq_nearest(cells.repartition("vec_id"), centroids)
+    _, lut = _pq_lut(cells, centroids)
+    return _salted_topk(_pq_adc(codes, lut), "adc_dist", descending=False).orderBy(
+        "q_id", "rank"
     )
 
 
@@ -958,22 +963,17 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT sums of squared micro-int differences — no floats, so the
     rankings are bit-deterministic cross-engine.
     """
-    emb = load_table(spark, "embeddings", sf_dir)
-    cells = _pq_cells(emb)
+    cells = _pq_cells(load_table(spark, "embeddings", sf_dir))
     # codebook training scans the corpus; persisted because both the
     # code-assignment join and the query LUT join consume it
     centroids = _pq_centroids(cells).persist()
-    sq = lambda a, b: (a - b) * (a - b)
-
-    qcells = cells.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), "sub", "dim", F.col("x_int").alias("q_int")
-    )
+    qcells, lut = _pq_lut(cells, centroids)
     # exact integer L2^2 per (query, corpus vector)
     exact = (
         cells.join(F.broadcast(qcells), ["sub", "dim"])
         .filter(F.col("vec_id") != F.col("q_id"))
         .groupBy("q_id", "vec_id")
-        .agg(F.sum(sq(F.col("x_int"), F.col("q_int"))).alias("ed"))
+        .agg(_sq_sum("x_int", "q_int").alias("ed"))
     )
     we = W.partitionBy("q_id").orderBy(F.col("ed").asc(), F.col("vec_id").asc())
     exact_top = (
@@ -982,29 +982,11 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "vec_id")
     )
 
-    # ADC side: same chain as pq_adc_topk (codes + broadcast LUT)
-    codes = (
-        cells.join(F.broadcast(centroids), ["sub", "dim"])
-        .groupBy("vec_id", "sub", "cand_label")
-        .agg(F.sum(sq(F.col("x_int"), F.col("c_int"))).alias("dist"))
-        .groupBy("vec_id", "sub")
-        .agg(F.min(F.struct("dist", "cand_label")).alias("best"))
-        .select("vec_id", "sub", F.col("best.cand_label").alias("code"))
-    )
-    lut = (
-        qcells.join(F.broadcast(centroids), ["sub", "dim"])
-        .groupBy("q_id", "sub", F.col("cand_label").alias("code"))
-        .agg(F.sum(sq(F.col("q_int"), F.col("c_int"))).alias("qdist"))
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["sub", "code"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("qdist").alias("ad"))
-    )
-    wa = W.partitionBy("q_id").orderBy(F.col("ad").asc(), F.col("vec_id").asc())
+    # ADC side: the same codes + broadcast LUT chain as pq_adc_topk
+    _, codes = _pq_nearest(cells, centroids)
+    wa = W.partitionBy("q_id").orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
     adc_top = (
-        adc.withColumn("rk", F.row_number().over(wa))
+        _pq_adc(codes, lut).withColumn("rk", F.row_number().over(wa))
         .filter(F.col("rk") <= TOP_K)
         .select("q_id", "vec_id")
     )
@@ -1176,11 +1158,10 @@ def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("qv"),
         F.col("vn").alias("qn"),
     )
-    cos = F.expr(_safe_cos(DOT.format(a="qv", b="v"), "qn * vn"))
     w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
     neighbors = (
         emb.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
-        .withColumn("cosine", F.round(cos, 6))
+        .withColumn("cosine", F.round(_cosine("qv", "v", "qn", "vn"), 6))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
     )
@@ -1273,18 +1254,11 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vt").alias("qt"),
         F.col("vtn").alias("qtn"),
     )
-    cos_full = F.round(F.expr(_safe_cos(DOT.format(a="qv", b="v"), "qn * vn")), 6)
-    cos_trunc = F.round(
-        F.expr(_safe_cos(DOT.format(a="qt", b="vt"), "qtn * vtn")), 6
-    )
-    scored = (
-        emb.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cos_full.alias("cf"),
-            cos_trunc.alias("ct"),
-        )
+    scored = emb.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id")).select(
+        "q_id",
+        "vec_id",
+        F.round(_cosine("qv", "v", "qn", "vn"), 6).alias("cf"),
+        F.round(_cosine("qt", "vt", "qtn", "vtn"), 6).alias("ct"),
     )
     wf = W.partitionBy("q_id").orderBy(F.col("cf").desc(), F.col("vec_id").asc())
     wt = W.partitionBy("q_id").orderBy(F.col("ct").desc(), F.col("vec_id").asc())
@@ -1372,20 +1346,18 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generation is a broadcast semi-join on the list id; the
     only corpus-sized shuffles are the code assignment (the index
     build, paid once) and the pre-combined (q_id, vec_id) partial
-    sums. Top-k uses the salted two-stage rank so parallelism follows
-    the corpus, never the query count.
+    sums. Top-k uses the salted two-stage rank (:func:`_salted_topk`)
+    so parallelism follows the corpus, never the query count.
 
     Exactness: BIGINT micro-unit discipline end-to-end; ties break by
     (dist, label) at both argmins, (coarse_dist, list) at the probe,
     and (adc_dist, vec_id) at the final rank — identical on both
     engines.
     """
-    emb = load_table(spark, "embeddings", sf_dir)
-    cells = _pq_cells(emb)
+    cells = _pq_cells(load_table(spark, "embeddings", sf_dir))
     # codebook training scans the corpus — persist so the two joins
     # below (corpus side + query side) reuse it instead of retraining
     centroids = _pq_centroids(cells).persist()
-    sq = lambda a, b: (a - b) * (a - b)
 
     # shared subspace-distance table: (vec_id, sub, cand_label, dist).
     # Deliberately NOT persisted: codes and the coarse assignment each
@@ -1400,17 +1372,7 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # co-partitions the cand⋈codes vec_id join — Catalyst elides all
     # those exchanges, and the one corpus shuffle is reused by both
     # derivations of cdists (ReusedExchange).
-    cdists = (
-        cells.repartition("vec_id")
-        .join(F.broadcast(centroids), ["sub", "dim"])
-        .groupBy("vec_id", "sub", "cand_label")
-        .agg(F.sum(sq(F.col("x_int"), F.col("c_int"))).alias("dist"))
-    )
-    codes = (
-        cdists.groupBy("vec_id", "sub")
-        .agg(F.min(F.struct("dist", "cand_label")).alias("best"))
-        .select("vec_id", "sub", F.col("best.cand_label").alias("code"))
-    )
+    cdists, codes = _pq_nearest(cells.repartition("vec_id"), centroids)
     # coarse assignment: argmin over labels of the full-dim distance
     # (= sum of the 8 subspace distances — no extra scan)
     coarse = (
@@ -1420,20 +1382,8 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min(F.struct("cdist", "cand_label")).alias("best"))
         .select("vec_id", F.col("best.cand_label").alias("list_id"))
     )
-    # query-side ADC LUT (raw query subvector vs every centroid)
-    lut = (
-        cells.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            "sub",
-            "dim",
-            F.col("x_int").alias("q_int"),
-        )
-        .join(F.broadcast(centroids), ["sub", "dim"])
-        .groupBy("q_id", "sub", F.col("cand_label").alias("code"))
-        .agg(F.sum(sq(F.col("q_int"), F.col("c_int"))).alias("qdist"))
-        .persist()  # |queries|-bounded; feeds the probe AND the ADC join
-    )
+    _, lut = _pq_lut(cells, centroids)
+    lut = lut.persist()  # |queries|-bounded; feeds the probe AND the ADC join
     # coarse probe: nprobe nearest lists per query, straight off the LUT
     wp = W.partitionBy("q_id").orderBy(
         F.col("coarse_dist").asc(), F.col("code").asc()
@@ -1455,34 +1405,10 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(lut), ["q_id", "sub", "code"])
         .groupBy("q_id", "vec_id", "list_id")
         .agg(F.sum("qdist").alias("adc_dist"))
-        .withColumn(
-            "salt",
-            F.expr(
-                f"conv(substring(md5(cast(vec_id as string)), 1, 4), 16, 10) % {SALT_BUCKETS}"
-            ),
-        )
-    )
-    w1 = W.partitionBy("q_id", "salt").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    survivors = (
-        scored.withColumn("lrank", F.row_number().over(w1))
-        .filter(F.col("lrank") <= TOP_K)
-        .select("q_id", "vec_id", "list_id", "adc_dist")
-    )
-    w2 = W.partitionBy("q_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
     )
     return (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("list_id").cast("long").alias("list_id"),
-            "adc_dist",
-            "rank",
-        )
+        _salted_topk(scored, "adc_dist", descending=False, carry=("list_id",))
+        .withColumn("list_id", F.col("list_id").cast("long"))
         .orderBy("q_id", "rank")
     )
 
@@ -1720,10 +1646,12 @@ def rrf_hybrid_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = _with_norm(_vectors(raw)).filter(F.col("vec_id") == 0).select(
         F.col("v").alias("qv"), F.col("vn").alias("qn")
     )
-    cos = F.expr(_safe_cos(DOT.format(a="qv", b="v"), "qn * vn"))
     dense_top = (
         emb.join(F.broadcast(qv))
-        .select(F.col("vec_id").alias("doc_id"), F.round(cos, 6).alias("cosine"))
+        .select(
+            F.col("vec_id").alias("doc_id"),
+            F.round(_cosine("qv", "v", "qn", "vn"), 6).alias("cosine"),
+        )
         .orderBy(F.desc("cosine"), "doc_id")
         .limit(RRF_LIST_N)
     )
@@ -1887,24 +1815,8 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "v", "c_id", "dist_micro")
         )
 
-    def update(a: DataFrame) -> DataFrame:
-        pos = a.select("c_id", F.posexplode("v").alias("pos", "x"))
-        return (
-            pos.groupBy("c_id", "pos")
-            .agg(
-                F.sum(
-                    F.floor(F.col("x") * 1_000_000 + F.lit(0.5)).cast("long")
-                ).alias("sm"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .withColumn("c", F.col("sm") / F.col("n") / F.lit(1_000_000.0))
-            .groupBy("c_id")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-            .select("c_id", F.expr("transform(pc, s -> s.c)").alias("cv"))
-        )
-
     for _ in range(KMEANS_UPDATES):
-        cent = update(assign(cent))
+        cent = _micro_means(assign(cent), "c_id")
     final = assign(cent)
     return (
         final.groupBy("c_id")
@@ -2025,23 +1937,7 @@ def _semdedup_build(spark: SparkSession, sf_dir: str):
     """The memo miss of :func:`_semdedup_parts`: (grouped, assigned),
     both persisted and built by one action."""
     emb = _as_double(load_table(spark, "embeddings", sf_dir))
-    pos = emb.select("label", F.posexplode("v").alias("pos", "x"))
-    centroids = (
-        pos.groupBy("label", "pos")
-        .agg(
-            F.sum(F.floor(F.col("x") * 1_000_000 + F.lit(0.5)).cast("long")).alias(
-                "sm"
-            ),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .withColumn("c", F.col("sm") / F.col("n") / F.lit(1_000_000.0))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-        .select(
-            F.col("label").alias("c_label"),
-            F.expr("transform(pc, s -> s.c)").alias("cv"),
-        )
-    )
+    centroids = _micro_means(emb, "label").withColumnRenamed("label", "c_label")
     norm2 = F.expr(
         "aggregate(transform(v, x -> x * x), cast(0.0 as double),"
         " (acc, x) -> acc + x)"
@@ -2055,31 +1951,9 @@ def _semdedup_build(spark: SparkSession, sf_dir: str):
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     reps = grouped.filter(F.col("vec_id") == F.col("rep_id")).select("vec_id", "v")
-    cos_ctr = F.expr(
-        _safe_cos(
-            DOT.format(a="v", b="cv"),
-            f"{NORM.format(a='v')} * {NORM.format(a='cv')}",
-        )
-    )
-    # nearest-centroid pick via max_by instead of a row_number window
-    # (round 11, guide §2.1): the K candidate rows per rep are
-    # map-side co-located after the broadcast cross join, so the
-    # partial max_by collapses them BEFORE the exchange — reps-width
-    # shuffle, no sort. Key (ctr_cos_micro, -c_label) is unique per
-    # rep (labels distinct), so the pick is deterministic and
-    # identical to ORDER BY ctr_cos_micro DESC, c_label ASC LIMIT 1.
     assigned = (
-        reps.crossJoin(F.broadcast(centroids))
-        .withColumn(
-            "ctr_cos_micro", F.floor(cos_ctr * 1_000_000 + F.lit(0.5)).cast("long")
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct(F.col("c_label"), F.col("v")),
-                F.struct(F.col("ctr_cos_micro"), (-F.col("c_label")).alias("nl")),
-            ).alias("best"),
-            F.max("ctr_cos_micro").alias("ctr_cos_micro"),
+        _nearest_centroid(
+            reps, centroids, ("vec_id",), F.struct(F.col("c_label"), F.col("v")), "ctr_cos_micro"
         )
         .select(
             "vec_id",
@@ -2110,10 +1984,10 @@ def semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The paper's pipeline (Abbas et al. 2023), re-expressed Spark-first:
 
     1. CLUSTER: every distinct vector is assigned to its nearest mean
-       centroid (the deterministic E-step shared with
-       :func:`centroid_assign`; a production build drops in MLlib
-       KMeans centroids with the same plumbing — the paper uses
-       k-means too).
+       centroid (:func:`_nearest_centroid`, the deterministic E-step
+       shared with :func:`centroid_assign`; a production build drops
+       in MLlib KMeans centroids with the same plumbing — the paper
+       uses k-means too).
     2. WITHIN-CLUSTER PAIRS, REPS ONLY: pairwise cosine between
        co-clustered REPRESENTATIVES — clustering bounds the quadratic
        in corpus size (cost Σ|cluster reps|², never |corpus|²) and

@@ -313,6 +313,7 @@ register("sim_pq_encode", similarity, "pq_encode", "PQ_ENCODE_ORACLE")
 register("dedup_semantic_semdedup", similarity, "semdedup_clusters", "SEMDEDUP_ORACLE")
 # round-4: the SEARCH half of PQ — asymmetric-distance top-k over the
 # 8-code words with a broadcast per-query LUT, salted two-stage rank
+# (similarity._salted_topk)
 register("sim_pq_adc_topk", similarity, "pq_adc_topk", "PQ_ADC_TOPK_ORACLE")
 register("sim_pq_adc_recall", similarity, "pq_adc_recall", "PQ_ADC_RECALL_ORACLE")
 # (window_percent_of_parent — r3-stable — displaced to tier 2 for the
