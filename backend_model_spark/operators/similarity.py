@@ -219,13 +219,15 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "qv", F.col("c_label").alias("probe_label"))
     )
     w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
+    # N_QUERIES·3 rows: bounded by construction
+    return sort_bounded(
         emb.join(F.broadcast(probe), (F.col("label") == F.col("probe_label")) & (F.col("vec_id") != F.col("q_id")))
         .withColumn("cosine", F.round(_cosine("qv", "v"), 6))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 3)
-        .select("q_id", "probe_label", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-        .orderBy("q_id", "rank")
+        .select("q_id", "probe_label", F.col("vec_id").alias("neighbor_id"), "cosine", "rank"),
+        "q_id",
+        "rank",
     )
 
 
@@ -456,7 +458,8 @@ def centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = _nearest_centroid(
         emb, centroids, ("vec_id", "label"), F.col("c_label"), "cos_micro"
     )
-    return (
+    # labels² rows at most: bounded by construction
+    return sort_bounded(
         assigned.groupBy("label", F.col("best").alias("assigned_label"))
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
@@ -469,8 +472,9 @@ def centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long")
             / F.lit(1_000_000.0),
         )
-        .select("label", "assigned_label", "n_vectors", "avg_cosine")
-        .orderBy("label", "assigned_label")
+        .select("label", "assigned_label", "n_vectors", "avg_cosine"),
+        "label",
+        "assigned_label",
     )
 
 
@@ -564,7 +568,7 @@ def ivf_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 1_000_000.0,
         )
     )
-    return per_q.orderBy("q_id")
+    return sort_bounded(per_q, "q_id")  # one row per query
 
 
 # Composed from the long-green COSINE_TOPK_ORACLE and IVF_TOPK_ORACLE
@@ -872,8 +876,9 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groups; shuffle factor 19x on 10x data → ~10x after the fix).
     _, codes = _pq_nearest(cells.repartition("vec_id"), centroids)
     _, lut = _pq_lut(cells, centroids)
-    return _salted_topk(_pq_adc(codes, lut), "adc_dist", descending=False).orderBy(
-        "q_id", "rank"
+    # N_QUERIES·TOP_K rows: bounded by construction
+    return sort_bounded(
+        _salted_topk(_pq_adc(codes, lut), "adc_dist", descending=False), "q_id", "rank"
     )
 
 
@@ -991,15 +996,16 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "vec_id")
     )
 
-    return (
+    # one row per query: bounded by construction
+    return sort_bounded(
         exact_top.join(adc_top, ["q_id", "vec_id"])
         .groupBy("q_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_overlap"))
         .withColumn(
             "recall_micro",
             F.floor(F.col("n_overlap") * 1000000 / TOP_K + F.lit(0.5)).cast("long"),
-        )
-        .orderBy("q_id")
+        ),
+        "q_id",
     )
 
 
@@ -1104,11 +1110,13 @@ def mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(queries), F.col("vec_id") != F.col("q_id")
     ).withColumn("dot", F.round(F.expr(DOT.format(a="qv", b="v")), 6))
     w = W.partitionBy("q_id").orderBy(F.col("dot").desc(), F.col("vec_id").asc())
-    return (
+    # N_QUERIES·TOP_K rows: bounded by construction
+    return sort_bounded(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), "dot", "rank")
-        .orderBy("q_id", "rank")
+        .select("q_id", F.col("vec_id").alias("neighbor_id"), "dot", "rank"),
+        "q_id",
+        "rank",
     )
 
 
@@ -1169,7 +1177,8 @@ def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_votes")
     )
     wv = W.partitionBy("q_id").orderBy(F.col("n_votes").desc(), F.col("label").asc())
-    return (
+    # one row per query: bounded by construction
+    return sort_bounded(
         votes.withColumn("vr", F.row_number().over(wv))
         .filter(F.col("vr") == 1)
         .select(
@@ -1178,8 +1187,8 @@ def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").alias("pred_label"),
             F.col("n_votes").cast("long").alias("n_votes"),
             (F.col("label") == F.col("q_label")).alias("correct"),
-        )
-        .orderBy("q_id")
+        ),
+        "q_id",
     )
 
 
@@ -1267,7 +1276,8 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.row_number().over(wf) <= TOP_K).cast("long").alias("in_full"),
         (F.row_number().over(wt) <= TOP_K).cast("long").alias("in_trunc"),
     )
-    return (
+    # one row per query: bounded by construction
+    return sort_bounded(
         flagged.groupBy("q_id")
         .agg(
             F.sum(F.col("in_full") * F.col("in_trunc"))
@@ -1278,8 +1288,8 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "n_overlap",
             F.round(F.col("n_overlap") / float(TOP_K), 6).alias("recall_at_5"),
-        )
-        .orderBy("q_id")
+        ),
+        "q_id",
     )
 
 
@@ -1406,10 +1416,13 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("q_id", "vec_id", "list_id")
         .agg(F.sum("qdist").alias("adc_dist"))
     )
-    return (
-        _salted_topk(scored, "adc_dist", descending=False, carry=("list_id",))
-        .withColumn("list_id", F.col("list_id").cast("long"))
-        .orderBy("q_id", "rank")
+    # N_QUERIES·TOP_K rows: bounded by construction
+    return sort_bounded(
+        _salted_topk(scored, "adc_dist", descending=False, carry=("list_id",)).withColumn(
+            "list_id", F.col("list_id").cast("long")
+        ),
+        "q_id",
+        "rank",
     )
 
 
@@ -1818,7 +1831,8 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(KMEANS_UPDATES):
         cent = _micro_means(assign(cent), "c_id")
     final = assign(cent)
-    return (
+    # KMEANS_K rows: bounded by construction
+    return sort_bounded(
         final.groupBy("c_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
@@ -1827,8 +1841,8 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "avg_dist",
             F.expr("floor(sum_dist_micro / n_vectors + 0.5) / 1e6"),
-        )
-        .orderBy("c_id")
+        ),
+        "c_id",
     )
 
 

@@ -742,11 +742,12 @@ def test_build_runs_only_its_own_jobs(spark, sf_dir, name):
 # Spark jobs of one noop write of each perfbench `lineage` entry and of
 # the other bounded results that sort in one partition. Under AQE every
 # query stage, broadcast and range-bound sample is a job. The bounded
-# results (q1, q5, cosine, the 5 rows of supplier per region) sort in
-# one partition with no range exchange, and the broadcast query side
-# and tfidf's document count read the raw scan, not a spread copy;
-# before that the counts were q1 4, q5 8, window top 4, tfidf 11,
-# cosine 8 and supplier per region 6.
+# results (q1, q5, the vector top-k entries, the 5 rows of supplier per
+# region) sort in one partition with no range exchange, and the
+# broadcast query side and tfidf's document count read the raw scan,
+# not a spread copy; before that the counts were q1 4, q5 8, window
+# top 4, tfidf 11, cosine 8, supplier per region 6, IVF top-k 11, ADC
+# top-k 12, MIPS top-k 6 and IVF-PQ top-k 12.
 _ACTION_JOBS = {
     "q1_pricing_summary": 2,
     "join_q5_region_revenue": 6,
@@ -754,6 +755,10 @@ _ACTION_JOBS = {
     "text_tfidf": 10,
     "sim_cosine_topk_bruteforce": 5,
     "join_supplier_per_region": 4,
+    "sim_ivf_topk": 9,
+    "sim_pq_adc_topk": 10,
+    "sim_mips_topk": 4,
+    "sim_ivfpq_topk": 10,
 }
 
 
@@ -765,6 +770,9 @@ def _noop_write(df) -> None:
 def test_lineage_action_jobs(spark, sf_dir, name):
     """An action on a `lineage` entry or a bounded result runs only jobs
     that buy parallelism."""
+    # a frame an earlier test left persisted would serve this action
+    # (sim_pq_adc_topk's codebook is sim_ivfpq_topk's persisted one)
+    spark.catalog.clearCache()
     _noop_write(_QUERIES[name](spark, sf_dir))  # warm the schema memo
     df = _QUERIES[name](spark, sf_dir)
     jobs = group_jobs(spark, f"action-jobs:{name}", lambda: _noop_write(df))
