@@ -6,9 +6,9 @@ difference, or a per-Arrow-chunk fold whose result moves with the
 batch size. This test compares Spark against itself: every sampled
 entry runs under the session's default runtime confs and again under
 shuffle partitions 7, AQE off and 64-row Arrow batches, and the two
-value hashes must be equal. The session memo is cleared before the
-perturbed run, so memoized stages really re-execute under the
-perturbed confs.
+value hashes must be equal. The session memo and Spark's cache are
+cleared before the perturbed run, so memoized stages and frames that
+query functions persist really re-execute under the perturbed confs.
 """
 
 from __future__ import annotations
@@ -78,10 +78,12 @@ def test_hashes_invariant_to_runtime_geometry(spark, sf_dir):
         for k, v in PERTURBED.items():
             spark.conf.set(k, v)
         memo.clear(spark)
+        spark.catalog.clearCache()
         perturbed = _hashes(spark, sf_dir)
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
         # frames built under the perturbed confs keep their plans
         memo.clear(spark)
+        spark.catalog.clearCache()
     assert {n for n in SAMPLE if default[n] != perturbed[n]} == set()

@@ -134,14 +134,18 @@ def test_q9_dimension_joins_broadcast(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_cosine_topk_two_stage_salted(spark, sf_dir):
-    """Exact top-k must NOT funnel the scored corpus through
+@pytest.mark.parametrize(
+    "name", ["sim_cosine_topk_bruteforce", "sim_pq_adc_topk", "sim_ivfpq_topk"]
+)
+def test_cosine_topk_two_stage_salted(spark, sf_dir, name):
+    """Per-query top-k must NOT funnel the scored corpus through
     |queries| window tasks: stage 1 ranks within (q_id, salt) —
     parallelism follows the corpus — and both window stages must plan
-    WindowGroupLimit (bounded per-group state, no full sort buffers)."""
+    WindowGroupLimit (bounded per-group state, no full sort buffers).
+    Exact cosine, ADC and IVF-PQ search share the one salted rank."""
     import re
 
-    plan = plan_of(spark, "sim_cosine_topk_bruteforce", sf_dir)
+    plan = plan_of(spark, name, sf_dir)
     parts = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
     salted = [p for p in parts if "salt" in p]
     assert salted, f"no salted exchange in plan partitionings: {parts}"
@@ -968,20 +972,11 @@ def test_spearman_and_trend_scale_shapes(spark, sf_dir):
 
 
 def test_pq_adc_topk_salted_and_broadcast_lut(spark, sf_dir):
-    """ADC search must (a) never shuffle the corpus for the LUT join —
-    the per-query table is index metadata, always broadcast; (b) rank
-    via the same salted two-stage WindowGroupLimit shape as the exact
-    cosine path, so top-k parallelism follows the corpus."""
-    import re
-
+    """ADC search must never shuffle the corpus for the LUT join — the
+    per-query table is index metadata, always broadcast. Its salted
+    rank is checked by ``test_cosine_topk_two_stage_salted``."""
     plan = plan_of(spark, "sim_pq_adc_topk", sf_dir)
     assert "BroadcastHashJoin" in plan, "LUT/centroid joins must broadcast"
-    parts = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
-    salted = [p for p in parts if "salt" in p]
-    assert salted, f"no salted exchange in plan partitionings: {parts}"
-    assert plan.count("WindowGroupLimit") >= 2, (
-        "rank<=k filter not pushed into WindowGroupLimit on both stages"
-    )
 
 
 def test_bpe_learns_in_one_grouped_map_stage(spark, sf_dir):
