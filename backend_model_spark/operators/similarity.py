@@ -424,9 +424,11 @@ def _nearest_centroid(
     The pick is a max_by, not a row_number window (round 11, guide
     §2.1): the K candidate rows per group are co-located after the
     broadcast cross join, so the partial max_by collapses them
-    map-side BEFORE the exchange — group-width shuffle, no sort. Key
-    (micro, -c_label) is unique per group (labels distinct) ⇒
-    identical pick to ORDER BY micro DESC, c_label ASC LIMIT 1."""
+    map-side BEFORE the exchange — group-width shuffle. (Spark plans
+    this max_by as a SortAggregate, so both sides still sort by the
+    group keys.) Key (micro, -c_label) is unique per group (labels
+    distinct) ⇒ identical pick to ORDER BY micro DESC, c_label ASC
+    LIMIT 1."""
     return (
         vecs.crossJoin(F.broadcast(centroids))
         .withColumn(micro, F.floor(_cosine("v", "cv") * 1_000_000 + F.lit(0.5)).cast("long"))
